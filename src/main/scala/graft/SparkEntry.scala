@@ -53,12 +53,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EventsOps.decompose(spark, "/root/testdata/sf0.001")
 
+  /** Joins the modules' maps, failing on a name two modules both define
+    * (`++` would silently keep the later one). */
+  private[graft] def joined[V](maps: Seq[Map[String, V]], what: String): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      m.keys.find(acc.contains).foreach(k =>
+        throw new IllegalStateException(s"duplicate $what name: $k"))
+      acc ++ m
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    joined(modules.map(_._1), "query")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = joined(modules.map(_._2), "oracle")
+
+  (queries.keySet diff oracleSql.keySet).headOption.foreach(k =>
+    throw new IllegalStateException(s"query without an oracle: $k"))
+  (oracleSql.keySet diff queries.keySet).headOption.foreach(k =>
+    throw new IllegalStateException(s"oracle without a query: $k"))
 }

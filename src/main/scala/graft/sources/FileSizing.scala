@@ -94,12 +94,15 @@ object FileSizing {
     * stream_* queries FASTER on 8 cores than 32 for exactly this reason —
     * VERDICT r11 #6). ~8 MB of source per store keeps per-store state small
     * at scale; the 8·cpus cap and the assume-BIG fallback on unsizable
-    * locations are shared with the batch form.
+    * locations are shared with the batch form. A location that sizes to 0
+    * bytes ([[bytesAt]] reads a missing path as 0) is unsizable too: the
+    * stream may be fed after it starts, and its store count cannot change.
     */
   def streamShufflePartitions(spark: SparkSession, location: String, cpus: Int): Int = {
     val bytes =
       try bytesAt(spark, location)
       catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    math.max(1L, math.min(cpus.toLong * 8, bytes / (8L << 20))).toInt
+    val sized = if (bytes > 0) bytes else Long.MaxValue
+    math.max(1L, math.min(cpus.toLong * 8, sized / (8L << 20))).toInt
   }
 }

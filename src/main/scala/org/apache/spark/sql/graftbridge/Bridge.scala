@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -12,6 +13,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The live conf of the active SparkContext (`SparkContext.conf` is
+    * private[spark]; `getConf` returns a copy). */
+  def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 
   /** Register a SQL function on a LIVE session (sessionState is private[sql],
     * hence bridged here). Same builder shape SparkSessionExtensions uses, so

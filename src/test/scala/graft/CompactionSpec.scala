@@ -93,4 +93,12 @@ class CompactionSpec extends SparkSpec {
       .select(input_file_name().as("f")).distinct().count()
     assert(nFiles >= 100, s"byte ceiling not engaged: $nFiles files")
   }
+
+  test("stream width: a tiny source gets one store, a missing one assumes BIG") {
+    assert(FileSizing.streamShufflePartitions(spark, s"$sf/events.parquet", 4) == 1)
+    val missing = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), "graft_no_such_source").toString
+    assert(FileSizing.bytesAt(spark, missing) == 0L)
+    assert(FileSizing.streamShufflePartitions(spark, missing, 4) == 32)
+  }
 }
