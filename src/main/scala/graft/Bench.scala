@@ -88,29 +88,11 @@ object Bench {
     // the driver never sets it, so round benches always cover the registry
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // Run structure (VERDICT r11 #1, adjudicated r12): the r11 interleave
-    // change landed without a same-host comparison against the r10 per-query
-    // back-to-back structure, so the driver's 268→339 s r10→r11 gap could not
-    // be attributed. The r12 A/B (same code, same host, steal 4357 vs 827
-    // ticks) measured interleaved 369.0 s vs back-to-back 273.5 s — geomean
-    // 1.44×, 319/361 queries >10% slower interleaved, a UNIFORM methodology
-    // tax: separating a query's two samples by a ~170 s registry pass makes
-    // both samples cold (JIT, parquet footer/file caches), so min-of-2 never
-    // sees a warm run. The stall-decorrelation the interleave bought is
-    // already covered by the sweep-level steal-retry guard below, so the
-    // default reverts to the r10 back-to-back structure (restoring
-    // comparability with BENCH_r10 and the BASELINE anchor);
-    // SPARK_GRAFT_BENCH_INTERLEAVED=1 keeps the interleaved form available
-    // for stall diagnostics. (SPARK_GRAFT_BENCH_LEGACY=1, the r12 A/B's
-    // original opt-in name, is accepted as a no-op alias of the default.)
-    val interleaved = sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVED").contains("1")
-    // Runs are back-to-back per query by default (see the `interleaved`
-    // adjudication note above: the r11 interleaved-pass structure cost a
-    // uniform ~1.44× on min-of-2 because neither sample ran warm). The
-    // residual risk the interleave addressed — a time-localized host stall
-    // taxing both adjacent samples of one query — is bounded by the
-    // sweep-level steal-retry guard, and a stall invisible to the steal
-    // counter only ever makes the recorded number WORSE, never better.
+    // Both samples of a query run back-to-back, so the second one runs warm
+    // (JIT, parquet footer and file caches) and min-of-runs sees it. A host
+    // stall that taxes both adjacent samples is bounded by the sweep-level
+    // steal-retry guard below, and a stall invisible to the steal counter
+    // only ever makes the recorded number worse, never better.
     def sweep(errors: scala.collection.mutable.Map[String, String]): Seq[(String, Double)] = {
       val regAsc = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(kv => only.forall(_.contains(kv._1)))
@@ -135,35 +117,27 @@ object Bench {
         // is the best estimate of the code's true cost on this host
         if (dt < best(name)) best(name) = dt
       }
-      if (interleaved)
-        for (r <- 1 to runs;
-             (name, fn) <- if (r % 2 == 1) regAsc else regAsc.reverse) timeOne(name, fn)
-      else
-        // r10 structure: both samples of a query taken back-to-back
-        for ((name, fn) <- regAsc; _ <- 1 to runs) timeOne(name, fn)
+      for ((name, fn) <- regAsc; _ <- 1 to runs) timeOne(name, fn)
       best.toSeq
     }
-    // Steal-retry guard (VERDICT r10 #8): the r10 local bench shipped at
-    // steal 77,053 — a hypervisor-frozen artifact that had to be adjudicated
-    // away after the fact. When a sweep absorbs more than SPARK_GRAFT_MAX_STEAL
+    // Steal-retry guard: when a sweep absorbs more than SPARK_GRAFT_MAX_STEAL
     // ticks (default 5,000 ≈ 50 cpu-seconds stolen), run ONE more full sweep
-    // and keep whichever saw less steal, so a distorted run can't become the
-    // round's recorded number while a genuinely busy host still terminates.
+    // and keep whichever saw less steal, so a hypervisor-frozen run can't
+    // become the recorded number while a genuinely busy host still terminates.
     val maxSteal =
       try sys.env.getOrElse("SPARK_GRAFT_MAX_STEAL", "5000").toLong
       catch { case _: NumberFormatException => 5000L }
-    // The dedup shingle artifact (Dedup.docShingles: WriteOnce parquet +
+    // The dedup shingle artifact (Dedup.docShingles: warehouse parquet +
     // pinned localCheckpoint) is built once per session and shared by every
-    // dedup_* consumer, so whichever consumer ran FIRST in pass order used
-    // to absorb the build cost and every later one rode free — per-query
-    // numbers were order-dependent (VERDICT r11 #3). Building it HERE,
+    // dedup_* consumer, so whichever consumer ran first in pass order would
+    // absorb the build cost and every later one ride free. Building it HERE,
     // before any sweep, as an explicitly timed pseudo-query makes each
     // consumer's line measure its standalone marginal cost at any pass
     // position, and the sharing is visible in the JSON instead of implicit.
-    // Timed OUTSIDE sweep() so a steal-retry keeps the real build time (the
-    // first in-sweep version recorded ~0 whenever the retry fired, because
-    // the kept second sweep only saw a memo hit); one sample, not
-    // min-of-runs, for the same reason. The line is appended to the selected
+    // Timed OUTSIDE sweep() so a steal-retry keeps the real build time (an
+    // in-sweep line would read ~0 whenever the retry fired, because the kept
+    // second sweep only sees a memo hit); one sample, not min-of-runs, for
+    // the same reason. The line is appended to the selected
     // sweep's results below, so the total still includes the build. Skipped
     // under SPARK_GRAFT_BENCH_ONLY (filtered local iteration shouldn't pay
     // an unconditional 2-3 s build).
@@ -202,7 +176,7 @@ object Bench {
       s""","runs":$runs,"agg":"min","loadavg_start":"$loadStart","loadavg_end":"$loadavg"""" +
       s""","gc_sec":${ms(gcSec)},"steal_ticks":$stealDelta""" +
       s""","sweep_steal_ticks":$sweepSteal,"steal_retried":$retried""" +
-      s""","harness":"${if (interleaved) "interleaved" else "back_to_back"}"""" +
+      s""","harness":"back_to_back"""" +
       s""","errors":${errors.size},"query_errors":$errJson}"""
     val short = s"""{"metric":"total","value":${ms(total)}}"""
     try Files.writeString(Paths.get(outPath), full + "\n" + short + "\n")

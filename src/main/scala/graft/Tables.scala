@@ -35,19 +35,16 @@ object Tables {
   /** `ts`'s inferable Spark type per dir: TimestampType (MICROS, UTC-adjusted),
     * TimestampNTZType (MICROS, isAdjustedToUTC=false — what pandas/pyarrow
     * writers emit), or None when the footer carries NANOS (schema inference
-    * throws and the raw-INT64 path applies). Probed once, memoized. */
-  private val tsTypeByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[DataType]]()
-
+    * throws and the raw-INT64 path applies). Probed once per dir. */
   private def nativeTsType(spark: SparkSession, dir: String): Option[DataType] =
-    tsTypeByDir.computeIfAbsent(dir, _ =>
+    graft.sources.Artifacts.memo("events_ts_type", dir) {
       try {
         spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
           case t @ (TimestampType | TimestampNTZType) => Some(t)
           case _ => None
         }
       } catch { case scala.util.control.NonFatal(_) => None }
-    )
+    }
 
   /** NTZ micros cast to TimestampType is the identity wall-clock mapping under
     * the UTC session timezone every graft session pins — the same naive

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Num._
+import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ object BqOps {
     * discipline.
     */
   private def thresholds(spark: SparkSession, dir: String): Seq[Double] =
-    Similarity.statsFor(spark, s"$dir#bq") {
+    Artifacts.memo("bq_stats", dir, Artifacts.corpusFingerprint(spark, dir)) {
       PqOps.emb(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos"))

@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
+import graft.sources.{Artifacts, Pinned}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators over `documents` / `embeddings` (SURVEY.md §7.5;
   * north-star LLM-pipeline ops): exact, MinHash+LSH, SimHash, n-gram Jaccard,
@@ -82,72 +85,51 @@ object Dedup {
     new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), "graft_doc_shingles").toString
 
-  /** The corpus's canonical shingle table, MATERIALIZED to the warehouse once
-    * per (session, source dir) and re-read by every consumer — seven
-    * measurement queries in the dedup class each re-derived (scan → word-md5
-    * → rolling-digest explode → distinct) + localCheckpoint'd their own copy
-    * (VERDICT r9 #7). Disk materialization (the layout ops' [[WriteOnce]]
-    * pattern) survives the driver's between-query unpersist — a memoized
-    * localCheckpoint would not (its truncated lineage cannot recompute) —
-    * and subsequent consumers pay one columnar scan of 8-byte pairs. This is
-    * what a production dedup pipeline does anyway: shingle once, persist,
-    * run every detector off the artifact.
+  /** The corpus's canonical shingle table, materialized to the warehouse
+    * once per source dir and re-read by every consumer: each measurement
+    * query in the dedup class would otherwise re-derive it (scan → word-md5 →
+    * rolling-digest explode → distinct). A disk artifact survives the
+    * harness's between-query unpersist, which a memoized localCheckpoint
+    * alone would not (its truncated lineage cannot recompute). This is what
+    * a production dedup pipeline does anyway: shingle once, persist, run
+    * every detector off the artifact.
     *
-    * The read is repartitioned and localCheckpoint'd: every pair query
-    * references the shingle frame several times (candidates + verification +
-    * set stats), and a bare parquet frame re-scans the disk artifact per
-    * reference — at sf10 the rescans cost more than the derive the artifact
-    * saved (dedup_containment 189 s vs the r9 in-memory form's 105 s). Worse,
-    * the artifact is SMALL on disk (8-byte pairs compress to ~220 MB at
-    * sf10), so maxPartitionBytes coalesces the scan to ~3 partitions and
-    * every downstream band join inherits 3-way parallelism — the repartition
-    * restores full width AND hash-clusters by doc_id, which the signature
-    * groupBy then consumes exchange-free. One scan + one narrow shuffle into
-    * MEMORY_AND_DISK blocks keeps the cross-query disk sharing AND the
-    * in-query block reuse.
+    * The read is repartitioned and localCheckpoint'd once per (session, dir):
+    * every pair query references the shingle frame several times
+    * (candidates + verification + set stats), and a bare parquet frame
+    * re-scans the disk artifact per reference — at sf10 the rescans cost
+    * more than the derive the artifact saved. The artifact is also small on
+    * disk (8-byte pairs compress to ~220 MB at sf10), so maxPartitionBytes
+    * coalesces the scan to ~3 partitions and every downstream band join
+    * would inherit 3-way parallelism; the repartition restores full width
+    * and hash-clusters by doc_id, which the signature groupBy then consumes
+    * exchange-free.
+    *
+    * The checkpointed RDD is pinned, so the harness's between-query
+    * unpersist skips it. Its storage level is still probed on every call:
+    * a frame whose blocks were dropped anyway cannot recompute, so it is
+    * checkpointed again. A dir switch replaces the session's frame and
+    * releases the superseded one's blocks.
     */
-  /** (session, dir) → the checkpointed shingle frame plus its backing RDD
-    * handle. Without the memo every dedup entry point re-materialized its
-    * own MEMORY_AND_DISK copy of the same artifact, and copies piled up
-    * until the ContextCleaner GC'd them (ADVICE r10). The RDD handle makes
-    * the memo SAFE under the harness's blanket between-query unpersist: a
-    * localCheckpoint's lineage is truncated, so a cached frame whose blocks
-    * were dropped cannot recompute — the validity probe (storage level
-    * reset to NONE by unpersist) re-checkpoints instead of crashing.
-    */
-  private val shingleMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, org.apache.spark.rdd.RDD[_])]()
+  private final case class ShingleFrame(df: DataFrame, rdd: RDD[_]) extends Artifacts.Releasable {
+    def live: Boolean = rdd.getStorageLevel != StorageLevel.NONE
+    def release(): Unit = { Pinned.unpin(rdd.id); rdd.unpersist(blocking = false) }
+  }
 
   private[graft] def docShingles(spark: SparkSession, dir: String): DataFrame = {
     val loc = shinglesLocation(spark)
-    graft.sources.WriteOnce.ensure(loc, dir)(
-      shinglesOf(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(loc))
-    val key = System.identityHashCode(spark) + "#" + dir
-    shingleMemo.compute(key, (_, cached) =>
-      if (cached != null &&
-          cached._2.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        cached
-      else {
-        // a superseded entry for the same session (dir switch) holds dead
-        // blocks — release them before caching the replacement
-        shingleMemo.forEach((k, v) =>
-          if (k != key && k.startsWith(System.identityHashCode(spark) + "#")) {
-            graft.sources.Pinned.unpin(v._2.id)
-            v._2.unpersist(blocking = false); shingleMemo.remove(k)
-          })
-        val df = spark.read.parquet(loc)
-          .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-          .localCheckpoint(eager = true)
-        val rdd = df.queryExecution.analyzed.collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.getOrElse(df.rdd)
-        // pinned: the harness's between-query unpersist exempts this id, so
-        // the artifact survives the sweep instead of re-checkpointing per
-        // consumer query
-        graft.sources.Pinned.pin(rdd.id)
-        (df, rdd)
-      })._1
+    Artifacts.memo("layout", loc, dir)(
+      shinglesOf(Tables.documents(spark, dir)).write.mode("overwrite").parquet(loc))
+    Artifacts.memo("shingles", System.identityHashCode(spark).toString, dir) {
+      val df = spark.read.parquet(loc)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .localCheckpoint(eager = true)
+      val rdd = df.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }.getOrElse(df.rdd)
+      Pinned.pin(rdd.id)
+      ShingleFrame(df, rdd)
+    }.df
   }
 
   /** Non-distinct digest stream for the signature-only path: MIN-aggregation

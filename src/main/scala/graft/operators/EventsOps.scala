@@ -120,27 +120,18 @@ object EventsOps {
       .drop("_bkt", "_v", "_offc", "_offs")
   }
 
-  /** Session-wide (dir, column-label) → (min, max, count) stats memo for the
-    * bucket builders below. Bucket boundaries only need to be a MONOTONE
-    * function of the order column — any (mn, width > 0) satisfies that — so
-    * serving a query from stats scanned once per fixture dir is
-    * correctness-neutral (only balance could drift, and the fixture is
-    * static within a session anyway). Without this, every blockedRank query
-    * paid its own eager min/max/count scan of the fact table: the r10 driver
-    * bench measured that as a ~0.1–0.4 s uniform tax across the ~330 small
-    * sf0.1 queries (VERDICT r10 #1a). Keyed by caller-supplied identity, not
-    * DataFrame reference — plan objects don't hash stably.
+  /** (min, max, count) of the order column for the bucket builders below,
+    * memoized per caller-supplied key (dir + column label; plan objects do
+    * not hash stably). Bucket boundaries only need to be a monotone function
+    * of the order column, which any (mn, width > 0) gives, so the entry keeps
+    * no content stamp: a stale one shifts bucket balance, never results.
+    * Without the memo every blocked-rank query pays its own eager stats scan
+    * of the fact table.
     */
-  private val bucketStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-
   private def bucketStats(df: DataFrame, c: Column,
                           cacheKey: Option[String]): org.apache.spark.sql.Row = {
     def scan = df.agg(min(c).as("mn"), max(c).as("mx"), count(lit(1)).as("cnt")).head()
-    cacheKey match {
-      case Some(k) => bucketStatsCache.computeIfAbsent(k, _ => scan)
-      case None    => scan
-    }
+    cacheKey.fold(scan)(k => graft.sources.Artifacts.memo("bucket_stats", k)(scan))
   }
 
   /** Monotone equal-width buckets of a long column, sized for ~`blockRows`

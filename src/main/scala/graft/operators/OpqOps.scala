@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Num._
+import graft.sources.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,25 +90,11 @@ object OpqOps {
     EigenBasis(values, loadings)
   }
 
-  /** The basis is an index like the IVF quantizer / PQ codebooks: fit once
-    * per corpus, content-fingerprint invalidation, restart-scoped. */
-  private val basisCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, EigenBasis)]()
-  private val basisLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[graft] def basisFor(spark: SparkSession, dir: String): EigenBasis = {
-    val fp = Similarity.corpusFingerprint(spark, dir)
-    val lock = basisLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val prev = basisCache.get(dir)
-      if (prev != null && prev._1 == fp) prev._2
-      else {
-        val b = deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim)
-        basisCache.put(dir, (fp, b)); b
-      }
-    }
-  }
+  /** The basis is an index like the IVF quantizer and PQ codebooks: fit once
+    * per corpus, refit when the embeddings' listing changes. */
+  private[graft] def basisFor(spark: SparkSession, dir: String): EigenBasis =
+    Artifacts.memo("opq_basis", dir, Artifacts.corpusFingerprint(spark, dir))(
+      deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim))
 
   /** Snake-draft eigenvalue allocation: extraction rank p → subspace slot.
     * Round r = p / M deals one eigenvector to every subspace, reversing
@@ -140,7 +127,7 @@ object OpqOps {
   }
 
   private def fittedOpq(spark: SparkSession, dir: String): Codebook =
-    PqOps.codebookFor(spark, s"$dir#opq") {
+    Artifacts.memo("opq_codebook", dir, Artifacts.corpusFingerprint(spark, dir)) {
       val (e, ids) = graft.functions.Checkpoints.tracked(rotated(spark, dir))
       try PqOps.lloydPq(e, M)
       finally graft.functions.Checkpoints.release(e, ids, blocking = true)

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.Num._
 import graft.plans.VectorFunctions.l2_sq
+import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,29 +96,10 @@ object PqOps {
     cb
   }
 
-  /** Codebooks are an index (the IVF-quantizer stance): fit once per corpus,
-    * guarded by the same listing-level content fingerprint, fit outside the
-    * map's bin locks.
-    */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Codebook)]()
-  private val codebookLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** `key` is `dir#m=<subspaces>` so each operating point caches its own fit
-    * (the fingerprint still comes from the DIR the key embeds). */
-  private[operators] def codebookFor(spark: SparkSession, key: String)(fit: => Codebook): Codebook = {
-    val fp = Similarity.corpusFingerprint(spark, key.takeWhile(_ != '#'))
-    val lock = codebookLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val prev = codebookCache.get(key)
-      if (prev != null && prev._1 == fp) prev._2
-      else { val c = fit; codebookCache.put(key, (fp, c)); c }
-    }
-  }
-
+  /** Codebooks are an index like the IVF quantizer: fit once per corpus and
+    * subspace count, refit when the embeddings' listing changes. */
   private def fittedM(spark: SparkSession, dir: String, numSub: Int): Codebook =
-    codebookFor(spark, s"$dir#m=$numSub") {
+    Artifacts.memo("pq_codebook", s"$dir#m=$numSub", Artifacts.corpusFingerprint(spark, dir)) {
       val (e, ids) = graft.functions.Checkpoints.tracked(
         emb(spark, dir).select("vec_id", "v"))
       try lloydPq(e, numSub)

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.{DetRand => R}
 import graft.functions.Num._
 import graft.plans.VectorFunctions.cosine_sim
+import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -256,92 +257,23 @@ object Similarity {
     cent
   }
 
-  /** The trained coarse quantizer is an INDEX, not a query result: real IVF
-    * systems fit it once per corpus and every search reuses it. This cache
-    * models that index persistence. Entries are keyed by corpus dir and
-    * guarded by a CONTENT FINGERPRINT of the backing parquet — (path, length,
-    * mtime) of every part file hashed — so a corpus mutated in place misses
-    * and refits instead of serving stale centroids (the r4 invalidation
-    * caution); the stale entry is replaced, keeping the cache bounded by
-    * #distinct dirs. Without the cache every IVF query re-runs the 3 Lloyd
-    * aggregation passes it shares with its siblings. The fit itself is
-    * unchanged and still oracle-checked (ann_ivf_centroids recomputes
-    * through the same code path on first use).
-    */
-  private val quantizerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Int, Seq[Double])])]()
-  private val quantizerLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Fingerprint of the embeddings parquet backing `dir`'s quantizer: a
-    * listing-level digest (no data read — metadata only, one NameNode-style
-    * round trip), sufficient because parquet files are immutable-once-written
-    * in every real pipeline: mutation shows up as new/renamed/re-lengthed
-    * parts. MD5 over (count, path bytes, length, mtime) per part — the r5
-    * form folded 32-bit `String.hashCode`, where a collision (or an in-place
-    * rewrite inside mtime granularity preserving part lengths) could miss
-    * invalidation and serve stale centroids (ADVICE r5).
-    */
-  /** Generic fingerprint-guarded cache for cheap per-corpus literal stats
-    * (BQ sign thresholds, SQ8 min/Δ) — the same index stance as the IVF
-    * quantizer and PQ codebook caches: fit once per corpus content, refit
-    * when the listing fingerprint changes, per-key lock held outside the
-    * CHM bins. Keys embed the dir before an optional `#variant` suffix.
-    */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
-  private val statsLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[operators] def statsFor[T](spark: SparkSession, key: String)(fit: => T): T = {
-    val fp = corpusFingerprint(spark, key.takeWhile(_ != '#'))
-    val lock = statsLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val prev = statsCache.get(key)
-      if (prev != null && prev._1 == fp) prev._2.asInstanceOf[T]
-      else { val t = fit; statsCache.put(key, (fp, t)); t }
-    }
-  }
-
-  private[operators] def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(path)
-    val parts =
-      if (st.isDirectory) fs.listStatus(path).toSeq.sortBy(_.getPath.toString)
-      else Seq(st)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(s"n=${parts.size};".getBytes("UTF-8"))
-    parts.foreach { s =>
-      md.update(s"${s.getPath};${s.getLen};${s.getModificationTime};".getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Fit (only evaluated on a cache miss or a fingerprint mismatch) or reuse
-    * the quantizer. The fit — a multi-pass Spark job — runs under a per-key
-    * lock object, NOT inside `ConcurrentHashMap.compute` (whose remapping
-    * functions must stay short and non-blocking; a long fit inside the bin
-    * lock blocked unrelated keys hashing to the same bin — ADVICE r5).
-    * Concurrent first calls for the same dir still serialize; different dirs
-    * never contend.
+  /** The trained coarse quantizer is an index, not a query result: real IVF
+    * systems fit it once per corpus and every search reuses it, so it is
+    * memoized per dir and refit when the embeddings' listing changes.
+    * Without the memo every IVF query re-runs the Lloyd passes it shares with
+    * its siblings. The fit itself is still oracle-checked: ann_ivf_centroids
+    * goes through the same code path.
     */
   private def quantizerFor(spark: SparkSession, dir: String)(
-      fit: => Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] = {
-    val fp = corpusFingerprint(spark, dir)
-    val lock = quantizerLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val prev = quantizerCache.get(dir)
-      if (prev != null && prev._1 == fp) prev._2
-      else { val c = fit; quantizerCache.put(dir, (fp, c)); c }
-    }
-  }
+      fit: => Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] =
+    Artifacts.memo("ivf_quantizer", dir, Artifacts.corpusFingerprint(spark, dir))(fit)
 
   def kmeansCentroidsFlat(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cent = quantizerFor(spark, dir) {
       // fit-only path: the checkpointed working set is released as soon as
-      // the centroid Seq is extracted — without this every cache-miss fit
-      // left its blocks pinned for the life of the process (ADVICE r4)
+      // the centroid Seq is extracted, or every fit would leave its blocks
+      // pinned for the life of the process
       val (e, ids) = graft.functions.Checkpoints.tracked(
         emb(spark, dir).select("vec_id", "v"))
       try lloydCentroids(e)

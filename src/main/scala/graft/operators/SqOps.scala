@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Num._
+import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ object SqOps {
     * reconstructs to mn + Δ/2 = mn exactly.
     */
   private def statsArr(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) =
-    Similarity.statsFor(spark, s"$dir#sq8") {
+    Artifacts.memo("sq8_stats", dir, Artifacts.corpusFingerprint(spark, dir)) {
       val rows = emb(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos")).agg(min(col("col")).as("mn"), max(col("col")).as("mx"))

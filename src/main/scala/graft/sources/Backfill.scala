@@ -54,7 +54,7 @@ object Backfill {
   }
 
   def ensure(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeAndBackfill(spark, dir))
+    Artifacts.memo("layout", location(spark).toString, dir)(writeAndBackfill(spark, dir))
 
   def backfilledDailyAgg(spark: SparkSession, dir: String): DataFrame = {
     ensure(spark, dir)

@@ -88,8 +88,8 @@ object Compaction {
   }
 
   private def ensureLayouts(spark: SparkSession, dir: String): Unit = {
-    WriteOnce.ensure(fragmentedLocation(spark).toString, dir)(writeFragmented(spark, dir))
-    WriteOnce.ensure(compactedLocation(spark).toString, dir)(writeCompacted(spark))
+    Artifacts.memo("layout", fragmentedLocation(spark).toString, dir)(writeFragmented(spark, dir))
+    Artifacts.memo("layout", compactedLocation(spark).toString, dir)(writeCompacted(spark))
   }
 
   /** (layout, event_date, n_files, n_rows) — the before/after evidence. */

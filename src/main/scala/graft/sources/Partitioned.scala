@@ -31,17 +31,14 @@ object Partitioned {
       .write.partitionBy("event_date")
       .mode("overwrite").parquet(location(spark).toString)
 
-  /** location → source dir it was last written from. Rewriting on EVERY
-    * invocation (the pre-r5 behavior) made the registered query benchmark the
-    * overwrite more than the pruned read, and a concurrent reader could
-    * observe the location mid-overwrite (ADVICE r4). The layout is an index:
-    * write once per (location, source dir) — the quantizerCache pattern — and
-    * rewrite only when a different source dir targets the same location
-    * (concurrent first calls serialize on [[WriteOnce]]'s per-key lock, kept
-    * OUTSIDE the map's own bin locks per ADVICE r5).
+  /** The layout is an index: written once per (location, source dir) and
+    * rewritten only when a different source dir targets the same location.
+    * Rewriting on every call would make the registered query measure the
+    * overwrite more than the pruned read, and a concurrent reader could see
+    * the location mid-overwrite.
     */
   private def ensurePartitionedEvents(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writePartitionedEvents(spark, dir))
+    Artifacts.memo("layout", location(spark).toString, dir)(writePartitionedEvents(spark, dir))
 
   /** The pruned read, exposed separately so the spec can inspect the plan. */
   def prunedRead(spark: SparkSession): DataFrame =

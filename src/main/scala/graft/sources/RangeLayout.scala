@@ -41,7 +41,7 @@ object RangeLayout {
       .write.mode("overwrite").parquet(location(spark).toString)
 
   def ensureRangeSorted(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeRangeSorted(spark, dir))
+    Artifacts.memo("layout", location(spark).toString, dir)(writeRangeSorted(spark, dir))
 
   /** Read-back with file provenance, for asserting the layout contract. */
   def fileStats(spark: SparkSession, dir: String): DataFrame = {

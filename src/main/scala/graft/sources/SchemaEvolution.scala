@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: schema merging reads FOOTERS, not data — cost is per-file metadata,
   * and the per-generation writes/reads stay full parallel scans. The write
-  * happens once per (location, source dir) via [[WriteOnce]]; sums use exact
+  * happens once per (location, source dir) via [[Artifacts.memo]]; sums use exact
   * integer micros so generation interleaving cannot perturb the hash.
   */
 object SchemaEvolution {
@@ -48,7 +48,7 @@ object SchemaEvolution {
   }
 
   private def ensure(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeGenerations(spark, dir))
+    Artifacts.memo("layout", location(spark).toString, dir)(writeGenerations(spark, dir))
 
   /** The merged read, exposed for the spec to assert the union schema. */
   def mergedRead(spark: SparkSession): DataFrame =

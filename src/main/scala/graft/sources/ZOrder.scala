@@ -158,7 +158,7 @@ object ZOrder {
   }
 
   def ensureZOrdered(spark: SparkSession, dir: String): Unit =
-    WriteOnce.ensure(location(spark).toString, dir)(writeZOrdered(spark, dir))
+    Artifacts.memo("layout", location(spark).toString, dir)(writeZOrdered(spark, dir))
 
   /** The r6 FIXED-GRID key (user mod 16, 2-day bucket from a constant epoch
     * origin) — kept only as ZOrderSpec's degenerate comparator: under a

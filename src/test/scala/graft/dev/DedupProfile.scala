@@ -34,7 +34,7 @@ object DedupProfile {
     def drain(df: DataFrame, c: String): Unit =
       df.agg(count(lit(1)), sum(xxhash64(col(c)).cast("double"))).collect()
 
-    // cold: artifact write (WriteOnce) + memo checkpoint
+    // cold: artifact write (layout memo) + memo checkpoint
     val sh = time("shingles.cold")(Dedup.minhashPairs(spark, dir))
     // the full query, warm memo — the number the decade ratio is built on
     time("pairs.full_warm")(drain(Dedup.minhashPairs(spark, dir), "jaccard"))
