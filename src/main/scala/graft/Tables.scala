@@ -72,7 +72,7 @@ object Tables {
     // probe through Hadoop's FileSystem, not java.io.File: a non-local dir
     // (HDFS/S3 URI) is invisible to File.isDirectory, which would silently
     // fall back to the glob form and list zero files — the exact failure
-    // this dir probe exists to prevent (ADVICE r8).
+    // this dir probe exists to prevent.
     val probe = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = probe.getFileSystem(spark.sessionState.newHadoopConf())
     val isDir =

@@ -3,11 +3,10 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Byte-targeted output sizing for the layout-writing maintenance ops
-  * (compaction, z-order, backfill) — the production knob VERDICT r8 asked to
-  * wire: a real compactor sizes files against a BYTE target (~128 MB-1 GB),
-  * not a row count, because row width varies per table and the costs being
-  * managed (footer/open overhead, listing pressure, scan parallelism) are
-  * byte-shaped.
+  * (compaction, z-order, backfill). A real compactor sizes files against a
+  * BYTE target (~128 MB-1 GB), not a row count, because row width varies per
+  * table and the costs being managed (footer/open overhead, listing
+  * pressure, scan parallelism) are byte-shaped.
   *
   * The driver fixtures are tiny (events sf0.1 ≈ 2 MB), so a pure byte target
   * would collapse every demo layout to ONE file and the specs/oracles would
@@ -67,9 +66,8 @@ object FileSizing {
     * decompressed rows — reducer sorts stay in memory), clamped to
     * [cpus, 8·cpus]. A fixed 8·cpus width fixed the sf100 spill cliff
     * (lineitem_leadtime_sla 134 → 54 s) but taxed every sub-second sf0.1
-    * query ~0.1–0.4 s in map-side bucket + AQE stage overhead (VERDICT r10
-    * #1b); deriving the width from fixture bytes keeps both regimes on
-    * their right setting. Unknown/unsizable locations (remote FS without
+    * query ~0.1–0.4 s in map-side bucket + AQE stage overhead; deriving
+    * the width from fixture bytes keeps both regimes on their right setting. Unknown/unsizable locations (remote FS without
     * content summary) assume BIG — the scale-safe direction. Runs before
     * any SparkSession exists, so it sizes through a bare Hadoop conf.
     */
@@ -90,10 +88,9 @@ object FileSizing {
     * batch form there is no `cpus` floor: each state-store partition pays
     * per-micro-batch provider/commit overhead that AQE can never coalesce
     * away, and on a tiny fixture 32 stores of ~60 rows each cost more than
-    * one store of 2 k rows does (the r11 c8/c32 scaling block measured the
-    * stream_* queries FASTER on 8 cores than 32 for exactly this reason —
-    * VERDICT r11 #6). ~8 MB of source per store keeps per-store state small
-    * at scale; the 8·cpus cap and the assume-BIG fallback on unsizable
+    * one store of 2 k rows does (with one store per core, the stream_*
+    * queries ran faster on 8 cores than on 32). ~8 MB of source per store
+    * keeps per-store state small at scale; the 8·cpus cap and the assume-BIG fallback on unsizable
     * locations are shared with the batch form. A location that sizes to 0
     * bytes ([[bytesAt]] reads a missing path as 0) is unsizable too: the
     * stream may be fed after it starts, and its store count cannot change.

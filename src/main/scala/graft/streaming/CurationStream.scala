@@ -4,7 +4,6 @@ import graft.operators.{Curation, TextOps}
 import graft.functions.Num.sqlD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming corpus-curation ingest — the incremental twin of
@@ -75,20 +74,10 @@ object CurationStream {
     * deterministic-keeper form is the batch side's job:
     * [[graft.operators.Dedup]] canonical selection keeps min doc_id).
     */
-  def streamCuratedIngest(spark: SparkSession, dir: String): DataFrame = {
-    val sink = "stream_curated_sink"
-    spark.catalog.dropTempView(sink)
-    StreamingOps.withStreamWidth(spark, s"$dir/documents.parquet") {
-      val q = curatedIngest(docsStream(spark, dir)).writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink).select("fp", "lang", "n_words", "quality_score")
-  }
+  def streamCuratedIngest(spark: SparkSession, dir: String): DataFrame =
+    StreamingOps.drainToMemory(spark, "stream_curated_sink", "append",
+        s"$dir/documents.parquet")(curatedIngest(docsStream(spark, dir)))
+      .select("fp", "lang", "n_words", "quality_score")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_curated_ingest" -> ((s, d) => streamCuratedIngest(s, d).orderBy("fp"))

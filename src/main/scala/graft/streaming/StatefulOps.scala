@@ -93,7 +93,7 @@ object StatefulOps {
         // close the idle session, but LINGER a sentinel (n = 0) carrying the
         // seq counter so the user's next session continues numbering instead
         // of restarting at 1 and colliding with an already-emitted
-        // (user_id, session_seq) key (ADVICE r4). The linger deadline anchors
+        // (user_id, session_seq) key. The linger deadline anchors
         // to the WATERMARK at close time (one further gap past it), not the
         // session's own last event: the watermark has already overtaken
         // last_us + gap when this fires, so a last_us-anchored deadline would
@@ -116,7 +116,7 @@ object StatefulOps {
           // deadline clamped to watermark + 1: a late-but-admissible event
           // (inside the 2-hour watermark delay but older than watermark − gap)
           // would otherwise produce a timestamp ≤ watermark, which Spark
-          // rejects with IllegalArgumentException at runtime (ADVICE r4)
+          // rejects with IllegalArgumentException at runtime
           if (withTimeout)
             state.setTimeoutTimestamp(math.max(
               s.last_us / 1000L + (GapMinutes * 60000L).toLong,

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.functions.Num.{r6, sqlR6}
@@ -21,20 +23,59 @@ import graft.functions.Num.{r6, sqlR6}
   */
 object StreamingOps {
 
-  /** Runs an eager micro-batch execution with `spark.sql.shuffle.partitions`
-    * — the state-store count, pinned at stream start and outside AQE's reach
-    * — derived from the stream's SOURCE size instead of the session's batch
-    * width (see [[graft.sources.FileSizing.streamShufflePartitions]]), then
-    * restores the session conf. Results are unaffected: every stateful
-    * operator here (exact aggregation, watermark dedup) is
-    * partitioning-invariant; only where state rows land changes.
+  /** Runs one of graft's eager streaming executions (`body` starts it and
+    * waits for it) with the conf its cloned session should see, then
+    * restores the caller's values; a key the caller never set is unset again.
+    *
+    *  - `spark.sql.shuffle.partitions` is the state-store count, pinned at
+    *    stream start and outside AQE's reach, so it is derived from the
+    *    stream's SOURCE size instead of the session's batch width (see
+    *    [[graft.sources.FileSizing.streamShufflePartitions]]). Every stateful
+    *    operator here (exact aggregation, watermark dedup) is
+    *    partitioning-invariant; only where state rows land changes.
+    *  - The run clones the session at `start()`. Under per-session artifact
+    *    isolation the clone's tasks load generated classes through a class
+    *    loader of their own, which is part of the codegen cache key, so every
+    *    run recompiled classes whose source had not changed. The setting is
+    *    read only when a session is created: turning it off here changes the
+    *    discarded clone, not the caller's session. graft adds no session
+    *    artifacts.
+    *  - Spark's default checkpoint manager renames through `FileContext`,
+    *    which on the local file system without native Hadoop forks a
+    *    `readlink` for each path and its `.crc`; `FileSystem.rename` forks
+    *    none. These runs pass no `checkpointLocation`, so each checkpoints
+    *    to a fresh local temporary directory, where a rename is atomic.
+    *
+    * For the last two keys a value the caller set explicitly wins.
     */
   private[streaming] def withStreamWidth[T](spark: SparkSession, sourcePath: String)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, graft.sources.FileSizing.streamShufflePartitions(
-      spark, sourcePath, spark.sparkContext.defaultParallelism).toString)
-    try body finally spark.conf.set(key, prev)
+    val conf = spark.conf
+    val explicit = conf.getAll // the keys the caller set, not the defaults
+    val width = "spark.sql.shuffle.partitions" -> graft.sources.FileSizing
+      .streamShufflePartitions(spark, sourcePath, spark.sparkContext.defaultParallelism).toString
+    val run = width +: RunConfs.filterNot { case (k, _) => explicit.contains(k) }
+    run.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally run.foreach { case (k, _) => explicit.get(k).fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  /** The constants [[withStreamWidth]] adds for the run's clone. */
+  private[streaming] val RunConfs: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+
+  /** Drains `stream` under `Trigger.AvailableNow` into the memory sink
+    * `sink` (replacing any earlier run's table) and returns the sink as a
+    * batch frame. `sourcePath` sizes the state stores. */
+  private[streaming] def drainToMemory(spark: SparkSession, sink: String, mode: String,
+      sourcePath: String)(stream: DataFrame): DataFrame = {
+    spark.catalog.dropTempView(sink)
+    withStreamWidth(spark, sourcePath) {
+      stream.writeStream.format("memory").queryName(sink).outputMode(mode)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    spark.table(sink)
   }
 
   /** Tumbling 1-hour aggregate; on a stream, late data beyond 2h is dropped. */
@@ -108,7 +149,7 @@ object StreamingOps {
     // Half-open [p-60min, p): the SAME predicate as the batch twin
     // `events_interval_join` (Relational.intervalJoin) — BETWEEN's inclusive
     // upper bound would match a click at exactly the purchase timestamp in
-    // streaming but not batch, silently diverging at the boundary (ADVICE r5).
+    // streaming but not batch, silently diverging at the boundary.
     c.join(p, expr(
       """c_user = p_user AND
         |click_ts >= purchase_ts - INTERVAL 60 MINUTES AND
@@ -155,24 +196,12 @@ object StreamingOps {
     * plan in append mode + watermark against a durable sink (kafka/parquet),
     * where state is bounded by (#keys × #open windows) and nothing collects.
     */
-  def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    val sink = "stream_tumbling_sink"
-    spark.catalog.dropTempView(sink)
-    val agg = tumblingCounts(Tables.eventsStream(spark, dir))
-    withStreamWidth(spark, s"$dir/events.parquet") {
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+  def streamTumbling(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(spark, "stream_tumbling_sink", "complete", s"$dir/events.parquet")(
+      tumblingCounts(Tables.eventsStream(spark, dir)))
       .select(col("ws"), col("event_type"), col("n_events"),
         r6(col("sum_value")).as("sum_value"),
         r6(col("sum_value") / col("n_events")).as("avg_value"))
-  }
 
   /** Trending report size per window. */
   val TrendingTopK = 3
@@ -188,20 +217,10 @@ object StreamingOps {
     * the report is deterministic.
     */
   def streamTopkTrending(spark: SparkSession, dir: String): DataFrame = {
-    val sink = "stream_trending_sink"
-    spark.catalog.dropTempView(sink)
-    val agg = tumblingCounts(Tables.eventsStream(spark, dir))
-    withStreamWidth(spark, s"$dir/events.parquet") {
-      val q = agg.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("ws").orderBy(desc("n_events"), asc("event_type"))
-    spark.table(sink)
+    drainToMemory(spark, "stream_trending_sink", "complete", s"$dir/events.parquet")(
+      tumblingCounts(Tables.eventsStream(spark, dir)))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TrendingTopK)
       .select(col("ws"), col("rank"), col("event_type"), col("n_events"))
@@ -219,20 +238,10 @@ object StreamingOps {
     * first-seen, which across two racing sources is nondeterministic.
     */
   def streamDedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val sink = "stream_dedup_sink"
-    spark.catalog.dropTempView(sink)
     val ev = Tables.eventsStream(spark, dir)
     val replay = Tables.eventsStream(spark, dir).filter(col("event_id") % 10 === 0)
-    withStreamWidth(spark, s"$dir/events.parquet") {
-      val q = dedupWithinWatermark(ev.unionByName(replay))
-        .select("event_id")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+    drainToMemory(spark, "stream_dedup_sink", "append", s"$dir/events.parquet")(
+      dedupWithinWatermark(ev.unionByName(replay)).select("event_id"))
   }
 
   /** Stream-static join + aggregation: the event stream enriched against the
@@ -249,23 +258,12 @@ object StreamingOps {
     * finite input.
     */
   def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val sink = "stream_enrich_sink"
-    spark.catalog.dropTempView(sink)
     val dim = Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
     val agg = Tables.eventsStream(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy("c_mktsegment", "event_type")
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    withStreamWidth(spark, s"$dir/events.parquet") {
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
+    drainToMemory(spark, "stream_enrich_sink", "complete", s"$dir/events.parquet")(agg)
       .select(col("c_mktsegment"), col("event_type"), col("n_events"),
         r6(col("sum_value")).as("sum_value"))
   }
@@ -285,7 +283,9 @@ object StreamingOps {
     * drains the events parquet under AvailableNow.
     */
   def streamMvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mv_").toFile.getAbsolutePath
+    // the returned frame reads the final state lazily, so the directory
+    // lives until the JVM exits; Spark's helper deletes it then
+    val tmp = Bridge.tempDir("graft_mv").getAbsolutePath
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
     withStreamWidth(spark, s"$dir/events.parquet") {
       val q = Tables.eventsStream(spark, dir).writeStream

@@ -116,8 +116,9 @@ class TypeCountsProcessor extends StatefulProcessor[Long, TypedEvent, UserTypeCo
   * is armed per key (previous ones deleted on re-arm — TWS allows many
   * timers per key, GroupStateTimeout allowed one, so single-deadline
   * semantics must now be enforced by the processor), anchored at
-  * last-event + gap and clamped past the current watermark (the r4
-  * late-event lesson applies unchanged). A fired close leaves the same
+  * last-event + gap and clamped past the current watermark (a late but
+  * admissible event would otherwise ask for a timer at or before the
+  * watermark, which Spark rejects). A fired close leaves the same
   * n = 0 sentinel carrying the seq counter for one further gap so session
   * numbering survives a timeout close; the sentinel's own expiry evicts it.
   *

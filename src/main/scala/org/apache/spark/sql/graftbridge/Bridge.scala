@@ -18,6 +18,11 @@ object Bridge {
     * private[spark]; `getConf` returns a copy). */
   def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 
+  /** A new directory under `java.io.tmpdir`, deleted when the JVM exits
+    * (Spark's `Utils.createTempDir`, which is private[spark]). */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
   /** Register a SQL function on a LIVE session (sessionState is private[sql],
     * hence bridged here). Same builder shape SparkSessionExtensions uses, so
     * the extensions path and the runtime path register identical functions.
