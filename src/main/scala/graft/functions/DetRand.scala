@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.plans.{DetGauss, DetU01}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Deterministic, cross-engine pseudo-random columns (SURVEY.md §7.2).
   *
@@ -19,12 +21,15 @@ import org.apache.spark.sql.functions._
   * Keys must satisfy |key| < 2e11 so that key*40503 stays exact.
   */
 object DetRand {
-  val M = 2147483648.0 // 2^31
-
-  private def fmod(x: Column): Column = x - floor(x / M).cast("double") * M
-  private def lcg(x: Column): Column = fmod(x * 69069.0 + 12345.0)
-
-  /** Uniform (0,1), bit-identical in Spark and DuckDB ([[sqlU01]]).
+  /** Uniform (0,1), bit-identical in Spark and DuckDB ([[sqlU01]]). One
+    * Catalyst node ([[graft.plans.DetU01]]) replays the 2-round LCG below
+    * over `key` cast to DOUBLE:
+    * {{{
+    *   fmod(x) = x − floor(x / M)·M,   M = 2^31
+    *   seed    = fmod(key·40503 + stream·30011 + 12345)
+    *   x       = lcg(lcg(fmod(seed·(69069 + 2·stream))))   lcg(x) = fmod(x·69069 + 12345)
+    *   u01     = (x + 0.5) / M
+    * }}}
     *
     * The first multiplier is stream-dependent: with a shared multiplier,
     * consecutive streams of the same key stay a constant offset apart through
@@ -33,20 +38,16 @@ object DetRand {
     * white-noise moments test). Distinct multipliers per stream break the
     * affine relation.
     */
-  def u01(key: Column, stream: Int): Column = {
-    val seed = fmod(key * 40503.0 + stream.toDouble * 30011.0 + 12345.0)
-    (lcg(lcg(fmod(seed * (69069.0 + 2.0 * stream)))) + 0.5) / M
-  }
+  def u01(key: Column, stream: Int): Column =
+    Bridge.column(DetU01(Bridge.expression(key.cast("double")), stream))
 
   def uniform(key: Column, stream: Int, lo: Double, hi: Double): Column =
     u01(key, stream) * (hi - lo) + lo
 
-  /** Standard normal via Box-Muller; consumes streams 2s and 2s+1. */
-  def gauss(key: Column, stream: Int): Column = {
-    val u1 = u01(key, 2 * stream)
-    val u2 = u01(key, 2 * stream + 1)
-    sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
-  }
+  /** Standard normal via Box-Muller, sqrt(−2·ln u1)·cos(2π·u2) with u1, u2
+    * the [[u01]] draws of streams 2s and 2s+1 ([[graft.plans.DetGauss]]). */
+  def gauss(key: Column, stream: Int): Column =
+    Bridge.column(DetGauss(Bridge.expression(key.cast("double")), stream))
 
   // ---- DuckDB SQL twins (same arithmetic, same op order) ----
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * per-step affine maps compose, so x_final is a single weighted sum over
   * (cell × step) — no iteration, no lineage growth, embarrassingly parallel.
   * The iterative sampler (I1) is kept for predictor-pluggability and uses
-  * driver-collected scalar coefficients + localCheckpoint to bound lineage.
+  * driver-collected scalar coefficients, one projection step per timestep.
   */
 object Diffusion {
   val T = 500 // config.json:16
@@ -94,8 +94,8 @@ object Diffusion {
     * the cosine schedule (q_sample with a constant t instead of the per-row
     * draw), then the decomposition triple + residual read off the NOISED
     * series — "what the model sees at t=10". Pure composition of the P2/J1
-    * forward noising and the W9 decompose chain (VERDICT r8 noted the
-    * composition existed but had no NAMED registry twin).
+    * forward noising and the W9 decompose chain, registered under its own
+    * name so the notebook's probe has a query and an oracle of its own.
     */
   def forwardInspect(spark: SparkSession): DataFrame = {
     val x0 = Generators.dataset(spark, "sine", InspectN, L)
@@ -298,10 +298,19 @@ object Diffusion {
           .as("value"))
   }
 
-  /** I1 literal: sequential reverse loop with driver-collected scalar schedule,
-    * `localCheckpoint` every 25 steps to cut lineage (SURVEY §7.6.3). Same noise
-    * keying as the closed form, so both agree to fp tolerance — the closed-form
-    * SQL is its oracle.
+  /** I1 literal: sequential reverse loop with driver-collected scalar
+    * schedule, one projection step per timestep. Same noise keying as the
+    * closed form, so both agree to fp tolerance — the closed-form SQL is its
+    * oracle.
+    *
+    * The 50 steps collapse into ONE projection, without the lineage-cutting
+    * `localCheckpoint`s a deep plan would usually want: with one expression
+    * node per Gaussian draw the projection stays in whole-stage codegen.
+    * Its generated method (~27 KB of bytecode) is above HotSpot's 8 KB JIT
+    * limit, so rows run through the bytecode interpreter: at the registered
+    * 20 × 64 cells that costs ~0.2 s of execution, while dropping a
+    * checkpoint every 10 steps saved ~0.3 s and 5 eager jobs of plan build.
+    * A much larger grid wants the one-pass step-loop expression instead.
     */
   def sampleIterative(spark: SparkSession, n: Long = 20, seqLen: Int = L,
                       timesteps: Int = 50, kind: String = "linear"): DataFrame = {
@@ -314,12 +323,8 @@ object Diffusion {
     var x = Generators.grid(spark, n, seqLen)
       .withColumn("x", R.gauss(col("series_id").cast("double") * seqLen + col("t"), 0))
     val zKeyBase = col("series_id").cast("double") * seqLen + col("t")
-    for (((step, g, sv), i) <- sc.zipWithIndex) {
+    for ((step, g, sv) <- sc)
       x = x.withColumn("x", lit(g) * col("x") + lit(sv) * R.gauss(zKeyBase * timesteps + step, 14))
-      // every 10 steps: bounds lineage AND keeps each codegen unit small — 25
-      // nested Box-Muller steps in one projection overflow the JIT's happy path
-      if ((i + 1) % 10 == 0) x = x.localCheckpoint(eager = true)
-    }
     x.select(col("series_id"), col("t"), r6(col("x") / lit(sqrtAc0)).as("value"))
   }
 

@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   *    (monotone time buckets + prefix-offset recombination; halo'd t-chunks for
   *    the rows-frame): parallelism = #series × #blocks, so even a 5-value
   *    event_type key never puts a whole series in one task (see [[series]] /
-  *    [[trendedOf]] — the r9 per-key window forms were the registry's last
-  *    fact-scale single-task plans, VERDICT r9).
-  *  - the DFT is the O(N·K) explode+groupBy form: rows fan out K-fold
-  *    (`maxFreq`=64 caps the fan-out) and collapse through a partial-aggregating
-  *    hash agg, so shuffle volume is #series × K, not N × K.
+  *    [[trendedOf]]; a window partitioned by the key alone sorts 20% of the
+  *    fact table in one task at any scale).
+  *  - the DFT is O(N·K) in one fused aggregate ([[spectrumOf]]): each row
+  *    adds its terms for all `MaxFreq` bins to a per-series buffer, so the
+  *    shuffle carries #series × K sums, never N × K rows.
   */
 object EventsOps {
   val TopK = 4      // config.json:21 (top_k)
@@ -43,7 +43,7 @@ object EventsOps {
     * plus a ±[[HalfWin]] halo replicated from the neighbor blocks. */
   val TrendBlock = 65536
 
-  // ---- blocked order-statistic machinery (VERDICT r9 #1) ----
+  // ---- blocked order-statistic machinery ----
   //
   // A `row_number()/ntile()/rolling over (partition by <vocabulary key>
   // order by …)` window sorts a whole series in ONE task: with key =
@@ -67,17 +67,26 @@ object EventsOps {
     * order column (so global (order) ≡ (bucket, order), and tied leading
     * values never straddle buckets): per-(key, bucket) counts roll into
     * exclusive prefix offsets through a window over the tiny counts table,
-    * and rank = offset + local row_number. Adds `rnName`; keeps all input
-    * columns. The offsets join is AQE-broadcast (keys × buckets rows).
+    * and rank = offset + local row_number. Adds `rnName` and, when `totName`
+    * is set, the per-key count of ranked rows; keeps all input columns. The
+    * offsets join is AQE-broadcast (keys × buckets rows).
     */
   private[graft] def blockedRank(df: DataFrame, key: String, orderCols: Seq[Column],
-                                 bucket: Column, rnName: String): DataFrame = {
+                                 bucket: Column, rnName: String,
+                                 totName: Option[String] = None): DataFrame = {
     val base = df.withColumn("_bkt", bucket)
     val counts = base.groupBy(col(key), col("_bkt")).count()
-    val wOff = Window.partitionBy(key).orderBy("_bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = counts
+    val wKey = Window.partitionBy(key).orderBy("_bkt")
+    val wOff = wKey.rowsBetween(Window.unboundedPreceding, -1)
+    val off0 = counts
       .withColumn("_off", coalesce(sum("count").over(wOff), lit(0L)))
+    // the total folds over the same tiny counts table, in the offsets'
+    // window; a null-bucket row joins no offset and gets no rank, so it
+    // does not count
+    val off = totName.fold(off0)(tn => off0.withColumn(tn, coalesce(
+      sum(when(col("_bkt").isNotNull, col("count")))
+        .over(wKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+      lit(0L))))
       .drop("count")
     val wIn = Window.partitionBy(col(key), col("_bkt")).orderBy(orderCols: _*)
     base.join(off, Seq(key, "_bkt"))
@@ -163,11 +172,14 @@ object EventsOps {
     }
   }
 
-  /** Per-series long view: (<key>, value, t) with t = dense rank of
-    * (ts, event_id) within the key — block-parallel via [[blockedRank]] over
-    * monotone TIME buckets (events arrive ~uniform in time, so buckets stay
-    * balanced). Bit-identical to the r9 single-window form
-    * (TsDiagnosticsSpec forces many buckets and asserts exact equality).
+  /** Per-series long view: (<key>, value, t, n) with t = dense rank of
+    * (ts, event_id) within the key and n the series length — block-parallel
+    * via [[blockedRank]] over monotone TIME buckets (events arrive ~uniform
+    * in time, so buckets stay balanced). Bit-identical to the single
+    * `row_number()` window over the whole series (TsDiagnosticsSpec forces
+    * many buckets and asserts exact equality). n is read off the rank's own
+    * counts table, so [[trendedOf]] need not plan the rank a second time to
+    * count its rows.
     *
     * `key = "user_id"` still yields sf-scaling cardinality; the blocking is
     * then a cheap no-op refinement (each (user, bucket) cell is small).
@@ -178,9 +190,9 @@ object EventsOps {
       .select(col(key), col("ts"), col("event_id"), col("value"))
     blockedRank(ev, key, Seq(col("ts"), col("event_id")),
       longBuckets(ev, unix_micros(col("ts")), blockRows,
-        Some(s"$dir#events.ts_micros")), "rn")
+        Some(s"$dir#events.ts_micros")), "rn", Some("n"))
       .withColumn("t", (col("rn") - 1).cast("int"))
-      .select(col(key), col("value"), col("t"))
+      .select(col(key), col("value"), col("t"), col("n"))
   }
 
   /** Bounded [lo, hi] rows-frame over a DENSE per-key `t` (0..n−1),
@@ -229,22 +241,25 @@ object EventsOps {
   private[graft] def unHalo(df: DataFrame): DataFrame =
     df.filter(!col("_halo")).drop("_tblk", "_halo")
 
-  /** value + series length + centered-moving-average trend + detrended
-    * remainder, over ANY long frame (key, t, value) with t DENSE per key
-    * (0..n−1 — what [[series]] and every generator grid emit) — the events
-    * path and the multivariate dim path share this. Block-parallel via
-    * [[haloBlocks]]; n (series length) comes from a groupBy join rather
-    * than an unordered whole-partition window — the count table is one row
-    * per key and AQE broadcasts it, where the old `count over (partition by
-    * key)` was itself a one-task-per-key shuffle of the full frame.
+  /** value + centered-moving-average trend + series length `n` + detrended
+    * remainder (columns in that order, after the key), over ANY long frame
+    * (key, t, value) with t DENSE per key (0..n−1 — what [[series]] and
+    * every generator grid emit) — the events path and the multivariate dim
+    * path share this. Block-parallel via [[haloBlocks]]. A frame that
+    * already carries the series length `n` (as [[series]] does) keeps it;
+    * otherwise n comes from a groupBy join rather than an unordered
+    * whole-partition window — the count table is one row per key and AQE
+    * broadcasts it, where `count over (partition by key)` would be a
+    * one-task-per-key shuffle of the full frame.
     */
   private[graft] def trendedOf(df: DataFrame, key: String,
                                block: Int = TrendBlock): DataFrame = {
-    val n = df.groupBy(key).agg(count(lit(1)).as("n"))
     val (aug, wt) = haloBlocks(df, key, -HalfWin, HalfWin, block)
-    unHalo(aug.withColumn("trend", avg("value").over(wt)))
-      .join(n, Seq(key))
-      .withColumn("detr", col("value") - col("trend"))
+    val tr = unHalo(aug.withColumn("trend", avg("value").over(wt)))
+    val withN =
+      if (df.columns.contains("n")) tr.select((tr.columns.filterNot(_ == "n") :+ "n").map(col): _*)
+      else tr.join(df.groupBy(key).agg(count(lit(1)).as("n")), Seq(key))
+    withN.withColumn("detr", col("value") - col("trend"))
   }
 
   def trended(spark: SparkSession, dir: String, key: String = "event_type"): DataFrame =
@@ -268,9 +283,9 @@ object EventsOps {
     // run-to-run inside DuckDB itself).
     //
     // One fused [[graft.plans.DftSumsAgg]] pass accumulates all MaxFreq bins
-    // per input row — the r9 explode-join form fanned every fact row out 64×
-    // through a BroadcastHashJoin before aggregating, and the sf10 profile
-    // put 21 of the DFT's 27 s in that 640 M-row join pipeline (trig ~2 s).
+    // per input row — exploding every fact row into 64 bin rows before
+    // aggregating put 21 of the DFT's 27 s at sf10 in that 640 M-row join
+    // pipeline (the trig itself took ~2 s).
     // The kernel replays the identical double trees (theta association order,
     // fx9 floors), so the long sums — and therefore the oracle hashes — are
     // bit-identical.
@@ -308,24 +323,24 @@ object EventsOps {
     *
     * `trended` feeds three consumers (spectrum, the seasonality time grid, and
     * the final join), so it is localCheckpoint'd ONCE per call — without it the
-    * input scan, the per-series row_number window, and the DFT fan-out all run
-    * twice per query (VERDICT r1 "what's wrong #1"). Callers that wrap this
-    * (decomposeMse) inherit the same single materialization.
+    * input scan, the per-series row_number window, and the DFT aggregate all
+    * run once per consumer. Callers that wrap this (decomposeMse) inherit the
+    * same single materialization.
     */
   def decomposeOf(df: DataFrame, key: String): DataFrame = {
     val tr = trendedOf(df, key).localCheckpoint(eager = true)
-    // inverse rDFT over the kept bins only — as a MAP, not a fan-out: the r9
-    // form joined every (series, t) row against its K=4 kept bins (4× row
-    // explosion), re-aggregated by (key, t), then joined the 10 M-group
-    // result back onto `tr` — two fact-scale shuffles and a fact⋈fact SMJ
-    // per query. The kept bins instead pivot to ONE row per series (≤TopK
+    // inverse rDFT over the kept bins only — as a MAP, not a fan-out: joining
+    // every (series, t) row against its K=4 kept bins would explode the rows
+    // 4×, re-aggregate by (key, t) and join the result back onto `tr` — two
+    // fact-scale shuffles and a fact⋈fact join per query. The kept bins
+    // instead pivot to ONE row per series (≤TopK
     // bins each; rank order is topBinsOf's (amplitude desc, k asc), though
     // the term SUM makes the order immaterial), the join is 1:1 on the
     // series key, and the seasonality is a per-row expression summing the
-    // same fx9 long terms the old group-sum added — bit-identical output,
-    // zero fact-scale shuffles. No broadcast hint on the pivot: it is one
-    // row PER SERIES and callers key by user_id/series_id where series count
-    // scales with the base table (the VERDICT r8 class); AQE broadcasts it
+    // same fx9 long terms a group-sum would add — zero fact-scale shuffles.
+    // No broadcast hint on the pivot: it is one row PER SERIES and callers
+    // key by user_id/series_id, where the series count scales with the base
+    // table and a forced broadcast would grow with it; AQE broadcasts it
     // when it is actually small.
     val wTop = Window.partitionBy(col(key)).orderBy(desc("amplitude"), asc("k"))
     val aggs = (1 to TopK).flatMap { i =>

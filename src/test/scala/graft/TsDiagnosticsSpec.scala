@@ -80,12 +80,14 @@ class TsDiagnosticsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     // blockRows=50 over the sf0.001 events (~1000 rows) forces ~21 time
     // buckets, so ranks recombine across buckets through the offset table
+    // and n sums the per-bucket counts
     val blocked = EventsOps.series(spark, sf, "event_type", blockRows = 50L)
     val w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     val direct = graft.Tables.events(spark, sf)
       .select(col("event_type"), col("ts"), col("event_id"), col("value"))
       .withColumn("t", (row_number().over(w) - 1).cast("int"))
-      .select("event_type", "value", "t")
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
+      .select("event_type", "value", "t", "n")
     assert(blocked.exceptAll(direct).count() == 0)
     assert(direct.exceptAll(blocked).count() == 0)
   }
@@ -140,6 +142,41 @@ class TsDiagnosticsSpec extends SparkSpec {
       .withColumn("is_anomaly", coalesce(abs(col("z")) > EventsOps.AnomalyZ, lit(false)))
     assert(blocked.exceptAll(direct).count() == 0)
     assert(direct.exceptAll(blocked).count() == 0)
+  }
+
+  test("trended reads the series length off the rank's counts: two events scans, not four") {
+    // the rank's own counts table carries n, so no second copy of the rank
+    // plan is built just to count its rows
+    val df = EventsOps.trended(spark, sf)
+    df.collect()
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      p.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths.mkString }
+        .filter(_.contains("events.parquet")) ++
+        p.collect { case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q }.flatMap(q => scans(q.plan))
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(scans(plan).size == 2, plan.toString.take(4000))
+  }
+
+  test("n and trend from the rank's counts equal the separate count, with a null-ts event") {
+    // a null ts has a null time bucket, so the row gets no rank: it must not
+    // count towards n either
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts-null").toString
+    try {
+      val ev = graft.Tables.events(spark, sf)
+      val extra = ev.limit(3).withColumn("ts", lit(null).cast("timestamp"))
+        .withColumn("event_id", col("event_id") + 1000000000L)
+      ev.unionByName(extra).write.parquet(s"$dir/events.parquet")
+      val viaCounts = EventsOps.trended(spark, dir)
+      val separate = EventsOps.trendedOf(EventsOps.series(spark, dir).drop("n"), "event_type")
+      assert(viaCounts.columns.toSeq == Seq("event_type", "value", "t", "trend", "n", "detr"))
+      assert(separate.columns.toSeq == viaCounts.columns.toSeq)
+      assert(viaCounts.exceptAll(separate).count() == 0)
+      assert(separate.exceptAll(viaCounts).count() == 0)
+      assert(viaCounts.count() == ev.count())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("blocked trend window partitions by (key, block), never key alone") {
