@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, sum, xxhash64}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+import org.apache.spark.sql.types.DecimalType
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.Locale
@@ -10,25 +11,37 @@ import scala.jdk.CollectionConverters._
   * emits the full ms-rounded JSON result line followed by an ULTRA-SHORT
   * `{"metric":"total","value":N}` line as the LAST stdout line, both also
   * persisted to SPARK_GRAFT_BENCH_OUT (default BENCH_local.json) — so a
-  * truncated stdout tail can never lose the round's perf signal (the driver's
-  * r1 AND r2 captures both ended `"parsed": null` from mid-line truncation).
+  * truncated stdout tail (a tail capture that cuts the long line mid-way)
+  * can never lose the run's perf signal.
   *
-  * Contention hardening (VERDICT r2 next-round #1): the r2 driver bench was
-  * 16× the same-commit local/judge time with stalls scattered across
-  * trivial queries — classic host-contention noise, which is strictly
-  * one-sided. Each query therefore runs TWICE and records the MIN, and the
-  * JSON carries /proc/loadavg (start/end) plus total JVM GC time as evidence
-  * for adjudicating any future distorted run.
+  * Host contention only ever adds time, and it lands as stalls scattered
+  * across trivial queries. Each query therefore runs TWICE and records the
+  * MIN, and the JSON carries /proc/loadavg (start/end) plus total JVM GC
+  * time as evidence for adjudicating a distorted run.
   *
-  * Each run forces a full-column checksum aggregate rather than count():
-  * under count() Catalyst prunes every computed column that doesn't affect
+  * Each run computes the query's [[digest]] rather than count(): under
+  * count() Catalyst prunes every computed column that doesn't affect
   * cardinality (signals, noise, window math), so count()-timing understates
   * real cost. xxhash64 over all output columns makes every cell get computed
   * while still reducing to a single row — and the final per-query orderBy
   * (needed only for the correctness dump) is eliminated under the aggregate,
-  * so bench measures compute, not presentation sorts.
+  * so bench measures compute, not presentation sorts. The digests go into
+  * the JSON, so two runs' values can be compared query by query, and a
+  * query whose runs disagree (e.g. a memo hit that differs from the miss)
+  * counts as a `DigestMismatch` error.
   */
 object Bench {
+  /** A query's value digest, `rows:sum`: the row count plus the exact sum of
+    * xxhash64 over all columns as decimal(38,0), which cannot overflow (a
+    * BIGINT sum of the hashes overflows 2^63 under ANSI mode) and does not
+    * depend on row order, partitioning or merge order. */
+  def digest(df: DataFrame): String = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toIndexedSeq.map(col): _*).cast(DecimalType(38, 0))))
+      .collect().head
+    s"${r.getLong(0)}:${Option(r.get(1)).getOrElse("null")}"
+  }
+
   private def loadavg: String =
     try Files.readString(Paths.get("/proc/loadavg")).trim.split(" ").take(3).mkString(" ")
     catch { case _: Throwable => "n/a" }
@@ -38,9 +51,9 @@ object Bench {
 
   /** Hypervisor steal ticks (field 9 of /proc/stat's cpu line): a VM-level
     * freeze stalls wall-clock while loadavg stays low — steal is the one
-    * counter that names it. The r4 builder bench saw exactly this (two
-    * alphabetically-contiguous blocks of 100x-slowed trivial queries, load
-    * < 2 throughout), so the artifact now carries the evidence.
+    * counter that names it. Such a freeze shows as alphabetically-contiguous
+    * blocks of 100x-slowed trivial queries with load < 2 throughout, so the
+    * artifact carries the evidence.
     */
   private def stealTicks: Long =
     try Files.readString(Paths.get("/proc/stat")).linesIterator
@@ -58,18 +71,14 @@ object Bench {
     val runs = math.max(1,
       try sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
       catch { case _: NumberFormatException => 2 })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalSession.builder(cpus.toInt)
       // AQE sizes shuffles from THIS width down: 32 fixed partitions made
       // every sf100 reducer sort ~19M rows and spill (lineitem_leadtime_sla
       // read 18× for 10× data), while a fixed 8×cpus taxed every sub-second
-      // sf0.1 query (VERDICT r10 #1b) — so the width now derives from the
-      // fixture's byte size (see FileSizing.initialShufflePartitions)
+      // sf0.1 query — so the width derives from the fixture's byte size (see
+      // FileSizing.initialShufflePartitions)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         graft.sources.FileSizing.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadStart = loadavg
@@ -80,8 +89,8 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).count()
     // a query that throws would otherwise time near-zero and FLATTER the
-    // total (VERDICT r4 caution): record the exception class per query so the
-    // JSON carries an "errors" count and a failing total can't look healthy.
+    // total: record the exception class per query so the JSON carries an
+    // "errors" count and a failing total can't look healthy.
     // Correctness gating catches the breakage separately; this makes the perf
     // artifact self-auditing the way the steal/gc fields are.
     // optional comma-separated query filter for local single-query iteration;
@@ -93,7 +102,8 @@ object Bench {
     // stall that taxes both adjacent samples is bounded by the sweep-level
     // steal-retry guard below, and a stall invisible to the steal counter
     // only ever makes the recorded number worse, never better.
-    def sweep(errors: scala.collection.mutable.Map[String, String]): Seq[(String, Double)] = {
+    def sweep(errors: scala.collection.mutable.Map[String, String],
+        digests: scala.collection.mutable.Map[String, String]): Seq[(String, Double)] = {
       val regAsc = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(kv => only.forall(_.contains(kv._1)))
       val best = scala.collection.mutable.LinkedHashMap(
@@ -101,18 +111,14 @@ object Bench {
       def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
         val t0 = System.nanoTime()
         try {
-          val df = fn(spark, sfDir)
-          // sum as DOUBLE: a BIGINT sum of xxhash64 values overflows 2^63 under
-          // ANSI mode and aborts the query mid-scan, truncating the measurement
-          df.select(xxhash64(df.columns.map(col): _*).cast("double").as("h")).agg(sum("h")).collect()
+          val d = digest(fn(spark, sfDir))
+          if (digests.getOrElseUpdate(name, d) != d) errors(name) = "DigestMismatch"
         } catch { case e: Throwable => errors(name) = e.getClass.getSimpleName }
         val dt = (System.nanoTime() - t0) / 1e9
         // release blocks pinned by intra-query localCheckpoints so storage
         // pressure from one query can't tax the next — session-scoped
         // artifacts (Pinned) are exempt, they exist to be reused
-        spark.sparkContext.getPersistentRDDs.values
-          .filterNot(r => graft.sources.Pinned.contains(r.id))
-          .foreach(_.unpersist(blocking = true))
+        graft.sources.Pinned.releaseUnpinned(spark, blocking = true)
         // MIN across runs: contention stalls only ever ADD time, so the min
         // is the best estimate of the code's true cost on this host
         if (dt < best(name)) best(name) = dt
@@ -150,17 +156,21 @@ object Bench {
         Some("dedup__shingle_artifact" -> (System.nanoTime() - t0) / 1e9)
       } else None
     var errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var digests = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var sweepSteal = stealTicks
-    var results = sweep(errors)
+    var results = sweep(errors, digests)
     sweepSteal = stealTicks - sweepSteal
     var retried = false
     if (sweepSteal > maxSteal) {
       retried = true
       val errors2 = scala.collection.mutable.LinkedHashMap.empty[String, String]
+      val digests2 = scala.collection.mutable.LinkedHashMap.empty[String, String]
       var steal2 = stealTicks
-      val results2 = sweep(errors2)
+      val results2 = sweep(errors2, digests2)
       steal2 = stealTicks - steal2
-      if (steal2 < sweepSteal) { results = results2; errors = errors2; sweepSteal = steal2 }
+      if (steal2 < sweepSteal) {
+        results = results2; errors = errors2; digests = digests2; sweepSteal = steal2
+      }
     }
     // the artifact build line rides whichever sweep was kept (see above)
     artifactLine.foreach(l => results = results :+ l)
@@ -171,13 +181,15 @@ object Bench {
     val gcSec = (gcMillis - gcStart) / 1e3
     // steal is in USER_HZ (100/s) per-cpu-summed; report raw tick delta
     val stealDelta = stealTicks - stealStart
-    val errJson = errors.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
+    def obj(m: scala.collection.Map[String, String]): String =
+      m.map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
       s""","runs":$runs,"agg":"min","loadavg_start":"$loadStart","loadavg_end":"$loadavg"""" +
       s""","gc_sec":${ms(gcSec)},"steal_ticks":$stealDelta""" +
       s""","sweep_steal_ticks":$sweepSteal,"steal_retried":$retried""" +
       s""","harness":"back_to_back"""" +
-      s""","errors":${errors.size},"query_errors":$errJson}"""
+      s""","errors":${errors.size},"query_errors":${obj(errors)}""" +
+      s""","digests":${obj(digests)}}"""
     val short = s"""{"metric":"total","value":${ms(total)}}"""
     try Files.writeString(Paths.get(outPath), full + "\n" + short + "\n")
     catch { case _: Throwable => () }

@@ -95,6 +95,11 @@ object Tables {
 
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
+  /** The embeddings as `(vec_id, label, v)`, with `v` the vector cast to
+    * array<double>: the form every vector operator computes on. */
+  def vectors(spark: SparkSession, dir: String): DataFrame =
+    embeddings(spark, dir).select(col("vec_id"), col("label"),
+      transform(col("embedding"), x => x.cast("double")).as("v"))
   def lineitem(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "customer")

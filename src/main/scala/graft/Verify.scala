@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,10 @@ object Verify {
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalSession.builder(cpus.toInt)
       // same input-size-derived shuffle width as Bench (AQE coalesces down)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         graft.sources.FileSizing.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -29,9 +23,7 @@ object Verify {
       }
       // session-scoped artifacts (Pinned) are exempt — they exist to be
       // reused across queries; everything else is per-query storage hygiene
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => graft.sources.Pinned.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
+      graft.sources.Pinned.releaseUnpinned(spark, blocking = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

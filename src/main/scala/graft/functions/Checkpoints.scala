@@ -5,14 +5,12 @@ import org.apache.spark.sql.DataFrame
 /** Eager `localCheckpoint` that reports WHICH RDD ids it pinned, so iterative
   * callers can later unpersist exactly their own superseded snapshots.
   *
-  * The pre-r5 pattern diffed the context-global persistent-RDD set at
-  * unpersist time; anything persisted by unrelated code in between (another
-  * query's localCheckpoint under concurrent suites) would be swept up, and a
-  * localCheckpointed RDD with dropped blocks is unrecomputable (ADVICE r4).
-  * The r5 form narrowed the window to the checkpoint call itself but was
-  * still a global before/after diff — a concurrent persist landing inside
-  * that window was mis-attributed and later dropped (ADVICE r5). Ownership is
-  * now derived from the returned frame ITSELF: the persisted ids are exactly
+  * Ownership is NOT a before/after diff of the context-global
+  * persistent-RDD set: anything persisted by unrelated code inside that
+  * window (another query's localCheckpoint under concurrent suites) would be
+  * mis-attributed and later dropped, and a localCheckpointed RDD with
+  * dropped blocks is unrecomputable. Ownership is instead derived from the
+  * returned frame ITSELF: the persisted ids are exactly
   * the persistent RDDs reachable in `cp.rdd`'s dependency lineage (the local
   * checkpoint persists the frame's own materialized RDD, so it — and nothing
   * owned by anyone else — is an ancestor of the frame returned). No global

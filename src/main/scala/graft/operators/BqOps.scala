@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.functions.Num._
 import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -40,7 +41,7 @@ object BqOps {
     */
   private def thresholds(spark: SparkSession, dir: String): Seq[Double] =
     Artifacts.memo("bq_stats", dir, Artifacts.corpusFingerprint(spark, dir)) {
-      PqOps.emb(spark, dir)
+      Tables.vectors(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos"))
         .agg((sum(fx(col("col"), 9)).cast("double") / 1e9 / count(lit(1))).as("mu"))
@@ -64,7 +65,7 @@ object BqOps {
     * reference array, compact codegen'd loop). */
   def codes(spark: SparkSession, dir: String): DataFrame = {
     val mu = thresholds(spark, dir)
-    PqOps.emb(spark, dir).select(col("vec_id"),
+    Tables.vectors(spark, dir).select(col("vec_id"),
       graft.plans.VectorFunctions.bq_pack(col("v"), mu, 0).as("lo"),
       graft.plans.VectorFunctions.bq_pack(col("v"), mu, WordBits).as("hi"))
   }
@@ -72,7 +73,7 @@ object BqOps {
   /** [[codes]] in the literal-fold form — BqSpec's kernel-equivalence twin. */
   private[graft] def codesLiteral(spark: SparkSession, dir: String): DataFrame = {
     val mu = thresholds(spark, dir)
-    PqOps.emb(spark, dir).select(col("vec_id"),
+    Tables.vectors(spark, dir).select(col("vec_id"),
       wordColLiteral(col("v"), mu, 0).as("lo"),
       wordColLiteral(col("v"), mu, WordBits).as("hi"))
   }

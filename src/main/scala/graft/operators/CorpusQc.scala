@@ -29,9 +29,6 @@ import org.apache.spark.sql.functions._
   * deterministic sample key — parallelism = #sources, no global order.
   */
 object CorpusQc {
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-
   private val words: Column = split(col("text"), "\\s+")
   private val M31 = 2147483648L
 
@@ -62,7 +59,7 @@ object CorpusQc {
     * multiply-referenced (the [[TextOps.fingerprint]] discipline).
     */
   private def grams(spark: SparkSession, dir: String, n: Int): DataFrame =
-    docs(spark, dir).select(col("doc_id"), hw.as("hw"))
+    Tables.documents(spark, dir).select(col("doc_id"), hw.as("hw"))
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), greatest(size(col("hw")) - n, lit(0))),
           i => gramDigest(col("hw"), i, n))).as("g"))
@@ -111,7 +108,7 @@ object CorpusQc {
         .agg(sum(col("cnt")).as(s"n_${p}grams"),
           max(col("cnt")).as(s"max_$p"),
           sum(when(col("cnt") > 1, col("cnt")).otherwise(0L)).as(s"dup_$p"))
-    val base = docs(spark, dir).select(col("doc_id"), size(words).cast("long").as("n_words"))
+    val base = Tables.documents(spark, dir).select(col("doc_id"), size(words).cast("long").as("n_words"))
     val top2 = r6(col("max_g2").cast("double") / col("n_g2grams").cast("double"))
     val dup2 = r6(col("dup_g2").cast("double") / col("n_g2grams").cast("double"))
     val dup5 = r6(col("dup_g5").cast("double") / col("n_g5grams").cast("double"))
@@ -152,7 +149,7 @@ object CorpusQc {
     val trainHits = g.filter(col("doc_id") % EvalMod =!= 0)
       .join(broadcast(evalG), "g")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    val trainBase = docs(spark, dir).filter(col("doc_id") % EvalMod =!= 0)
+    val trainBase = Tables.documents(spark, dir).filter(col("doc_id") % EvalMod =!= 0)
       .select(col("doc_id"),
         (greatest(size(words) - DecontamN, lit(0)) + 1).cast("long").as("n_shingles"))
     trainBase.join(trainHits, "doc_id")
@@ -212,7 +209,7 @@ object CorpusQc {
       .filter(mightContain)                       // map-side bloom prune
       .join(broadcast(evalG), "g")                // exact confirm: FPs drop here
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    val trainBase = docs(spark, dir).filter(col("doc_id") % EvalMod =!= 0)
+    val trainBase = Tables.documents(spark, dir).filter(col("doc_id") % EvalMod =!= 0)
       .select(col("doc_id"),
         (greatest(size(words) - DecontamN, lit(0)) + 1).cast("long").as("n_shingles"))
     trainBase.join(trainHits, "doc_id")
@@ -221,7 +218,7 @@ object CorpusQc {
   }
 
   private def chunks(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"), hw.as("hw"))
+    Tables.documents(spark, dir).select(col("doc_id"), hw.as("hw"))
       .filter(size(col("hw")) >= ChunkWords)
       .select(col("doc_id"),
         explode(transform(
@@ -274,7 +271,7 @@ object CorpusQc {
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("n_docs") >= ScrubMinDocs && col("doc_id") > col("keeper"), 1L)
           .otherwise(0L)).as("n_dropped"))
-    docs(spark, dir).select(col("doc_id"), size(words).cast("long").as("n_words"))
+    Tables.documents(spark, dir).select(col("doc_id"), size(words).cast("long").as("n_words"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_words"),
         coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
@@ -331,7 +328,7 @@ object CorpusQc {
     * mean is a broadcast single-row agg — no collect, no global sort.
     */
   def unigramNll(spark: SparkSession, dir: String): DataFrame = {
-    val tok = docs(spark, dir).select(col("doc_id"), explode(words).as("w"))
+    val tok = Tables.documents(spark, dir).select(col("doc_id"), explode(words).as("w"))
     val vocab = tok.groupBy("w").agg(count(lit(1)).as("cnt"))
     val tot = vocab.agg(sum(col("cnt")).as("tot"))
     val perDoc = tok.join(broadcast(vocab), "w").crossJoin(broadcast(tot))
@@ -367,14 +364,14 @@ object CorpusQc {
     * broadcast joins — text never shuffles.
     */
   def bigramNll(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = docs(spark, dir).select(col("doc_id"), words.as("ws"))
+    val pairs = Tables.documents(spark, dir).select(col("doc_id"), words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("ws")) - 1),
           i => struct(element_at(col("ws"), i).as("w1"),
             element_at(col("ws"), i + 1).as("w2")))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val uni = docs(spark, dir).select(explode(words).as("w1"))
+    val uni = Tables.documents(spark, dir).select(explode(words).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocabN = uni.agg(count(lit(1)).as("v"))
     val bi = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
@@ -406,14 +403,14 @@ object CorpusQc {
     * broadcast, text never shuffles).
     */
   def interpNll(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = docs(spark, dir).select(col("doc_id"), words.as("ws"))
+    val pairs = Tables.documents(spark, dir).select(col("doc_id"), words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("ws")) - 1),
           i => struct(element_at(col("ws"), i).as("w1"),
             element_at(col("ws"), i + 1).as("w2")))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val uni = docs(spark, dir).select(explode(words).as("w"))
+    val uni = Tables.documents(spark, dir).select(explode(words).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val tot = uni.agg(sum(col("c")).as("tot"))
     val bi = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
@@ -547,7 +544,7 @@ object CorpusQc {
     * aggs; the regression runs on a |sources|-row relation.
     */
   def heapsLaw(spark: SparkSession, dir: String): DataFrame = {
-    val pts = docs(spark, dir)
+    val pts = Tables.documents(spark, dir)
       .select(col("source"), explode(words).as("w"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_tokens"), countDistinct(col("w")).as("n_vocab"))
@@ -617,7 +614,7 @@ object CorpusQc {
         .cast("long"), lit(100L))
     val split = when(bucket < TrainPct, "train")
       .when(bucket === TrainPct, "val").otherwise("test")
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("source"), split.as("split"), size(words).cast("long").as("n_tokens"))
       .groupBy("source", "split")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
@@ -641,7 +638,7 @@ object CorpusQc {
     * discipline as the generators), then keep docs while the running token
     * count BEFORE the doc is inside the source's budget (so the first doc
     * always lands, and the doc that crosses the line is kept — budgets are
-    * soft floors, the packing convention). Block-parallel (r11): the
+    * soft floors, the packing convention). Block-parallel: the
     * per-source running sum recombines from monotone sample-key buckets via
     * [[EventsOps.blockedRankPrefix]], so no task sorts a whole source even
     * though `source` is a ~20-value vocabulary at any scale (the extended
@@ -650,7 +647,7 @@ object CorpusQc {
   def mixtureSample(spark: SparkSession, dir: String): DataFrame = {
     val srcIdx = substring(col("source"), 4, 8).cast("long")
     val u = R.u01(col("doc_id").cast("double"), 41)
-    val proj = docs(spark, dir)
+    val proj = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"),
         (lit(MixBaseBudget) * (lit(1L) + pmod(srcIdx, lit(3L)))).as("budget_tokens"),
         u.as("u"))
@@ -695,7 +692,7 @@ object CorpusQc {
     val redacted = regexp_replace(
       regexp_replace(regexp_replace(col("text"), EmailRe, "<pii>"), Ipv4Re, "<pii>"),
       LexiconRe, "<pii>")
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"),
         nLex.as("n_lexicon"), nEmail.as("n_email"), nIp.as("n_ipv4"),
         length(redacted).cast("long").as("n_chars_redacted"))
@@ -740,7 +737,7 @@ object CorpusQc {
     * floor(double)·cast — exact while P·T < 2^53.
     */
   def curriculum(spark: SparkSession, dir: String): DataFrame = {
-    val proj = docs(spark, dir)
+    val proj = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"))
     val bkt = EventsOps.longBuckets(proj, col("n_tokens"), EventsOps.SeriesBlockRows,
       Some(s"$dir#documents.n_tokens"))
@@ -803,7 +800,7 @@ object CorpusQc {
   def lengthHist(spark: SparkSession, dir: String): DataFrame = {
     val n = size(words).cast("long")
     val wSrc = Window.partitionBy("source")
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("source"), bucketLadder(n).as("bucket"), n.as("n_words"))
       .groupBy("source", "bucket")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_tokens"))
@@ -835,7 +832,7 @@ object CorpusQc {
     * and the rollup touches #sources rows.
     */
   def mixEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val per = docs(spark, dir)
+    val per = Tables.documents(spark, dir)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(size(words).cast("long")).as("n_tokens"))
       .withColumn("total", sum(col("n_tokens")).over(Window.partitionBy()))
@@ -888,7 +885,7 @@ object CorpusQc {
     * never moves.
     */
   def sourceDivergence(spark: SparkSession, dir: String): DataFrame = {
-    val tok = docs(spark, dir).select(col("source"), explode(words).as("w"))
+    val tok = Tables.documents(spark, dir).select(col("source"), explode(words).as("w"))
     val srcCnt = tok.groupBy("source", "w").agg(count(lit(1)).as("c_sw"))
     val srcTot = srcCnt.groupBy("source").agg(sum(col("c_sw")).as("tot_s"))
     val wCnt = srcCnt.groupBy("w").agg(sum(col("c_sw")).as("c_w"))
@@ -945,7 +942,7 @@ object CorpusQc {
     * is a 5-sum aggregate per source.
     */
   def zipfFit(spark: SparkSession, dir: String): DataFrame = {
-    val cnt = docs(spark, dir).select(col("source"), explode(words).as("w"))
+    val cnt = Tables.documents(spark, dir).select(col("source"), explode(words).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
     val byFreq = Window.partitionBy("source").orderBy(desc("c"), asc("w"))
     val top = cnt.withColumn("rnk", row_number().over(byFreq))

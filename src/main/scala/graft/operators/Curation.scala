@@ -58,10 +58,8 @@ object Curation {
   def trainingManifest(spark: SparkSession, dir: String): DataFrame = {
     val cells = PqOps.corpusCells(spark, dir)
       .withColumnRenamed("vec_id", "doc_id")
-    val norms = graft.Tables.embeddings(spark, dir)
+    val norms = graft.Tables.vectors(spark, dir)
       .select(col("vec_id").as("doc_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .select(col("doc_id"),
         r6(sqrt(aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x))).as("emb_norm"))
     curated(spark, dir).join(cells, "doc_id").join(norms, "doc_id")
   }

@@ -208,7 +208,7 @@ object EvalOps {
     val k = math.max(1L, stats.getLong(1) * HhNum / HhDen)
     // misraGries sizes a per-partition array of k counters; past Int.MaxValue
     // the .toInt below would silently go negative and make every summary
-    // empty (zero rows instead of heavy hitters — ADVICE r7). Fail loudly:
+    // empty (zero rows instead of heavy hitters). Fail loudly:
     // at that cardinality the n/k threshold is ~1 event and the operator is
     // the wrong tool anyway (use the CMS/TopK sketch path).
     require(k <= Int.MaxValue.toLong,
@@ -413,8 +413,8 @@ object EvalOps {
     * (2·r·10⁶ + n) div (2n), exact in both engines — then sums (p6 − y·10⁶)²
     * (each term ≤ 10¹²) as DECIMAL(38,0), so the numerator never wraps:
     * BIGINT Σ(r − y·n)² grows O(n³) and overflows past ~4·10⁶ events where
-    * DuckDB would silently promote to HUGEINT and the engines diverge
-    * (ADVICE r7). The |gap|-weighted sum over bins is the ECE readout a
+    * DuckDB would silently promote to HUGEINT and the engines diverge.
+    * The |gap|-weighted sum over bins is the ECE readout a
     * monitoring page derives from this table.
     */
   def calibration(spark: SparkSession, dir: String): DataFrame = {
@@ -773,13 +773,13 @@ object EvalOps {
     // broadcast the BOUNDED side: `a` is the ≤ UserSimRecallMaxQ query panel
     // (plan-time-capped by the limit above); `b` is the full per-user pivot,
     // which grows with corpus size and must stay on the scanned side or the
-    // broadcast OOMs at 100× users (VERDICT r8 finding #1).
+    // broadcast OOMs at 100× users.
     val scored = b.crossJoin(broadcast(a))
       .filter(col("ua") =!= col("ub"))
       // drop zero-overlap pairs (dot = 0): the oracle's inner join on
       // event_type never produces them, and on sparse data a flood of
       // cos = 0 rows would otherwise fill the top-k with ties the oracle
-      // doesn't have (ADVICE r7). Counts are positive, so dot > 0 iff the
+      // doesn't have. Counts are positive, so dot > 0 iff the
       // two users share at least one event type — exactly the oracle's
       // pair space.
       .filter(dot > 0L)
@@ -855,13 +855,6 @@ object EvalOps {
   private val userSimBitThresholds: Seq[(Long, Int)] =
     (2 until UserSimMaxBits).map(k => (UserSimTargetBucket.toLong << k, k))
 
-  /** Dev-audit accessor: the (user_id, band, bkey) frame the blocked
-    * similarity joins on, for bucket-distribution measurement
-    * ([[graft.SimBlockAudit]]).
-    */
-  private[graft] def userSimBandsDebug(spark: SparkSession, dir: String): DataFrame =
-    bandsOfSigs(userSimParts(spark, dir)._2)
-
   private def bandsOfSigs(sigs: DataFrame): DataFrame =
     sigs.select(col("user_id"), col("dirp"),
       explode(array((0 until UserSimBands).map(b =>
@@ -870,8 +863,8 @@ object EvalOps {
         col("bk.band").as("band"), col("bk.bkey").as("bkey"))
 
   /** (cnt, sigs): the checkpointed (user, type, n) counts and the SRP band
-    * signatures (user_id, nrm2, k0..k{bands-1}). Extracted so the audit tool
-    * and the blocked operator share one construction. */
+    * signatures (user_id, nrm2, dirp, k0..k{bands-1}) that
+    * [[userSimilarityBlocked]] scores and blocks on. */
   private def userSimParts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.functions.DetRand
     val nPlanes = UserSimBands * UserSimMaxBits
@@ -921,9 +914,9 @@ object EvalOps {
     (cnt, sigs)
   }
 
-  /** Blocked twin of [[userSimilarity]] — the shape that survives 100 TB
-    * (VERDICT r7 flagged the brute force as the one registered plan that
-    * doesn't): candidate pairs come from sign-random-projection (SimHash)
+  /** Blocked twin of [[userSimilarity]] — the shape that survives 100 TB,
+    * where the brute force's users² crossJoin does not: candidate pairs
+    * come from sign-random-projection (SimHash)
     * band keys over the type-count vectors, not a crossJoin. Each user's
     * vector is projected onto [[UserSimBands]] bands of corpus-adaptive
     * nbits = ⌈log2(users/[[UserSimTargetBucket]])⌉ deterministic
@@ -997,7 +990,7 @@ object EvalOps {
         Seq("ub", "event_type"))
       .groupBy("ua", "ub").agg(sum(col("na") * col("nb")).as("dot"))
     // no broadcast hint on norms: it has one row per USER, so its size scales
-    // with the base table (VERDICT r8 finding #2). AQE picks broadcast when
+    // with the base table. AQE picks broadcast when
     // the runtime size is actually small; at scale this stays a shuffle join
     // keyed by the already-bounded candidate set.
     val norms = sigs.select(col("user_id"), col("nrm2"))

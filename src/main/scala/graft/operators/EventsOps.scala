@@ -1200,13 +1200,12 @@ object EventsOps {
   private val Quantiles = Seq(0.25 -> "q25", 0.5 -> "q50", 0.75 -> "q75", 0.99 -> "q99")
 
   /** Scale-safe per-key quantiles: sort-based rank selection — the 100-TB
-    * form of [[valueQuantiles]] (VERDICT r2 "what's wrong #2": exact
-    * `percentile` materializes one value array per group, a scale-killer when
-    * a group is ~20% of the table).
+    * form of [[valueQuantiles]] (exact `percentile` materializes one value
+    * array per group, a scale-killer when a group is ~20% of the table).
     *
     * Shape: per-key counts (tiny, broadcast back) → block-parallel
-    * [[blockedRank]] over value buckets (r10: the per-key row_number window
-    * this used before was itself a one-task-per-key sort) → keep only the
+    * [[blockedRank]] over value buckets (a per-key row_number window would
+    * itself be a one-task-per-key sort) → keep only the
     * ≤ 8 rank-boundary rows per key → tiny final agg interpolating lo/hi
     * neighbors (quantile_cont semantics, pos = (n−1)·q). No whole-key sort,
     * no unbounded per-group aggregation buffer anywhere in the plan — while
@@ -1447,7 +1446,7 @@ object EventsOps {
       // its own (day, NULL) pair here, but count(DISTINCT user_id) — both the
       // old form and the oracle — ignores nulls, as approx_count_distinct
       // still does; counting it would silently skew hll_within_tol on
-      // nullable inputs (ADVICE r10). n_events keeps every row either way.
+      // nullable inputs. n_events keeps every row either way.
       .agg(approx_count_distinct(col("user_id"), HllRsd).as("approx"),
         count(col("user_id")).as("n_users_exact"),
         sum(col("c")).as("n_events"))
@@ -2808,7 +2807,7 @@ object EventsOps {
     * per-bin count/bounds/mean. The deterministic tiebreak makes the binning
     * total-ordered, so both engines assign identical bins.
     *
-    * EXACT and block-parallel (r10): ntile is pure rank arithmetic, so the
+    * EXACT and block-parallel: ntile is pure rank arithmetic, so the
     * per-type ntile window (one whole-type sort per task) collapses onto
     * [[blockedRank]] + the standard bucket closed form — with n rows and b
     * buckets, q = n div b and r = n mod b, buckets 1..r hold q+1 rows and
@@ -2972,8 +2971,8 @@ object EventsOps {
 
   /** Heavy per-series queries default to the sf-scaling `user_id` key (15 →
     * 1,500 series across sf0.001 → sf0.1): window + DFT parallelism then grows
-    * with the data instead of pinning at the 5 distinct event_types
-    * (VERDICT r1 "what's wrong #1b"). `ts_decompose`/`ts_decompose_mse` stay
+    * with the data instead of pinning at the 5 distinct event_types (five
+    * tasks at any scale). `ts_decompose`/`ts_decompose_mse` stay
     * event_type-keyed as the parity queries with the reference's few-series
     * decomposition shape (models/diffusion_ts_model.py:200-290).
     */

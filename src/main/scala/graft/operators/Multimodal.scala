@@ -51,7 +51,7 @@ object Multimodal {
     */
   private def sampleStats(row: MediaRow, n: Int, sample: Int => Int): MediaFeatures = {
     // an empty sample domain would make mean_byte NaN and silently propagate;
-    // fail loudly like the decoders' other error paths (ADVICE r8)
+    // fail loudly like the decoders' other error paths
     require(n > 0, s"media_id=${row.media_id}: empty sample stream")
     var sum = 0L
     var mx = 0

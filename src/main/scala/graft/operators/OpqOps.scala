@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.functions.Num._
 import graft.sources.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -41,60 +42,17 @@ import org.apache.spark.sql.functions._
   */
 object OpqOps {
   import PqOps.{Codebook, Dim, M, SubDim}
+  import Similarity.EigenBasis
 
   /** Eigenpairs surfaced by `emb_pca_basis` (full [[Dim]] are fit for the
     * rotation; the query shows the informative head of the spectrum). */
   val BasisK = 8
 
-  /** (eigenvalue, loadings) per extraction rank p — loadings(p)(d). */
-  private[graft] final case class EigenBasis(
-      values: Array[Double], loadings: Array[Array[Double]])
-
-  /** Deflated power iteration over a Dim×Dim r6 covariance, replicating the
-    * [[Similarity.pcaTop]] fx discipline per step: w = fx9-matvec(cov, v);
-    * v' = r6(w / max(|w|_fx, 1e-9)); after [[Similarity.PcaIters]] steps
-    * λ = fx9-dot(v, matvec(v)) and cov deflates to r9(cov − λ v vᵀ).
-    */
-  private[graft] def deflatedBasis(cov0: Array[Array[Double]], k: Int): EigenBasis = {
-    val n = Dim
-    val cov = Array.tabulate(n * n)(p => cov0(p / n)(p % n))
-    def fx9(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
-    def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    def r9d(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
-    def matVec(v: Array[Double]): Array[Double] =
-      Array.tabulate(n) { d1 =>
-        var acc = 0L; var d2 = 0
-        while (d2 < n) { acc += fx9(cov(d1 * n + d2) * v(d2)); d2 += 1 }
-        acc / 1e9
-      }
-    def fxDot(a: Array[Double], b: Array[Double]): Double =
-      a.indices.map(i => fx9(a(i) * b(i))).sum / 1e9
-    val values = new Array[Double](k)
-    val loadings = new Array[Array[Double]](k)
-    for (p <- 0 until k) {
-      var v = Array.fill(n)(0.125) // 1/sqrt(64): exact in binary
-      for (_ <- 1 to Similarity.PcaIters) {
-        val w = matVec(v)
-        val nrm = math.max(math.sqrt(fxDot(w, w)), 1e-9)
-        v = w.map(x => r6d(x / nrm))
-      }
-      val lam = fxDot(v, matVec(v))
-      values(p) = lam
-      loadings(p) = v
-      var i = 0
-      while (i < n * n) {
-        cov(i) = r9d(cov(i) - lam * v(i / n) * v(i % n))
-        i += 1
-      }
-    }
-    EigenBasis(values, loadings)
-  }
-
   /** The basis is an index like the IVF quantizer and PQ codebooks: fit once
     * per corpus, refit when the embeddings' listing changes. */
   private[graft] def basisFor(spark: SparkSession, dir: String): EigenBasis =
     Artifacts.memo("opq_basis", dir, Artifacts.corpusFingerprint(spark, dir))(
-      deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim))
+      Similarity.deflatedBasis(Similarity.covarianceR6(spark, dir)._2, Dim))
 
   /** Snake-draft eigenvalue allocation: extraction rank p → subspace slot.
     * Round r = p / M deals one eigenvector to every subspace, reversing
@@ -121,7 +79,7 @@ object OpqOps {
     * codegen'd projection. */
   private[graft] def rotated(spark: SparkSession, dir: String): DataFrame = {
     val rot = rotationMatrix(basisFor(spark, dir))
-    PqOps.emb(spark, dir)
+    Tables.vectors(spark, dir)
       .select(col("vec_id"),
         graft.plans.VectorFunctions.mat_vec_fx(col("v"), rot).as("v"))
   }
@@ -162,7 +120,7 @@ object OpqOps {
   private def pcaTopKWidth(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val mat: Seq[Seq[Double]] =
       (0 until PcaD).map(p => basisFor(spark, dir).loadings(p).toSeq)
-    val proj = PqOps.emb(spark, dir).select(col("vec_id"),
+    val proj = Tables.vectors(spark, dir).select(col("vec_id"),
       graft.plans.VectorFunctions.mat_vec_fx(col("v"), mat).as("pv"))
     rankReduced(proj, k)
   }
@@ -194,7 +152,7 @@ object OpqOps {
     * mat-vec; `slice` keeps the stage in whole-stage codegen.
     */
   def prefixTopK(spark: SparkSession, dir: String): DataFrame = {
-    val proj = PqOps.emb(spark, dir)
+    val proj = Tables.vectors(spark, dir)
       .select(col("vec_id"), slice(col("v"), 1, PcaD).as("pv"))
     rankReduced(proj, PqOps.TopK)
   }
@@ -211,8 +169,8 @@ object OpqOps {
   def pcaRerankTopK(spark: SparkSession, dir: String): DataFrame = {
     val short = pcaTopKWidth(spark, dir, PqOps.RerankWidth)
       .select(col("qid"), col("neighbor_id").as("vec_id"))
-    val e = PqOps.emb(spark, dir).select(col("vec_id"), col("v"))
-    val q = PqOps.emb(spark, dir).filter(col("vec_id") < Similarity.NumQueries)
+    val e = Tables.vectors(spark, dir).select(col("vec_id"), col("v"))
+    val q = Tables.vectors(spark, dir).filter(col("vec_id") < Similarity.NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val exact = short.join(e, "vec_id").join(broadcast(q), "qid")
       .withColumn("dist", r6(graft.plans.VectorFunctions.l2_sq(col("qv"), col("v"))))
@@ -247,7 +205,7 @@ object OpqOps {
 
   /** The deflated power iteration as a recursive CTE over single-row list
     * state (v, flattened cov, accumulated loads/vals) — k·(PcaIters+1) steps,
-    * every quantization mirrored from [[deflatedBasis]]. List literals/state
+    * every quantization mirrored from [[Similarity.deflatedBasis]]. List literals/state
     * must be CAST to DOUBLE[]: a bare 0.125 types as DECIMAL(4,3) and the
     * UNION ALL would silently quantize the whole recursion to 3 decimals.
     */

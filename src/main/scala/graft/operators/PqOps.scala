@@ -47,11 +47,6 @@ object PqOps {
   val TopK = 10
   val NumQueries = 100
 
-  private[operators] def emb(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-
   /** Codebook: (subspace m, codeword c, SubDim weights), r6-rounded. */
   private[operators] type Codebook = Seq[(Int, Int, Seq[Double])]
 
@@ -65,23 +60,24 @@ object PqOps {
   private[operators] def codesArray(cb: Codebook, subDim: Int = SubDim): Column =
     graft.plans.VectorFunctions.pq_codes(col("v"), subDim, cb)
 
-  /** Lloyd fit of all [[M]] codebooks at once: seed with the first [[K]]
-    * vectors' subvectors, then per iteration ONE distributed aggregation
-    * (encode inline against the literal codebooks + per-(m, c, sd) mean) and
-    * a ≤ M·K·SubDim = 1,024-value collect — the same driver-side
-    * literal-folding budget as the IVF quantizer. Codewords that lose every
-    * vector simply drop out of the next round's literals (both engines drop
-    * them identically).
+  /** Lloyd fit of all `numSub` codebooks at once (one subspace: the IVF
+    * coarse quantizer): seed with the first `k` vectors' subvectors, then per
+    * iteration ONE distributed aggregation (encode inline against the literal
+    * codebooks + per-(m, c, sd) r6 mean, so the oracle's arbitrary-order
+    * averages agree) and a ≤ k·Dim = 1,024-value collect. Codewords that lose
+    * every vector simply drop out of the next round's literals (both engines
+    * drop them identically).
     */
-  private[operators] def lloydPq(e: DataFrame, numSub: Int = M): Codebook = {
+  private[operators] def lloydPq(
+      e: DataFrame, numSub: Int = M, iters: Int = Iters, k: Int = K): Codebook = {
     val subDim = Dim / numSub
-    var cb: Codebook = e.filter(col("vec_id") < K)
+    var cb: Codebook = e.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("c"), col("v")).collect()
       .flatMap { r =>
         val c = r.getInt(0); val v = r.getSeq[Double](1)
         (0 until numSub).map(m => (m, c, v.slice(m * subDim, (m + 1) * subDim).toSeq))
       }.toSeq.sortBy(t => (t._1, t._2))
-    for (_ <- 1 to Iters) {
+    for (_ <- 1 to iters) {
       cb = e.select(codesArray(cb, subDim).as("codes"), posexplode(col("v")))
         .select(expr(s"pos div $subDim").cast("int").as("m"),
           pmod(col("pos"), lit(subDim)).cast("int").as("sd"),
@@ -101,7 +97,7 @@ object PqOps {
   private def fittedM(spark: SparkSession, dir: String, numSub: Int): Codebook =
     Artifacts.memo("pq_codebook", s"$dir#m=$numSub", Artifacts.corpusFingerprint(spark, dir)) {
       val (e, ids) = graft.functions.Checkpoints.tracked(
-        emb(spark, dir).select("vec_id", "v"))
+        Tables.vectors(spark, dir).select("vec_id", "v"))
       try lloydPq(e, numSub)
       finally graft.functions.Checkpoints.release(e, ids, blocking = true)
     }
@@ -122,7 +118,7 @@ object PqOps {
     */
   def codes(spark: SparkSession, dir: String): DataFrame = {
     val cb = fitted(spark, dir)
-    emb(spark, dir)
+    Tables.vectors(spark, dir)
       .select(col("vec_id"), posexplode(codesArray(cb)))
       .select(col("vec_id"), col("pos").cast("int").as("m"), col("col").as("code"))
   }
@@ -144,7 +140,7 @@ object PqOps {
   def adcTopKM(spark: SparkSession, dir: String, numSub: Int): DataFrame = {
     val subDim = Dim / numSub
     val cb = fittedM(spark, dir, numSub).sortBy(t => (t._1, t._2))
-    adcTopKOver(emb(spark, dir), cb, subDim)
+    adcTopKOver(Tables.vectors(spark, dir), cb, subDim)
   }
 
   /** ADC top-k over an explicit (vec_id, v) frame — the body shared by the
@@ -176,7 +172,7 @@ object PqOps {
     * honest baseline is the exact L2² top-k, not the cosine one).
     */
   def bfL2TopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = e.crossJoin(broadcast(q))
@@ -229,7 +225,7 @@ object PqOps {
     * cell-membership invariant. */
   def corpusCells(spark: SparkSession, dir: String): DataFrame = {
     val cent = centroids(spark, dir)
-    emb(spark, dir).select(col("vec_id"),
+    Tables.vectors(spark, dir).select(col("vec_id"),
       array_min(array(cellPairs(cent): _*)).getItem(1).cast("int").as("cell"))
   }
 
@@ -237,7 +233,7 @@ object PqOps {
     * coarse cells per query. */
   def probedCells(spark: SparkSession, dir: String): DataFrame = {
     val cent = centroids(spark, dir)
-    emb(spark, dir).filter(col("vec_id") < NumQueries)
+    Tables.vectors(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"),
         posexplode(slice(array_sort(array(cellPairs(cent): _*)), 1, Similarity.NProbe)))
       .select(col("qid"), col("col").getItem(1).cast("int").as("cell"))
@@ -267,8 +263,8 @@ object PqOps {
   def ivfPqRerankTopK(spark: SparkSession, dir: String): DataFrame = {
     val short = ivfPqTopKWidth(spark, dir, RerankWidth)
       .select(col("qid"), col("neighbor_id").as("vec_id"))
-    val e = emb(spark, dir).select(col("vec_id"), col("v"))
-    val q = emb(spark, dir).filter(col("vec_id") < NumQueries)
+    val e = Tables.vectors(spark, dir).select(col("vec_id"), col("v"))
+    val q = Tables.vectors(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val exact = short.join(e, "vec_id").join(broadcast(q), "qid")
       .withColumn("dist", r6(l2_sq(col("qv"), col("v"))))
@@ -281,7 +277,7 @@ object PqOps {
   private def ivfPqTopKWidth(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val cent = centroids(spark, dir)
     val cb = fitted(spark, dir).sortBy(t => (t._1, t._2))
-    val e = emb(spark, dir).select("vec_id", "v")
+    val e = Tables.vectors(spark, dir).select("vec_id", "v")
     val corpus = e.select(col("vec_id"),
         array_min(array(cellPairs(cent): _*)).getItem(1).cast("int").as("cell"),
         posexplode(graft.plans.VectorFunctions.pq_codes(col("v"), SubDim, cb)))
@@ -461,7 +457,7 @@ object PqOps {
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
     val cb = fitted(spark, dir)
     val posM = cb.map(_._1) // table position → subspace id (codewords may drop)
-    val perVec = emb(spark, dir)
+    val perVec = Tables.vectors(spark, dir)
       .select(col("vec_id"),
         posexplode(graft.plans.VectorFunctions.pq_dists(col("v"), SubDim, cb)))
       .select(col("vec_id"),

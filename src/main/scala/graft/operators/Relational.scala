@@ -1286,7 +1286,7 @@ object Relational {
   val PivotTypes = Seq("click", "error", "purchase", "signup", "view")
 
   /** Long→wide reshaping: per-user event counts pivoted to one column per
-    * event_type. Plans as two chained hash aggregates (PlanAudit-checked):
+    * event_type. Plans as two chained hash aggregates:
     * a (user, type) count whose partial agg collapses map-side, then a
     * per-user PivotFirst packing the ≤ |PivotTypes| rows into columns — so
     * everything that shuffles is ∝ users × types, never raw events, and the

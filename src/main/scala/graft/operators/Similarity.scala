@@ -38,14 +38,9 @@ object Similarity {
   val Dim = 64
   val NumQueries = 100 // query subset: vec_id < 100
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-
   /** Brute-force cosine top-k for the query subset. */
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = e.crossJoin(broadcast(q))
@@ -64,7 +59,7 @@ object Similarity {
 
   /** Sign-bucket per vector: bucket = Σ_h [v·w_h > 0]·2^h. */
   def buckets(spark: SparkSession, dir: String): DataFrame = {
-    val flat = emb(spark, dir)
+    val flat = Tables.vectors(spark, dir)
       .select(col("vec_id"), col("label"), posexplode(col("v")))
       .withColumnRenamed("pos", "d").withColumnRenamed("col", "x")
     flat.join(broadcast(hyperplanes(spark)), "d")
@@ -78,7 +73,7 @@ object Similarity {
   //
   // The single 8-plane table above is a fixed 256-bucket keyspace: candidate
   // parallelism caps at 256 and per-bucket volume is corpus/256 — the one
-  // structural scale ceiling VERDICT r4 flagged. The production remedy is
+  // structural scale ceiling of that design. The production remedy is
   // MORE planes (bucket volume shrinks ~2^P, geometrically) plus MULTIPLE
   // OR-ed tables (recall recovers ~1−(1−r)^L). Both are constructor
   // parameters here (the Dedup band-structure pattern, Dedup.scala bands×rows)
@@ -100,7 +95,7 @@ object Similarity {
 
   /** Per-table sign-bucket: one (vec_id, t, bucket) row per vector per table. */
   def bucketsT(spark: SparkSession, dir: String, tables: Int, planes: Int): DataFrame = {
-    val flat = emb(spark, dir)
+    val flat = Tables.vectors(spark, dir)
       .select(col("vec_id"), posexplode(col("v")))
       .withColumnRenamed("pos", "d").withColumnRenamed("col", "x")
     flat.join(broadcast(hyperplanesT(spark, tables, planes)), "d")
@@ -126,7 +121,7 @@ object Similarity {
   /** Multi-table LSH top-k: OR-ed candidates, scored on the fused cosine. */
   def lshTablesTopK(spark: SparkSession, dir: String,
       tables: Int = 2, planes: Int = NumPlanes): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = lshCandidates(spark, dir, tables, planes)
@@ -161,7 +156,7 @@ object Similarity {
 
   /** LSH top-k: same scoring as brute force but only within matching buckets. */
   def lshTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).join(buckets(spark, dir), "vec_id")
+    val e = Tables.vectors(spark, dir).join(buckets(spark, dir), "vec_id")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("bucket"))
     val scored = e.join(broadcast(q), "bucket")
@@ -192,7 +187,7 @@ object Similarity {
   }
 
   def lshMultiprobeTopK(spark: SparkSession, dir: String, radius: Int = 1): DataFrame = {
-    val e = emb(spark, dir).join(buckets(spark, dir), "vec_id")
+    val e = Tables.vectors(spark, dir).join(buckets(spark, dir), "vec_id")
     val probes = array(probeMasks(radius).map(m => col("bucket").bitwiseXOR(lit(m))): _*)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), explode(probes).as("bucket"))
@@ -236,26 +231,11 @@ object Similarity {
       cent.map { case (c, w) => (0, c, w) }).getItem(0)
   }
 
-  /** Lloyd iterations with driver-folded centroids: each iteration is ONE
-    * distributed aggregation (assign inline + per-(c, d) mean) plus a
-    * 1,024-value collect. Updated coordinates are r6-rounded each iteration —
-    * the same round-before-reuse rule as the DFT bins — so the oracle's
-    * arbitrary-order averages agree with Spark's and every assignment matches.
-    */
-  private def lloydCentroids(e: DataFrame): Seq[(Int, Seq[Double])] = {
-    var cent: Seq[(Int, Seq[Double])] = e.filter(col("vec_id") < KMeansK)
-      .select(col("vec_id").cast("int").as("c"), col("v")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toSeq.sortBy(_._1)
-    for (_ <- 1 to KMeansIters) {
-      cent = e.select(assignLit(cent).as("c"), posexplode(col("v")))
-        .groupBy(col("c"), col("pos").as("d"))
-        .agg(r6(avg(col("col"))).as("w"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        .groupBy(_._1).map { case (c, rows) => c -> rows.sortBy(_._2).map(_._3).toSeq }
-        .toSeq.sortBy(_._1)
-    }
-    cent
-  }
+  /** The IVF quantizer's Lloyd fit: [[PqOps.lloydPq]] over one subspace of
+    * [[Dim]] dims, [[KMeansIters]] iterations from the first [[KMeansK]]. */
+  private def lloydCentroids(e: DataFrame): Seq[(Int, Seq[Double])] =
+    PqOps.lloydPq(e, numSub = 1, iters = KMeansIters, k = KMeansK)
+      .map { case (_, c, w) => c -> w }
 
   /** The trained coarse quantizer is an index, not a query result: real IVF
     * systems fit it once per corpus and every search reuses it, so it is
@@ -275,7 +255,7 @@ object Similarity {
       // the centroid Seq is extracted, or every fit would leave its blocks
       // pinned for the life of the process
       val (e, ids) = graft.functions.Checkpoints.tracked(
-        emb(spark, dir).select("vec_id", "v"))
+        Tables.vectors(spark, dir).select("vec_id", "v"))
       try lloydCentroids(e)
       finally graft.functions.Checkpoints.release(e, ids, blocking = true)
     }
@@ -287,7 +267,7 @@ object Similarity {
     * cosine. The learned-coarse-quantizer twin of [[lshTopK]].
     */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select("vec_id", "v").localCheckpoint(true)
+    val e = Tables.vectors(spark, dir).select("vec_id", "v").localCheckpoint(true)
     val buckets = e.select(col("vec_id"), assignLit(quantizerFor(spark, dir)(lloydCentroids(e))).as("c"))
     val eb = e.join(buckets, "vec_id")
     val q = eb.filter(col("vec_id") < NumQueries)
@@ -312,7 +292,7 @@ object Similarity {
     * vectors keep their single-cell assignment, so pairs need no dedup.
     */
   def ivfTopKNprobe(spark: SparkSession, dir: String, nprobe: Int = NProbe): DataFrame = {
-    val e = emb(spark, dir).select("vec_id", "v").localCheckpoint(true)
+    val e = Tables.vectors(spark, dir).select("vec_id", "v").localCheckpoint(true)
     val cent = quantizerFor(spark, dir)(lloydCentroids(e))
     val eb = e.join(e.select(col("vec_id"), assignLit(cent).as("c")), "vec_id")
     val pairs = cent.map { case (c, w) =>
@@ -332,9 +312,8 @@ object Similarity {
   }
 
   /** Recall@k of a bucketed top-k against the brute-force ground truth — the
-    * measurement VERDICT r2 called out as the missing signal for tuning
-    * NumPlanes / KMeansK / nprobe: without it "the ANN still returns good
-    * neighbors at scale" is asserted, not quantified.
+    * signal for tuning NumPlanes / KMeansK / nprobe: without it "the ANN
+    * still returns good neighbors at scale" is asserted, not quantified.
     *
     * Per-query hit flags roll up to one row per qid plus a grand-total row
     * (qid = −1): recall = avg(hit), since brute force always emits exactly
@@ -390,8 +369,8 @@ object Similarity {
     * size.
     */
   def dimStats(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.embeddings(spark, dir)
-      .select(posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("dim", "x")))
+    Tables.vectors(spark, dir)
+      .select(posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("dim")
       .agg(count(lit(1)).as("n"),
         r6(avg(col("x"))).as("mean"),
@@ -440,9 +419,8 @@ object Similarity {
     */
   def drift(spark: SparkSession, dir: String): DataFrame = {
     val isRef = col("vec_id") % 2 === 0
-    val agg = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("dim", "x")))
+    val agg = Tables.vectors(spark, dir)
+      .select(col("vec_id"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("dim")
       .agg(count(when(isRef, 1)).as("n_ref"), count(when(!isRef, 1)).as("n_cur"),
         r6(avg(when(isRef, col("x")))).as("mean_ref"),
@@ -455,7 +433,7 @@ object Similarity {
       smd.as("smd"), (abs(smd) > DriftSmdThreshold).as("drifted"))
   }
 
-  /** Power-iteration steps for [[pcaTop]]. */
+  /** Power-iteration steps per eigenpair of [[deflatedBasis]]. */
   val PcaIters = 8
 
   /** Per-dimension r6 means and the r6-rounded Dim×Dim covariance of the
@@ -469,7 +447,7 @@ object Similarity {
     val mu: Array[Double] = dimStats(spark, dir).select("dim", "mean").collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2)
     val muLit = typedLit(mu.toSeq)
-    val flat = emb(spark, dir)
+    val flat = Tables.vectors(spark, dir)
       .select(posexplode(col("v")).as(Seq("d1", "x1")), col("v"))
       .select(col("d1"), (col("x1") - element_at(muLit, col("d1") + 1)).as("xc1"),
         posexplode(col("v")))
@@ -481,6 +459,53 @@ object Similarity {
     (mu, cov)
   }
 
+  /** (eigenvalue, loadings) per extraction rank p — loadings(p)(d). */
+  private[graft] final case class EigenBasis(
+      values: Array[Double], loadings: Array[Array[Double]])
+
+  /** Top `k` eigenpairs of a Dim×Dim r6 covariance by deflated power
+    * iteration ([[pcaTop]]: k = 1; [[OpqOps]]: k = Dim). Per rank,
+    * [[PcaIters]] steps from the uniform unit vector: w = fx9-matvec(cov, v);
+    * v' = r6(w / max(|w|_fx, 1e-9)); then λ = fx9-dot(v, matvec(v)) and cov
+    * deflates to r9(cov − λ v vᵀ). Sums are of LONGs quantized at 1e-9 (the
+    * [[graft.functions.Num.fx]] discipline) and sqrt/division are exact in
+    * IEEE754, so the DuckDB oracle replays every r6 iterate bit-for-bit.
+    */
+  private[graft] def deflatedBasis(cov0: Array[Array[Double]], k: Int): EigenBasis = {
+    val n = Dim
+    val cov = Array.tabulate(n * n)(p => cov0(p / n)(p % n))
+    def fx9(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
+    def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+    def r9d(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
+    def matVec(v: Array[Double]): Array[Double] =
+      Array.tabulate(n) { d1 =>
+        var acc = 0L; var d2 = 0
+        while (d2 < n) { acc += fx9(cov(d1 * n + d2) * v(d2)); d2 += 1 }
+        acc / 1e9
+      }
+    def fxDot(a: Array[Double], b: Array[Double]): Double =
+      a.indices.map(i => fx9(a(i) * b(i))).sum / 1e9
+    val values = new Array[Double](k)
+    val loadings = new Array[Array[Double]](k)
+    for (p <- 0 until k) {
+      var v = Array.fill(n)(0.125) // 1/sqrt(64): exact in binary
+      for (_ <- 1 to PcaIters) {
+        val w = matVec(v)
+        val nrm = math.max(math.sqrt(fxDot(w, w)), 1e-9)
+        v = w.map(x => r6d(x / nrm))
+      }
+      val lam = fxDot(v, matVec(v))
+      values(p) = lam
+      loadings(p) = v
+      var i = 0
+      while (i < n * n) {
+        cov(i) = r9d(cov(i) - lam * v(i / n) * v(i % n))
+        i += 1
+      }
+    }
+    EigenBasis(values, loadings)
+  }
+
   /** Top principal component of the embedding corpus + its explained-variance
     * ratio — the spectral step after [[dimStats]]' per-dim moments: which
     * direction carries the corpus' variance (feeds whitening rotations / OPQ
@@ -490,12 +515,8 @@ object Similarity {
     * partial products per vector that collapse map-side, so shuffle volume is
     * #partitions × Dim² regardless of corpus size (at 100 TB this moment agg
     * IS the cost; the same shape Spark MLlib's PCA uses). The 64×64 solve is
-    * then a driver-side constant-size fold like the centroid literals:
-    * [[PcaIters]] power-iteration steps from the uniform unit vector, each
-    * mat-vec and norm quantized to LONGs at 1e-9 before summing (the
-    * [[graft.functions.Num.fx]] discipline) so the DuckDB oracle replays the
-    * identical arithmetic order-independently; sqrt and division are exactly
-    * specified by IEEE754, so iterates match bit-for-bit after each r6.
+    * then a driver-side constant-size fold like the centroid literals: rank
+    * 0 of [[deflatedBasis]].
     *
     * Output: one row per dimension (mean, loading) with the eigenvalue and
     * explained-variance ratio replicated — defined as "the [[PcaIters]]-step
@@ -504,28 +525,10 @@ object Similarity {
   def pcaTop(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (mu, cov) = covarianceR6(spark, dir)
-
-    // driver-side constant-size solve, fx9-quantized mat-vec and norms so the
-    // SQL twin's arbitrary-order sums agree exactly
-    def matVec(v: Array[Double]): Array[Double] =
-      Array.tabulate(Dim) { d1 =>
-        var acc = 0L
-        var d2 = 0
-        while (d2 < Dim) { acc += math.floor(cov(d1)(d2) * v(d2) * 1e9 + 0.5).toLong; d2 += 1 }
-        acc.toDouble / 1e9
-      }
-    def fxDot(a: Array[Double], b: Array[Double]): Double =
-      a.indices.map(i => math.floor(a(i) * b(i) * 1e9 + 0.5).toLong).sum.toDouble / 1e9
     def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
-    var v = Array.fill(Dim)(0.125) // 1/sqrt(64): exact in binary
-    for (_ <- 1 to PcaIters) {
-      val w = matVec(v)
-      val nrm = math.sqrt(fxDot(w, w))
-      v = w.map(x => r6d(x / nrm))
-    }
-    val w9 = matVec(v)
-    val lambda = fxDot(v, w9)
+    val top = deflatedBasis(cov, 1)
+    val v = top.loadings(0)
+    val lambda = top.values(0)
     val trace = (0 until Dim).map(d => math.floor(cov(d)(d) * 1e9 + 0.5).toLong).sum.toDouble / 1e9
     val ratio = r6d(lambda / trace)
     (0 until Dim).map(d => (d, mu(d), v(d), r6d(lambda), ratio))
@@ -541,7 +544,7 @@ object Similarity {
     * width. Output: one pooled recall row per nprobe.
     */
   def ivfRecallSweep(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select("vec_id", "v").localCheckpoint(true)
+    val e = Tables.vectors(spark, dir).select("vec_id", "v").localCheckpoint(true)
     val cent = quantizerFor(spark, dir)(lloydCentroids(e))
     val eb = e.join(e.select(col("vec_id"), assignLit(cent).as("c")), "vec_id")
     val pairs = cent.map { case (c, w) =>
@@ -586,8 +589,8 @@ object Similarity {
     * table, noted rather than forced at fixture size.
     */
   def whitenedCheck(spark: SparkSession, dir: String): DataFrame = {
-    val flat = Tables.embeddings(spark, dir)
-      .select(posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("dim", "x")))
+    val flat = Tables.vectors(spark, dir)
+      .select(posexplode(col("v")).as(Seq("dim", "x")))
     val stats = dimStats(spark, dir).select("dim", "mean", "std_samp")
     flat.join(broadcast(stats), "dim")
       .withColumn("z", (col("x") - col("mean")) / (col("std_samp") + lit(1e-8)))
@@ -611,7 +614,7 @@ object Similarity {
     * tuning a real corpus reads this number before paying for re-bucketing.
     */
   def whitenedLshTopK(spark: SparkSession, dir: String): DataFrame = {
-    val flat = emb(spark, dir)
+    val flat = Tables.vectors(spark, dir)
       .select(col("vec_id"), posexplode(col("v")))
       .withColumnRenamed("pos", "d").withColumnRenamed("col", "x")
     val stats = flat.groupBy("d")
@@ -624,7 +627,7 @@ object Similarity {
       .agg(sum(col("x") * col("w")).as("proj"))
       .groupBy("vec_id")
       .agg(sum(when(col("proj") > 0, expr("shiftleft(cast(1 as bigint), h)")).otherwise(0L)).as("bucket"))
-    val e = emb(spark, dir).join(wb, "vec_id")
+    val e = Tables.vectors(spark, dir).join(wb, "vec_id")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("bucket"))
     val scored = e.join(broadcast(q), "bucket")
@@ -642,7 +645,7 @@ object Similarity {
     * block (label stands in for a coarse cluster id at test scale).
     */
   def centroidDistance(spark: SparkSession, dir: String): DataFrame = {
-    val flat = emb(spark, dir)
+    val flat = Tables.vectors(spark, dir)
       .select(col("vec_id"), col("label"), posexplode(col("v")))
       .withColumnRenamed("pos", "d").withColumnRenamed("col", "x")
     val centroids = flat.groupBy("label", "d").agg(avg(col("x")).as("c"))
@@ -827,7 +830,7 @@ object Similarity {
     * neighbor search costs.
     */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("v").as("qv"))
     val scored = e.crossJoin(broadcast(q))
@@ -869,7 +872,7 @@ object Similarity {
     * equivalence on this corpus instead of asserting it.
     */
   def mipsTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val dot = (a: Column, b: Column) =>
@@ -920,7 +923,7 @@ object Similarity {
     * W times within its partition, never across.
     */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select("vec_id", "v").localCheckpoint(true)
+    val e = Tables.vectors(spark, dir).select("vec_id", "v").localCheckpoint(true)
     val cent = quantizerFor(spark, dir)(lloydCentroids(e))
     val pairs = cent.map { case (c, w) =>
       array(r6(l2_sq(col("v"), typedLit(w))), lit(c.toDouble))
@@ -1004,7 +1007,7 @@ object Similarity {
     * mean.
     */
   def cellSilhouette(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select("vec_id", "v").localCheckpoint(true)
+    val e = Tables.vectors(spark, dir).select("vec_id", "v").localCheckpoint(true)
     val cent = quantizerFor(spark, dir)(lloydCentroids(e))
     val pairs = cent.map { case (c, w) =>
       array(r6(l2_sq(col("v"), typedLit(w))), lit(c.toDouble))
@@ -1073,7 +1076,7 @@ object Similarity {
     * expression in both engines, ties break (rel DESC, vid ASC).
     */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = e.crossJoin(broadcast(q))
@@ -1176,7 +1179,7 @@ object Similarity {
     * kernel and per-qid heap as the unfiltered family.
     */
   def filteredTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("label"))
     val scored = e.join(broadcast(q), "label")
@@ -1217,7 +1220,7 @@ object Similarity {
   def labelPrecision(spark: SparkSession, dir: String): DataFrame = {
     // no broadcast hint on labels: it is vec_id-sized (scales with the base
     // table). The ranked side is NumQueries×TopK rows — AQE broadcasts THAT.
-    val labels = emb(spark, dir).select(col("vec_id"), col("label"))
+    val labels = Tables.vectors(spark, dir).select(col("vec_id"), col("label"))
     bruteForceTopK(spark, dir)
       .join(labels.select(col("vec_id").as("qid"), col("label").as("qlabel")), "qid")
       .join(labels.select(col("vec_id").as("neighbor_id"), col("label").as("nlabel")),
@@ -1252,7 +1255,7 @@ object Similarity {
     */
   def knnAccuracy(spark: SparkSession, dir: String): DataFrame = {
     // labels is vec_id-sized — no broadcast hint (see labelPrecision)
-    val labels = emb(spark, dir).select(col("vec_id"), col("label"))
+    val labels = Tables.vectors(spark, dir).select(col("vec_id"), col("label"))
     val votes = bruteForceTopK(spark, dir)
       .join(labels.select(col("vec_id").as("neighbor_id"),
         col("label").as("nlabel")), "neighbor_id")
@@ -1307,7 +1310,7 @@ object Similarity {
     */
   def tripletMargin(spark: SparkSession, dir: String): DataFrame = {
     // labels is vec_id-sized — no broadcast hint (see labelPrecision)
-    val labels = emb(spark, dir).select(col("vec_id"), col("label"))
+    val labels = Tables.vectors(spark, dir).select(col("vec_id"), col("label"))
     val ranked = bruteForceTopK(spark, dir)
       .join(labels.select(col("vec_id").as("qid"),
         col("label").as("qlabel")), "qid")
@@ -1375,7 +1378,7 @@ object Similarity {
     * distinct-cosine-sized.
     */
   def scoreSeparation(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("label").as("qlabel"))
     val grid = e.crossJoin(broadcast(q))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.functions.Num._
 import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -31,7 +32,6 @@ import org.apache.spark.sql.functions._
   * both engines, order-independent — the [[PqOps.adcTopKOver]] discipline).
   */
 object SqOps {
-  import PqOps.emb
   import Similarity.{NumQueries, TopK}
 
   val Levels = 255 // codes 0..255 → 255 quantization steps across [mn, mx]
@@ -42,7 +42,7 @@ object SqOps {
     */
   private def statsArr(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) =
     Artifacts.memo("sq8_stats", dir, Artifacts.corpusFingerprint(spark, dir)) {
-      val rows = emb(spark, dir)
+      val rows = Tables.vectors(spark, dir)
         .select(posexplode(col("v")))
         .groupBy(col("pos")).agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
         .orderBy("pos").collect()
@@ -72,7 +72,7 @@ object SqOps {
 
   /** The per-dimension quantizer statistics as a checkable artifact. */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir)
+    Tables.vectors(spark, dir)
       .select(posexplode(col("v")))
       .groupBy(col("pos").as("d")).agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
 
@@ -87,7 +87,7 @@ object SqOps {
     val corp = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         graft.plans.VectorFunctions.sq8_deq(col("embedding"), mn, dl).as("dq"))
-    val q = emb(spark, dir).filter(col("vec_id") < NumQueries)
+    val q = Tables.vectors(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = corp.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
@@ -117,7 +117,7 @@ object SqOps {
   def ivfSq8TopK(spark: SparkSession, dir: String): DataFrame = {
     val (mn, dl) = statsArr(spark, dir)
     val cent = PqOps.centroids(spark, dir)
-    val e = emb(spark, dir)
+    val e = Tables.vectors(spark, dir)
     val corp = e.select(col("vec_id"),
       array_min(array(PqOps.cellPairs(cent): _*)).getItem(1).cast("int").as("cell"),
       deqCol(codesCol(col("v"), mn, dl), mn, dl).as("dq"))

@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   * 100 TB these are embarrassingly parallel map-side passes.
   */
 object TextOps {
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-
   private val words: Column = split(col("text"), "\\s+")
 
   /** Whole-word stopword hit count (list kept tiny and literal). */
@@ -54,7 +51,7 @@ object TextOps {
 
   /** Token counting: whitespace words plus a BPE-ish regex token count. */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Tables.documents(spark, dir).select(
       col("doc_id"),
       size(words).cast("long").as("n_words"),
       regexp_count(col("text"), lit("[a-z]+")).cast("long").as("n_alpha"),
@@ -84,7 +81,7 @@ object TextOps {
   }
 
   def quality(spark: SparkSession, dir: String): DataFrame =
-    qualityOf(docs(spark, dir))
+    qualityOf(Tables.documents(spark, dir))
 
   /** N-gram-heuristic language ID: stopword votes per language, deterministic
     * argmax priority en > de > es > fr, else 'und'. Frame-parameterized like
@@ -100,7 +97,7 @@ object TextOps {
       .withColumn("matches_tag", col("pred_lang") === col("lang"))
 
   def langId(spark: SparkSession, dir: String): DataFrame =
-    langIdOf(docs(spark, dir))
+    langIdOf(Tables.documents(spark, dir))
 
   /** Document fingerprinting: md5 of the normalized text plus the minimum
     * word-3-shingle digest (a 1-permutation minhash / rolling-hash stand-in).
@@ -119,7 +116,7 @@ object TextOps {
     val hw = transform(words, w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
     def at(c: Column, i: Column): Column = coalesce(try_element_at(c, i), lit(0L))
     val M31 = 2147483648L
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("doc_id"), md5(norm).as("fingerprint"), hw.as("hw"), size(words).as("nw"))
       .select(col("doc_id"), col("fingerprint"),
         array_min(transform(sequence(lit(0), greatest(col("nw") - 3, lit(0))),
@@ -129,7 +126,7 @@ object TextOps {
 
   /** Per-(lang, source) corpus aggregates. */
   def corpusStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).groupBy("lang", "source")
+    Tables.documents(spark, dir).groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
         r6(avg(size(words).cast("double"))).as("avg_words"))
@@ -149,11 +146,11 @@ object TextOps {
     * differs in the last ulp across libm implementations.
     */
   def tfidfTop(spark: SparkSession, dir: String): DataFrame = {
-    val nDocs = docs(spark, dir).count()
+    val nDocs = Tables.documents(spark, dir).count()
     // checkpoint: tf feeds BOTH the df aggregation and the scored join —
     // without it each branch re-runs the corpus-sized explode+count
     // (plan audit showed two identical hashpartitioning(doc_id, word) stages)
-    val tf = docs(spark, dir)
+    val tf = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(words).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
       .localCheckpoint(eager = true)
@@ -176,7 +173,7 @@ object TextOps {
     * straddles a boundary goes to the batch it started in (the usual
     * approximation when exact first-fit isn't worth a serial pass).
     *
-    * Packing is per-`source`, and the running sum is BLOCK-PARALLEL (r11):
+    * Packing is per-`source`, and the running sum is BLOCK-PARALLEL:
     * `source` is a ~20-value vocabulary at any scale, so the old per-source
     * window put a whole source's docs in one task; the sum now recombines
     * from monotone doc_id buckets via [[EventsOps.blockedRankPrefix]] —
@@ -184,7 +181,7 @@ object TextOps {
     * production packing shards.
     */
   def seqPack(spark: SparkSession, dir: String): DataFrame = {
-    val proj = docs(spark, dir)
+    val proj = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"))
     val bkt = EventsOps.longBuckets(proj, col("doc_id"), EventsOps.SeriesBlockRows,
       Some(s"$dir#documents.doc_id"))
@@ -235,7 +232,7 @@ object TextOps {
     */
   def seqPackExact(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = docs(spark, dir)
+    val base = Tables.documents(spark, dir)
       .select(col("doc_id"), size(words).cast("long").as("n_tokens"))
     // corpus-adaptive shard count (one bounded driver count — the stats-pass
     // stance): shard SIZE stays ~PackShardDocs at any scale
@@ -288,7 +285,7 @@ object TextOps {
     */
   def vocabSketch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.EventsOps.{HllRsd, HllTolPct}
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("source"), explode(words).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("n_occ"))
       .groupBy("source")
@@ -355,7 +352,7 @@ object TextOps {
   val MergeTopK = 20
 
   def bigramMerges(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(words.as("ws"))
+    Tables.documents(spark, dir).select(words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
         i => struct(element_at(col("ws"), i).as("w1"),
@@ -382,7 +379,7 @@ object TextOps {
     */
   def bpeApply(spark: SparkSession, dir: String): DataFrame = {
     val wd = Window.partitionBy("doc_id").orderBy("pos")
-    val adj = docs(spark, dir)
+    val adj = Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode(words).as(Seq("pos", "tok")))
       .withColumn("nxt", lead(col("tok"), 1).over(wd))
       .withColumn("prv", lag(col("tok"), 1).over(wd))
@@ -461,7 +458,7 @@ object TextOps {
             when(acc.getField("run") === 1L, lit(-1L)).otherwise(lit(0L)))
             .otherwise(lit(1L))).as("hapax")),
       acc => struct(acc.getField("types").as("types"), acc.getField("hapax").as("hapax")))
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("doc_id"), nWordsCol.as("n_words"), folded.as("f"))
       .select(col("doc_id"), col("n_words"),
         col("f.types").as("n_types"), col("f.hapax").as("n_hapax"),
@@ -491,7 +488,7 @@ object TextOps {
     * same-operand double divisions r6-rounded.
     */
   def langIdConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val pred = langIdOf(docs(spark, dir)).select(col("lang"), col("pred_lang"))
+    val pred = langIdOf(Tables.documents(spark, dir)).select(col("lang"), col("pred_lang"))
     val cells = pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
     val totals = pred.groupBy("lang").agg(count(lit(1)).as("n_tag"))
     cells.join(broadcast(totals), "lang")
@@ -545,7 +542,7 @@ object TextOps {
   def ragChunks(spark: SparkSession, dir: String): DataFrame = {
     val hw: Column =
       transform(col("ws"), w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
-    docs(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("doc_id"), words.as("ws"))
       .withColumn("hw", hw)
       .select(col("doc_id"), col("ws"), col("hw"),
@@ -598,7 +595,7 @@ object TextOps {
     * the final top-k is a TakeOrdered, never a global sort.
     */
   def pmiCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = docs(spark, dir).select(words.as("ws"))
+    val pairs = Tables.documents(spark, dir).select(words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
         i => struct(element_at(col("ws"), i).as("w1"),
@@ -648,7 +645,7 @@ object TextOps {
     val nWords = greatest(size(words).cast("long"), lit(1L))
     val nSent = greatest(regexp_count(col("text"), lit("[.!?]+")).cast("long"), lit(1L))
     val nSyl = greatest(regexp_count(col("text"), lit("[aeiouy]+")).cast("long"), lit(1L))
-    docs(spark, dir).select(
+    Tables.documents(spark, dir).select(
       col("doc_id"), nWords.as("n_words"), nSent.as("n_sentences"),
       nSyl.as("n_syllables"),
       r6(nSyl.cast("double") / nWords.cast("double")).as("syl_per_word"),
@@ -676,7 +673,7 @@ object TextOps {
     * agg — doc-keyed, no global state.
     */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val g = docs(spark, dir)
+    val g = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .filter(length(col("ch")) > 0)
       .groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))

@@ -39,7 +39,7 @@ case class DftSumsAgg(
 
   override def children: Seq[Expression] = Seq(detr, t, n)
   // declared input check makes a mis-typed caller (e.g. a LongType t) an
-  // analysis-time error instead of an executor ClassCastException (ADVICE r10)
+  // analysis-time error instead of an executor ClassCastException
   override def checkInputDataTypes(): TypeCheckResult =
     if (detr.dataType == DoubleType && t.dataType == IntegerType && n.dataType == LongType)
       TypeCheckResult.TypeCheckSuccess
@@ -47,7 +47,7 @@ case class DftSumsAgg(
       s"$prettyName expects (DOUBLE, INT, BIGINT) inputs, got " +
         s"(${detr.dataType.sql}, ${t.dataType.sql}, ${n.dataType.sql})")
   // null when NO non-null (detr, t, n) triple contributed — matching what the
-  // composed sum(fx9(...)) form returned for an all-null group (ADVICE r10);
+  // composed sum(fx9(...)) form returned for an all-null group;
   // unreachable from today's callers (detr = value − trend is non-null by
   // construction) but kept parity-exact for reuse on nullable signals
   override def nullable: Boolean = true

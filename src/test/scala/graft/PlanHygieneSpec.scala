@@ -28,8 +28,8 @@ class PlanHygieneSpec extends SparkSpec {
   }
 
   /** No `broadcast()` hint may sit on a subtree whose row count scales with
-    * base-table rows (VERDICT r8 findings #1/#2: a corpus-sized pivot and
-    * user-sized norms were hint-broadcast — correct at sf0.1, OOM at 100×).
+    * base-table rows (a corpus-sized pivot and user-sized norms were once
+    * hint-broadcast — correct at sf0.1, OOM at 100×).
     * Planner/AQE-chosen broadcasts are size-adaptive and safe by definition;
     * the structural hazard is exactly the EXPLICIT hint, which forces the
     * exchange at any scale. Sweep: every ResolvedHint(BROADCAST) child in
@@ -50,6 +50,9 @@ class PlanHygieneSpec extends SparkSpec {
     *       An id-keyed aggregate keeps one row per ENTITY and entities scale
     *       with the data, so ids disqualify,
     * or the query is in the documented whitelist below.
+    * The failure message describes each offending subtree (fact leaves,
+    * topmost aggregate and dedup keys, first six nodes), which tells a new
+    * query family which rule to satisfy before reaching for the whitelist.
     */
   test("no broadcast hint on a subtree that scales with base-table rows") {
     import org.apache.spark.sql.catalyst.expressions._
@@ -62,11 +65,6 @@ class PlanHygieneSpec extends SparkSpec {
     // bound is by construction. Each entry names why. (Keep this list SHORT:
     // a new offender should first try to express its bound via (a)-(e).)
     val whitelist: Map[String, String] = Map(
-      // itemN / deg: one row per part (catalog entity) of the co-purchase
-      // graph — bounded by the catalog, keyed by p/node/u (id-shaped)
-      "items_cf_topk" -> "item marginals keyed by p_partkey (catalog)",
-      "graph_degree_stats" -> "degree table keyed by part node (catalog)",
-      "graph_link_predict" -> "degree table keyed by part node (catalog)",
       // Misra-Gries candidates: ≤ k × partitions rows by construction,
       // though keyed (deduped) by user_id
       "events_heavy_hitters" -> "MG summary bounded by k x partitions",
@@ -89,15 +87,15 @@ class PlanHygieneSpec extends SparkSpec {
       name.endsWith("_id") || name.endsWith("key") || name == "qid" || name == "vid"
     def vocabKeyed(keys: Seq[Expression]): Boolean =
       keys.nonEmpty && keys.forall(_.references.forall(a => !idShaped(a.name)))
-    def factLeafy(p: LogicalPlan): Boolean = p.collectLeaves().exists {
+    def factLeaves(p: LogicalPlan): Seq[String] = p.collectLeaves().flatMap {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation =>
           val name = h.location.rootPaths.headOption.map(_.getName).getOrElse("")
-          factTables.exists(name.startsWith)
-        case _ => true // unknown relation kind: conservative
+          if (factTables.exists(name.startsWith)) Some(name) else None
+        case _ => Some("unknown-relation") // unknown relation kind: conservative
       }
-      case _: LogicalRDD => true // checkpoint erased provenance: conservative
-      case _ => false // Range / LocalRelation / OneRowRelation
+      case _: LogicalRDD => Some("rdd") // checkpoint erased provenance: conservative
+      case _ => None // Range / LocalRelation / OneRowRelation
     }
     def bounded(p: LogicalPlan): Boolean = {
       val capped = p.collectFirst {
@@ -107,23 +105,29 @@ class PlanHygieneSpec extends SparkSpec {
         case d: Deduplicate if vocabKeyed(d.keys) => ()
         case f: Filter if isBoundedIdCap(f.condition) => ()
       }.nonEmpty
-      capped || !factLeafy(p)
+      capped || factLeaves(p).isEmpty
+    }
+    def describe(p: LogicalPlan): String = {
+      val group = p.collectFirst { case a: Aggregate => a.groupingExpressions.map(_.sql).mkString(",") }
+      val dedup = p.collectFirst { case d: Deduplicate => d.keys.map(_.name).mkString(",") }
+      val nodes = p.collect { case n => n.nodeName }.take(6).mkString(">")
+      s"leaves=${factLeaves(p).distinct.mkString("+")} group=[${group.getOrElse("-")}] " +
+        s"dedup=[${dedup.getOrElse("-")}] nodes=$nodes"
     }
 
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (whitelist.contains(name)) None
-      else {
-        val analyzed = fn(spark, sf).queryExecution.analyzed
-        val unbounded = analyzed.collectWithSubqueries {
-          case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) && !bounded(h.child) => h
-        }
-        if (unbounded.nonEmpty) Some(s"$name (${unbounded.size})") else None
+    val unbounded = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, sf).queryExecution.analyzed.collectWithSubqueries {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) && !bounded(h.child) => h.child
       }
     }
-    assert(offenders.isEmpty, s"unbounded broadcast hints in: $offenders")
-    // every whitelist entry must still exist — stale entries hide regressions
-    val stale = whitelist.keys.filterNot(SparkEntry.queries.contains)
-    assert(stale.isEmpty, s"stale whitelist entries: $stale")
+    val offenders = unbounded.filterNot(kv => whitelist.contains(kv._1))
+      .flatMap { case (name, cs) => cs.map(c => s"$name: ${describe(c)}") }
+    assert(offenders.isEmpty, s"unbounded broadcast hints in:\n${offenders.mkString("\n")}")
+    // every whitelist entry must still exist AND still need its exemption —
+    // an entry the rules already clear would hide a future regression
+    val needed = unbounded.filter(_._2.nonEmpty).map(_._1).toSet
+    val stale = whitelist.keys.filterNot(needed)
+    assert(stale.isEmpty, s"stale whitelist entries (gone, or cleared by the rules): $stale")
   }
 
   /** No registered query may put a whole fact-scale series in ONE window

@@ -6,14 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole forked test JVM. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    // no fixture-sized initialPartitionNum: an explicit initial width would
+    // override the shuffle width that specs set at run time
+    val s = LocalSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Dev main: prints the formatted physical plan of each named registry query
+  * (`Test/runMain graft.ExplainAudit tpch_q1 ts_decompose_dim ...`). */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions").getOrCreate()
+    val spark = LocalSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // dir from SPARK_GRAFT_SF_DIR (args stay query names), default sf0.01
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -21,7 +19,7 @@ object ExplainAudit {
     outDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     names.foreach { n =>
       // registry names are [a-z0-9_]; reject anything else so a stray arg
-      // can't path-escape SPARK_GRAFT_EXPLAIN_DIR (ADVICE r11)
+      // can't path-escape SPARK_GRAFT_EXPLAIN_DIR
       require(n.matches("[A-Za-z0-9_]+"), s"bad query name: $n")
       println(s"========== $n ==========")
       val plan = SparkEntry.queries(n)(spark, sf).queryExecution.explainString(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal fixture: N key-offset replicas of the driver's sf0.1
@@ -41,12 +41,7 @@ object GenSf1 {
     val Array(srcDir, outDir) = args.take(2)
     val replicas = args.drop(2).headOption.map(_.toInt).getOrElse(Replicas)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(name: String, df: DataFrame): Unit = {
@@ -66,9 +61,9 @@ object GenSf1 {
 
     // c_name: overlay a FIXED-WIDTH 3-digit replica tag over the first three
     // digits of the 9-digit number in "Customer#%09d" for r > 0. Fixed width
-    // matters: the r8 single-digit overlay made 2-digit replicas (r ≥ 10)
-    // one char LONGER, so replica 1 and replicas 10-19 shared 16-char
-    // prefixes and co-blocked — the sf10 rehearsal measured
+    // matters: a single-digit overlay makes 2-digit replicas (r ≥ 10)
+    // one char LONGER, so replica 1 and replicas 10-19 share 16-char
+    // prefixes and co-block — the sf10 rehearsal measured
     // customers_fuzzy_match at 195 s purely from that fixture artifact.
     // With a zero-padded tag all names keep their length, the tag sits
     // INSIDE the 16-char block key (replicas never co-block, r ≤ 999), and
@@ -106,8 +101,7 @@ object GenSf1 {
       // re-using `txt` after the text withColumn would re-resolve col("text")
       // against the already-suffixed text and apply the suffix twice, so
       // n_chars = length(text) + n_words·(1+len(r)) — breaking the
-      // n_chars == length(text) invariant the documents queries rely on
-      // (ADVICE r8 medium).
+      // n_chars == length(text) invariant the documents queries rely on.
       df.withColumn("doc_id", col("doc_id") + lit(r * DK))
         .withColumn("text", txt)
         .withColumn("n_chars", length(col("text")))
