@@ -943,12 +943,13 @@ object Dedup {
   def policySweep(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashPairs(spark, dir).select("doc_b", "jaccard")
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
-    val thr = Tables.documents(spark, dir).sparkSession
-      .range(1, 10).select((col("id").cast("double") / 10.0).as("t"))
-    pairs.crossJoin(broadcast(thr))
+    val thr = spark.range(1, 10).select((col("id").cast("double") / 10.0).as("t"))
+    val drops = pairs.crossJoin(broadcast(thr))
       .filter(col("jaccard") >= col("t"))
       .groupBy("t").agg(countDistinct(col("doc_b")).as("n_dropped"))
-      .join(broadcast(thr), Seq("t"), "right")
+    // every threshold keeps its row: a left join from the spine, which lets
+    // the (at most 9-row) drop counts be the broadcast build side
+    thr.join(broadcast(drops), Seq("t"), "left")
       .crossJoin(broadcast(nDocs))
       .select(r6(col("t")).as("threshold"),
         coalesce(col("n_dropped"), lit(0L)).as("n_dropped"), col("n_docs"),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
@@ -40,11 +39,13 @@ object StreamingOps {
     *    read only when a session is created: turning it off here changes the
     *    discarded clone, not the caller's session. graft adds no session
     *    artifacts.
-    *  - Spark's default checkpoint manager renames through `FileContext`,
-    *    which on the local file system without native Hadoop forks a
-    *    `readlink` for each path and its `.crc`; `FileSystem.rename` forks
-    *    none. These runs pass no `checkpointLocation`, so each checkpoints
-    *    to a fresh local temporary directory, where a rename is atomic.
+    *  - The checkpoint manager is [[LocalCheckpointFileManager]]. Without
+    *    native Hadoop, Spark's default manager forks a `readlink` for every
+    *    `FileContext` rename and a `chmod` for every file and directory it
+    *    creates; this one renames through `FileSystem.rename` and creates
+    *    through `java.nio`, so its checkpoint writes fork no process. These
+    *    runs pass no `checkpointLocation`, so each checkpoints to a fresh
+    *    local temporary directory, where a rename is atomic.
     *
     * For the last two keys a value the caller set explicitly wins.
     */
@@ -63,7 +64,7 @@ object StreamingOps {
   private[streaming] val RunConfs: Seq[(String, String)] = Seq(
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[FileSystemBasedCheckpointFileManager].getName)
+      classOf[LocalCheckpointFileManager].getName)
 
   /** Drains `stream` under `Trigger.AvailableNow` into the memory sink
     * `sink` (replacing any earlier run's table) and returns the sink as a

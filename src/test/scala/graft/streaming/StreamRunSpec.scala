@@ -1,10 +1,46 @@
 package graft.streaming
 
+import java.io.File
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.graftbridge.ShutdownDeletes
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+
+/** A raw local file system under a scheme of its own that records the
+  * creates and mkdirs reaching it: the proof that a non-`file` path takes
+  * the inherited Hadoop path of [[LocalCheckpointFileManager]]. */
+class RecordingLocalFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${RecordingLocalFs.Scheme}:///")
+  override def getScheme: String = RecordingLocalFs.Scheme
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    RecordingLocalFs.calls.add(s"create ${f.getName}")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    RecordingLocalFs.calls.add(s"mkdirs ${f.getName}")
+    super.mkdirs(f, permission)
+  }
+}
+
+object RecordingLocalFs {
+  val Scheme = "graftrecording"
+  val calls = new ConcurrentLinkedQueue[String]()
+}
 
 /** What a graft streaming run leaves behind in the caller's session and on
-  * disk. */
+  * disk, and the contract of its checkpoint manager. */
 class StreamRunSpec extends SparkSpec {
 
   private val widthKey = "spark.sql.shuffle.partitions"
@@ -68,5 +104,185 @@ class StreamRunSpec extends SparkSpec {
     assert(dirs.length == 1)
     assert(dirs.head.getName.startsWith("graft_mv"))
     assert(ShutdownDeletes.registered(dirs.head.getCanonicalFile))
+  }
+
+  private def withTempDir[T](prefix: String)(body: File => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir) finally FileUtils.deleteDirectory(dir)
+  }
+
+  private def manager(dir: File, conf: Configuration = new Configuration()) =
+    new LocalCheckpointFileManager(new Path(dir.toURI), conf)
+
+  private def write(fm: LocalCheckpointFileManager, p: Path, text: String,
+      overwrite: Boolean = false) = {
+    val out = fm.createAtomic(p, overwrite)
+    out.write(text.getBytes(UTF_8))
+    out
+  }
+
+  private def read(fm: LocalCheckpointFileManager, p: Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  test("a createAtomic file is invisible at its target until close") {
+    withTempDir("graft-cfm") { dir =>
+      val fm = manager(dir)
+      val target = new Path(new Path(dir.toURI), "offsets/0")
+      val out = write(fm, target, "v1")
+      out.flush()
+      assert(!fm.exists(target))
+      val parent = new File(dir, "offsets")
+      assert(parent.list().toSeq.map(_.startsWith(".0.")) == Seq(true))
+      out.close()
+      assert(read(fm, target) == "v1")
+      // no temporary file left, and no Hadoop .crc sidecar
+      assert(parent.list().toSeq == Seq("0"))
+    }
+  }
+
+  test("cancel deletes the temporary file and leaves no target") {
+    withTempDir("graft-cfm") { dir =>
+      val fm = manager(dir)
+      val target = new Path(new Path(dir.toURI), "state/1.delta")
+      val out = write(fm, target, "partial")
+      out.cancel()
+      assert(!fm.exists(target))
+      assert(new File(dir, "state").list().isEmpty)
+    }
+  }
+
+  test("overwrite semantics: refused without overwriteIfPossible, replaced with it") {
+    withTempDir("graft-cfm") { dir =>
+      // Hadoop's own local file system: the `file:` default on Spark's class
+      // path is Hive's ProxyLocalFileSystem, whose rename refuses any existing
+      // target, which makes overwriteIfPossible a no-op
+      val conf = new Configuration()
+      conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      val fm = manager(dir, conf)
+      val target = new Path(new Path(dir.toURI), "commits/0")
+      write(fm, target, "first").close()
+      val refused = write(fm, target, "second")
+      intercept[FileAlreadyExistsException](refused.close())
+      assert(read(fm, target) == "first")
+      write(fm, target, "third", overwrite = true).close()
+      assert(read(fm, target) == "third")
+      // Spark leaves the refused write's temporary file; it stays hidden
+      assert(new File(dir, "commits").list().filterNot(_.startsWith(".")).toSeq == Seq("0"))
+    }
+  }
+
+  test("nested mkdirs creates every level and is idempotent") {
+    withTempDir("graft-cfm") { dir =>
+      val fm = manager(dir)
+      val nested = new Path(new Path(dir.toURI), "state/0/1")
+      fm.mkdirs(nested)
+      fm.mkdirs(nested)
+      assert(new File(dir, "state/0/1").isDirectory)
+      assert(fm.exists(nested))
+    }
+  }
+
+  test("a path of another scheme takes the inherited Hadoop path") {
+    withTempDir("graft-cfm") { dir =>
+      val conf = new Configuration()
+      conf.set(s"fs.${RecordingLocalFs.Scheme}.impl", classOf[RecordingLocalFs].getName)
+      conf.setBoolean(s"fs.${RecordingLocalFs.Scheme}.impl.disable.cache", true)
+      val root = new Path(s"${RecordingLocalFs.Scheme}://${dir.getAbsolutePath}")
+      val fm = new LocalCheckpointFileManager(root, conf)
+      RecordingLocalFs.calls.clear()
+      fm.mkdirs(new Path(root, "sources"))
+      val target = new Path(root, "offsets/0")
+      fm.createAtomic(target, false).close()
+      assert(fm.exists(target))
+      val calls = RecordingLocalFs.calls.asScala.toSeq
+      assert(calls.contains("mkdirs sources"), calls)
+      assert(calls.exists(_.startsWith("create .0.")), calls)
+    }
+  }
+
+  test("stateful aggregation and dropDuplicates reload their state across micro-batches") {
+    withTempDir("graft-state-reload") { dir =>
+      val src = new File(dir, "src").getPath
+      // three files whose keys and values overlap, one file per micro-batch
+      (0 until 3).foreach { i =>
+        spark.range(i * 40L, i * 40L + 60)
+          .select((col("id") % 7).as("k"), (col("id") % 50).as("v"))
+          .coalesce(1).write.mode("append").parquet(src)
+      }
+      val batch = spark.read.parquet(src)
+      val agg: DataFrame => DataFrame =
+        _.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))
+      val dedup: DataFrame => DataFrame = _.dropDuplicates("v")
+
+      def drain(name: String, mode: String, query: DataFrame => DataFrame): DataFrame = {
+        val ckpt = new File(dir, s"ckpt_$name")
+        spark.catalog.dropTempView(name)
+        val q = StreamingOps.withStreamWidth(spark, src) {
+          val q = query(spark.readStream.schema(batch.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+            .writeStream.format("memory").queryName(name).outputMode(mode)
+            .option("checkpointLocation", ckpt.getPath)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q
+        }
+        assert(q.lastProgress.batchId >= 2)
+        val written = FileUtils.listFiles(ckpt, null, true).asScala.map(_.getName).toSeq
+        assert(written.count(_.endsWith(".delta")) >= 3, written)
+        // every checkpoint file came through the java.nio create: no Hadoop
+        // `.<name>.crc` sidecar (`<name>.crc` is Spark's own checksum file)
+        assert(!written.exists(n => n.startsWith(".") && n.endsWith(".crc")), written)
+        spark.table(name)
+      }
+
+      // keep no state version in memory, so each batch loads the previous
+      // one from the delta files the manager wrote
+      val retain = "spark.sql.streaming.maxBatchesToRetainInMemory"
+      spark.conf.set(retain, "0")
+      try {
+        val streamed = drain("state_reload_agg", "complete", agg)
+        assert(streamed.orderBy("k").collect().toSeq == agg(batch).orderBy("k").collect().toSeq)
+        val distinct = drain("state_reload_dedup", "append", dedup).select("v")
+        assert(distinct.orderBy("v").collect().toSeq ==
+          batch.select("v").distinct().orderBy("v").collect().toSeq)
+      } finally spark.conf.unset(retain)
+    }
+  }
+
+  test("streaming runs fork no process from a checkpoint manager") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
+    val file = Files.createTempFile("graft-forks", ".jfr")
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      assert(StreamingOps.streamTumbling(spark, sf).count() > 0)
+      assert(CurationStream.streamCuratedIngest(spark, sf).count() > 0)
+      // one fork of our own shows that the recording sees process starts
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(file)
+      val events = RecordingFile.readAllEvents(file).asScala.toSeq
+      def frames(e: RecordedEvent) =
+        Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+      assert(events.exists(_.getString("command") == "true"))
+      // filtered by stack: Spark's artifact cleaner may fork an `rm -rf` for
+      // a cloned session at any time, and that is not a checkpoint write
+      val viaManager = (f: String) => f.contains("CheckpointFileManager")
+      val fromManager = events.filter(frames(_).exists(viaManager))
+      assert(fromManager.isEmpty, fromManager.map { e =>
+        val fs = frames(e)
+        (e.getString("command") +: fs.take(8) :+ s"... ${fs.find(viaManager).get}")
+          .mkString("\n  ")
+      }.mkString("\n"))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(file)
+    }
   }
 }
