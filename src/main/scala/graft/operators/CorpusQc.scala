@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.{DetRand => R}
 import graft.functions.Num._
+import graft.functions.TextDigest.{gram, md5Bits, sqlGram, sqlMd5Bits, sqlWordDigests, sqlWords, wordDigests, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,66 +21,38 @@ import org.apache.spark.sql.functions._
   *    that turns raw source proportions into a training mix).
   *
   * Scale shapes: repetition is explode + two hash-aggs keyed on (doc_id,
-  * digest) — counts collapse map-side, raw text never shuffles (the same
-  * arithmetic word-digest scheme as [[TextOps.fingerprint]] / [[Dedup]]: one
-  * md5 per WORD, 28-bit integer digests, LCG folds, every intermediate exact
-  * BIGINT in both engines). Decontamination broadcasts the eval side (the
+  * digest) — counts collapse map-side, raw text never shuffles (grams are
+  * [[graft.functions.TextDigest]] n-gram digests, exact BIGINTs in both
+  * engines). Decontamination broadcasts the eval side (the
   * benchmark set is small by construction; the 100-TB train side is scanned
   * once, only digests move). Mixture sampling is a per-source window over a
   * deterministic sample key — parallelism = #sources, no global order.
   */
 object CorpusQc {
-  private val words: Column = split(col("text"), "\\s+")
-  private val M31 = 2147483648L
-
-  /** Per-word 28-bit md5 digests (the [[TextOps.fingerprint]] scheme). */
-  private val hw: Column =
-    transform(words, w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
-
-  private def at(c: Column, i: Column): Column =
-    coalesce(try_element_at(c, i), lit(0L))
-
-  /** Word n-gram digest at 0-based position i: LCG fold of n word digests. */
-  private def gramDigest(hws: Column, i: Column, n: Int): Column =
-    (2 to n).foldLeft(at(hws, i + 1)) { (h, j) =>
-      (h * 69069L + at(hws, i + j)) % M31
-    }
-
   /** (doc_id, g): one row per n-gram position (positions 0..nw−n; `greatest`
     * guard keeps a too-short doc on one deterministic fake gram instead of a
     * descending sequence — both engines compute the identical value via
     * coalesce(…, 0)).
     *
-    * `hw` is materialized as a COLUMN in its own projection before the
-    * position transform references it: inlining the `hw` expression into
-    * every `at()` call would recompute the per-word md5 sweep once per
-    * position per gram word — O(words²) md5 calls per doc, measured as a
-    * 50× query blowup at sf0.1 (57 s → 1 s class). CollapseProject leaves
-    * the split alone because the produced attribute is expensive and
-    * multiply-referenced (the [[TextOps.fingerprint]] discipline).
+    * `hw` is its own projection before the position transform reads it
+    * (the md5 trap, see [[graft.functions.TextDigest]]).
     */
   private def grams(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), hw.as("hw"))
+    Tables.documents(spark, dir).select(col("doc_id"), wordDigests().as("hw"))
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), greatest(size(col("hw")) - n, lit(0))),
-          i => gramDigest(col("hw"), i, n))).as("g"))
-
-  private def gramDigestSql(i: String, n: Int): String =
-    (2 to n).foldLeft(s"coalesce(hw[$i + 1], 0)") { (h, j) =>
-      s"(($h) * 69069 + coalesce(hw[$i + $j], 0)) % $M31"
-    }
+          i => gram(col("hw"), i, n))).as("g"))
 
   /** `<name>(doc_id, g)` — one row per n-gram position (NOT distinct). */
   private def gramCteSql(name: String, n: Int): String =
     s"""${name}_h AS (
        |  SELECT doc_id,
-       |         list_transform(regexp_split_to_array(text, '\\s+'),
-       |                        w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+       |         ${sqlWordDigests} AS hw
        |  FROM documents
        |), $name AS (
        |  SELECT doc_id,
        |         unnest(list_transform(generate_series(0, greatest(len(hw) - $n, 0)),
-       |                               i -> ${gramDigestSql("i", n)})) AS g
+       |                               i -> ${sqlGram("hw", "i", n)})) AS g
        |  FROM ${name}_h
        |)""".stripMargin
 
@@ -169,10 +142,6 @@ object CorpusQc {
   /** A doc more than half made of cross-doc-shared chunks is boilerplate. */
   val SharedFracThreshold = 0.5
 
-  /** (doc_id, g): digest per non-overlapping [[ChunkWords]]-word chunk (docs
-    * shorter than one chunk emit none). Same materialize-hw-first discipline
-    * as [[grams]] — the lambda must reference a column, not the md5 sweep.
-    */
   /** Bloom false-positive rate for [[decontamBloom]] (the prefilter is
     * correctness-neutral — false positives are removed by the exact confirm
     * join — so fpp only tunes how much of the train side survives to it). */
@@ -217,13 +186,17 @@ object CorpusQc {
         r6(col("n_hit").cast("double") / col("n_shingles").cast("double")).as("contam_frac"))
   }
 
+  /** (doc_id, g): digest per non-overlapping [[ChunkWords]]-word chunk (docs
+    * shorter than one chunk emit none); `hw` is projected first, as in
+    * [[grams]].
+    */
   private def chunks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), hw.as("hw"))
+    Tables.documents(spark, dir).select(col("doc_id"), wordDigests().as("hw"))
       .filter(size(col("hw")) >= ChunkWords)
       .select(col("doc_id"),
         explode(transform(
           sequence(lit(0), floor(size(col("hw")) / lit(ChunkWords.toDouble)).cast("int") - 1),
-          c => gramDigest(col("hw"), c * ChunkWords, ChunkWords))).as("g"))
+          c => gram(col("hw"), c * ChunkWords, ChunkWords))).as("g"))
 
   /** Per-doc cross-doc chunk-sharing profile: of the doc's chunks, how many
     * also occur in at least one OTHER doc (`n_shared_chunks`, by digest), the
@@ -231,7 +204,7 @@ object CorpusQc {
     * paragraph-dedup pass (Wenzek et al., LREC 2020) re-expressed over word
     * chunks, since fixture docs carry no line structure.
     *
-    * Scale: only 28-bit digests shuffle — once to count distinct docs per
+    * Scale: only 31-bit digests shuffle — once to count distinct docs per
     * digest, once to join the (g, n_docs) counts back. Both are digest-keyed
     * hash shuffles with map-side collapse; raw text never moves.
     */
@@ -284,14 +257,13 @@ object CorpusQc {
   def boilerplateScrubOracle: String =
     s"""WITH ch_h AS (
        |  SELECT doc_id,
-       |         list_transform(regexp_split_to_array(text, '\\s+'),
-       |                        w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+       |         ${sqlWordDigests} AS hw
        |  FROM documents
        |), ch AS (
        |  SELECT doc_id,
        |         unnest(list_transform(
        |           generate_series(0, CAST(floor(len(hw) / ${ChunkWords.toDouble}) AS INT) - 1),
-       |           c -> ${gramDigestSql(s"c * $ChunkWords", ChunkWords)})) AS g
+       |           c -> ${sqlGram("hw", s"c * $ChunkWords", ChunkWords)})) AS g
        |  FROM ch_h WHERE len(hw) >= $ChunkWords
        |), stats AS (
        |  SELECT g, count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper FROM ch GROUP BY 1
@@ -301,11 +273,11 @@ object CorpusQc {
        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
        |  FROM ch JOIN stats s USING (g) GROUP BY 1
        |)
-       |SELECT d.doc_id, CAST(len(regexp_split_to_array(d.text, '\\s+')) AS BIGINT) AS n_words,
+       |SELECT d.doc_id, CAST(len(${sqlWords("d.text")}) AS BIGINT) AS n_words,
        |       coalesce(p.n_chunks, 0) AS n_chunks,
        |       coalesce(p.n_dropped, 0) AS n_dropped,
-       |       CAST(len(regexp_split_to_array(d.text, '\\s+')) - coalesce(p.n_dropped, 0)*$ChunkWords AS BIGINT) AS kept_words,
-       |       ${sqlR6(s"CAST(coalesce(p.n_dropped, 0)*$ChunkWords AS DOUBLE) / CAST(len(regexp_split_to_array(d.text, '\\s+')) AS DOUBLE)")} AS scrub_frac
+       |       CAST(len(${sqlWords("d.text")}) - coalesce(p.n_dropped, 0)*$ChunkWords AS BIGINT) AS kept_words,
+       |       ${sqlR6(s"CAST(coalesce(p.n_dropped, 0)*$ChunkWords AS DOUBLE) / CAST(len(${sqlWords("d.text")}) AS DOUBLE)")} AS scrub_frac
        |FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
@@ -431,14 +403,14 @@ object CorpusQc {
 
   def interpNllOracle: String = {
     val p = s"(${sqlD(InterpLambda)}*CAST(b.c12 AS DOUBLE)/CAST(u1.c AS DOUBLE) + ${sqlD(1.0 - InterpLambda)}*CAST(u2.c AS DOUBLE)/CAST(t.tot AS DOUBLE))"
-    s"""WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, ${sqlWords()} AS ws FROM documents),
        |pairs AS (
        |  SELECT doc_id, ws[g.i] AS w1, ws[g.i + 1] AS w2
        |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i) g
        |  WHERE len(ws) >= 2
        |), uni AS MATERIALIZED (
        |  SELECT w, count(*) AS c FROM (
-       |    SELECT unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents)
+       |    SELECT unnest(${sqlWords()}) AS w FROM documents)
        |  GROUP BY 1
        |), tot AS (SELECT CAST(sum(c) AS BIGINT) AS tot FROM uni),
        |bi AS (SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2),
@@ -493,14 +465,14 @@ object CorpusQc {
 
   def nllFilterSweepOracle: String = {
     val grid = NllSweepGrid.map(t => s"(${sqlD(t)})").mkString(", ")
-    s"""WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, ${sqlWords()} AS ws FROM documents),
        |pairs AS (
        |  SELECT doc_id, ws[g.i] AS w1, ws[g.i + 1] AS w2
        |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i) g
        |  WHERE len(ws) >= 2
        |), uni AS MATERIALIZED (
        |  SELECT w, count(*) AS c FROM (
-       |    SELECT unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents)
+       |    SELECT unnest(${sqlWords()}) AS w FROM documents)
        |  GROUP BY 1
        |), tot AS (SELECT CAST(sum(c) AS BIGINT) AS tot FROM uni),
        |bi AS (SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2),
@@ -573,7 +545,7 @@ object CorpusQc {
     val nD = "CAST(m AS DOUBLE)"
     val beta = s"(($nD*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))/($nD*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)))"
     s"""WITH tok AS (
-       |  SELECT source, unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents
+       |  SELECT source, unnest(${sqlWords()}) AS w FROM documents
        |), pts AS (
        |  SELECT source, count(*) AS n_tokens, count(DISTINCT w) AS n_vocab,
        |         ${sqlFx("ln(CAST(count(*) AS DOUBLE))", 6)} AS x,
@@ -610,8 +582,7 @@ object CorpusQc {
     */
   def docSplit(spark: SparkSession, dir: String): DataFrame = {
     val bucket = pmod(
-      conv(substring(md5(concat(lit("split:"), col("doc_id").cast("string"))), 1, 7), 16, 10)
-        .cast("long"), lit(100L))
+      md5Bits(concat(lit("split:"), col("doc_id").cast("string"))), lit(100L))
     val split = when(bucket < TrainPct, "train")
       .when(bucket === TrainPct, "val").otherwise("test")
     Tables.documents(spark, dir)
@@ -754,7 +725,7 @@ object CorpusQc {
   def curriculumOracle: String =
     s"""WITH base AS (
        |  SELECT doc_id, source,
-       |         len(regexp_split_to_array(text, '\\s+'))::BIGINT AS n_tokens
+       |         len(${sqlWords()})::BIGINT AS n_tokens
        |  FROM documents
        |), win AS (
        |  SELECT doc_id, source, n_tokens,
@@ -812,8 +783,8 @@ object CorpusQc {
   def lengthHistOracle: String =
     s"""WITH b AS (
        |  SELECT source,
-       |         ${bucketLadderSql("len(regexp_split_to_array(text, '\\s+'))")} AS bucket,
-       |         len(regexp_split_to_array(text, '\\s+'))::BIGINT AS n_words
+       |         ${bucketLadderSql(s"len(${sqlWords()})")} AS bucket,
+       |         len(${sqlWords()})::BIGINT AS n_words
        |  FROM documents
        |), g AS (
        |  SELECT source, bucket, count(*) AS n_docs, CAST(sum(n_words) AS BIGINT) AS n_tokens
@@ -852,7 +823,7 @@ object CorpusQc {
   def mixEntropyOracle: String =
     s"""WITH per AS (
        |  SELECT source, count(*) AS n_docs,
-       |         CAST(sum(len(regexp_split_to_array(text, '\\s+'))::BIGINT) AS BIGINT) AS n_tokens
+       |         CAST(sum(len(${sqlWords()})::BIGINT) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1
        |), t AS (
        |  SELECT *, CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE) AS p
@@ -904,7 +875,7 @@ object CorpusQc {
 
   def sourceDivergenceOracle: String =
     s"""WITH tok AS (
-       |  SELECT source, unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents
+       |  SELECT source, unnest(${sqlWords()}) AS w FROM documents
        |), sc AS (
        |  SELECT source, w, count(*) AS c_sw FROM tok GROUP BY 1, 2
        |), st AS (
@@ -962,7 +933,7 @@ object CorpusQc {
   def zipfFitOracle: String =
     s"""WITH cnt AS (
        |  SELECT source, w, count(*) AS c
-       |  FROM (SELECT source, unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents)
+       |  FROM (SELECT source, unnest(${sqlWords()}) AS w FROM documents)
        |  GROUP BY 1, 2
        |), ranked AS (
        |  SELECT source,
@@ -1054,9 +1025,9 @@ object CorpusQc {
        |  WHERE t.doc_id % $EvalMod <> 0 GROUP BY 1
        |)
        |SELECT d.doc_id,
-       |       (greatest(len(regexp_split_to_array(d.text, '\\s+')) - $DecontamN, 0) + 1)::BIGINT AS n_shingles,
+       |       (greatest(len(${sqlWords("d.text")}) - $DecontamN, 0) + 1)::BIGINT AS n_shingles,
        |       h.n_hit,
-       |       ${sqlR6(s"CAST(h.n_hit AS DOUBLE) / (greatest(len(regexp_split_to_array(d.text, '\\s+')) - $DecontamN, 0) + 1)")} AS contam_frac
+       |       ${sqlR6(s"CAST(h.n_hit AS DOUBLE) / (greatest(len(${sqlWords("d.text")}) - $DecontamN, 0) + 1)")} AS contam_frac
        |FROM documents d JOIN hits h ON h.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
@@ -1083,7 +1054,7 @@ object CorpusQc {
          |         sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS dup5
          |  FROM c5 GROUP BY 1
          |)
-         |SELECT d.doc_id, len(regexp_split_to_array(d.text, '\\s+'))::BIGINT AS n_words,
+         |SELECT d.doc_id, len(${sqlWords("d.text")})::BIGINT AS n_words,
          |       ${sqlR6("CAST(p2.max2 AS DOUBLE) / p2.n2")} AS top_2gram_frac,
          |       ${sqlR6("CAST(p2.dup2 AS DOUBLE) / p2.n2")} AS dup_2gram_frac,
          |       ${sqlR6("CAST(p5.dup5 AS DOUBLE) / p5.n5")} AS dup_5gram_frac,
@@ -1101,14 +1072,13 @@ object CorpusQc {
     "docs_chunk_dedup" ->
       s"""WITH ch_h AS (
          |  SELECT doc_id,
-         |         list_transform(regexp_split_to_array(text, '\\s+'),
-         |                        w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+         |         ${sqlWordDigests} AS hw
          |  FROM documents
          |), ch AS (
          |  SELECT doc_id,
          |         unnest(list_transform(
          |           generate_series(0, CAST(floor(len(hw) / ${ChunkWords.toDouble}) AS INT) - 1),
-         |           c -> ${gramDigestSql(s"c * $ChunkWords", ChunkWords)})) AS g
+         |           c -> ${sqlGram("hw", s"c * $ChunkWords", ChunkWords)})) AS g
          |  FROM ch_h WHERE len(hw) >= $ChunkWords
          |), shared AS (
          |  SELECT g, count(DISTINCT doc_id) AS n_docs FROM ch GROUP BY 1
@@ -1123,7 +1093,7 @@ object CorpusQc {
          |FROM agg ORDER BY doc_id""".stripMargin,
     "text_unigram_nll" ->
       s"""WITH tok AS (
-         |  SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents
+         |  SELECT doc_id, unnest(${sqlWords()}) AS w FROM documents
          |), vocab AS (
          |  SELECT w, count(*) AS cnt FROM tok GROUP BY 1
          |), tot AS (SELECT sum(cnt) AS tot FROM vocab),
@@ -1142,14 +1112,14 @@ object CorpusQc {
          |       ${sqlFx("avg_nll", 6)} * t.n_docs > t.thr_fx AS above_mean
          |FROM res CROSS JOIN thr t ORDER BY doc_id""".stripMargin,
     "text_bigram_nll" ->
-      s"""WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${sqlWords()} AS ws FROM documents),
          |pairs AS (
          |  SELECT doc_id, ws[g.i] AS w1, ws[g.i + 1] AS w2
          |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i) g
          |  WHERE len(ws) >= 2
          |), uni AS (
          |  SELECT w1, count(*) AS c1 FROM (
-         |    SELECT unnest(regexp_split_to_array(text, '\\s+')) AS w1 FROM documents)
+         |    SELECT unnest(${sqlWords()}) AS w1 FROM documents)
          |  GROUP BY 1
          |), vocab AS (SELECT count(*) AS v FROM uni),
          |bi AS (SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2),
@@ -1169,9 +1139,9 @@ object CorpusQc {
          |  SELECT source,
          |         CASE WHEN h < $TrainPct THEN 'train'
          |              WHEN h = $TrainPct THEN 'val' ELSE 'test' END AS split,
-         |         len(regexp_split_to_array(text, '\\s+'))::BIGINT AS n_tokens
+         |         len(${sqlWords()})::BIGINT AS n_tokens
          |  FROM (SELECT source, text,
-         |               ('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 7))::BIGINT % 100 AS h
+         |               ${sqlMd5Bits("'split:' || doc_id::VARCHAR")} % 100 AS h
          |        FROM documents)
          |)
          |SELECT source, split, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
@@ -1179,7 +1149,7 @@ object CorpusQc {
     "docs_mixture_sample" ->
       s"""WITH base AS (
          |  SELECT doc_id, source,
-         |         len(regexp_split_to_array(text, '\\s+'))::BIGINT AS n_tokens,
+         |         len(${sqlWords()})::BIGINT AS n_tokens,
          |         $MixBaseBudget * (1 + (substr(source, 4)::BIGINT % 3)) AS budget_tokens,
          |         ${R.sqlU01("CAST(doc_id AS DOUBLE)", 41)} AS u
          |  FROM documents

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Num._
+import graft.functions.TextDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -119,7 +120,7 @@ object Curation {
   def clusterKeywords(spark: SparkSession, dir: String): DataFrame = {
     val cells = PqOps.corpusCells(spark, dir).withColumnRenamed("vec_id", "doc_id")
     val tf = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("word"))
+      .select(col("doc_id"), explode(TextDigest.words).as("word"))
       .join(cells, "doc_id")
       .groupBy("cell", "word").agg(count(lit(1)).as("ctw"))
       .localCheckpoint(eager = true) // feeds cf, ncell and the scored join
@@ -140,7 +141,7 @@ object Curation {
        |${Similarity.ivfBucketCtes},
        |cells AS (SELECT vec_id AS doc_id, c AS cell FROM bkt),
        |wds AS (
-       |  SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS word FROM documents
+       |  SELECT doc_id, unnest(${TextDigest.sqlWords()}) AS word FROM documents
        |), tf AS (
        |  SELECT cell, word, count(*) AS ctw
        |  FROM wds JOIN cells USING (doc_id) GROUP BY 1, 2

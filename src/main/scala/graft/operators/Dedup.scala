@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
+import graft.functions.TextDigest.{M31, gram, md5Bits, normalized, sqlGram, sqlMd5Bits, sqlNormalized, sqlWordDigests, sqlWords, wordDigests, words}
 import graft.sources.{Artifacts, Pinned}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -42,28 +43,17 @@ object Dedup {
     */
   val MaxBandBucket = 200
 
-  private def words = split(col("text"), "\\s+")
-  private val M31 = 2147483648L
-
-  /** Word 3-gram shingle digest stream: one md5 per WORD (28-bit integer
-    * digest), then shingle base = the LCG-style combine of 3 consecutive word
-    * digests — ((h₁·69069 + h₂) mod 2³¹)·69069 + h₃ mod 2³¹, all intermediates
-    * < 2⁶² so exact BIGINT in both engines. Building the 3-word shingle
-    * STRINGS and hashing those measured 8× slower at sf0.1 (6.7 s → 0.8 s for
-    * the explode+digest stage): per-shingle string assembly dominates, not the
-    * hash. try_element_at + coalesce(0): documents with < 3 words index past
-    * the array end, which under Spark 4 ANSI mode would throw; DuckDB's list
-    * indexing yields NULL there — both engines coalesce to 0.
+  /** Word 3-gram shingle digest stream: `base` is the
+    * [[graft.functions.TextDigest]] 3-gram digest at every word position
+    * (`hw` projected first). Building the 3-word shingle STRINGS and hashing
+    * those measured 8× slower at sf0.1 (6.7 s → 0.8 s for the explode+digest
+    * stage): per-shingle string assembly dominates, not the hash.
     */
-  private def shingleDigests(docs: DataFrame): DataFrame = {
-    val hw = transform(words, w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
-    def at(c: Column, i: Column): Column = coalesce(try_element_at(c, i), lit(0L))
-    docs.select(col("doc_id"), hw.as("hw"), size(words).as("nw"))
+  private def shingleDigests(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), wordDigests().as("hw"), size(words).as("nw"))
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), greatest(col("nw") - 3, lit(0))),
-          i => (((at(col("hw"), i + 1) * 69069L + at(col("hw"), i + 2)) % M31) * 69069L
-            + at(col("hw"), i + 3)) % M31)).as("base"))
-  }
+          i => gram(col("hw"), i, 3))).as("base"))
 
   /** Distinct (doc_id, base) long table — the canonical shingle-set view.
     *
@@ -144,13 +134,10 @@ object Dedup {
   private val docShinglesSql: String =
     s"""shingles0 AS (
        |  SELECT doc_id,
-       |         list_transform(regexp_split_to_array(text, '\\s+'),
-       |                        w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+       |         ${sqlWordDigests} AS hw
        |  FROM documents
        |), shingles AS (
-       |  SELECT DISTINCT s.doc_id,
-       |         ((((coalesce(s.hw[g.i + 1], 0) * 69069 + coalesce(s.hw[g.i + 2], 0)) % $M31) * 69069
-       |           + coalesce(s.hw[g.i + 3], 0)) % $M31) AS base
+       |  SELECT DISTINCT s.doc_id, ${sqlGram("s.hw", "g.i", 3)} AS base
        |  FROM shingles0 s,
        |       LATERAL (SELECT unnest(generate_series(0, greatest(len(s.hw) - 3, 0))) AS i) g
        |)""".stripMargin
@@ -178,7 +165,7 @@ object Dedup {
     // all k minhashes as parallel min-aggregates in ONE pass (no k-fold explode:
     // shuffle volume is #docs × k values, scan volume is the shingle table once)
     val mins = (0 until NumHashes).map { h =>
-      min((col("base") * (69069L + 2L * h) + 12345L) % 2147483648L).as(s"mh$h")
+      min((col("base") * (69069L + 2L * h) + 12345L) % M31).as(s"mh$h")
     }
     val sig = sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
     val bandCols = (0 until NumHashes / BandRows).map { b =>
@@ -191,7 +178,7 @@ object Dedup {
 
   private def minhashBandsSql: String = {
     val minExprs = (0 until NumHashes).map { h =>
-      s"min((base * ${69069 + 2 * h} + 12345) % 2147483648) AS mh$h"
+      s"min((base * ${69069 + 2 * h} + 12345) % $M31) AS mh$h"
     }.mkString(",\n       |         ")
     val bandSelects = (0 until NumHashes / BandRows).map { b =>
       val key = (0 until BandRows).map(r => s"CAST(mh${b * BandRows + r} AS VARCHAR)").mkString(" || '-' || ")
@@ -441,10 +428,10 @@ object Dedup {
     */
   private def simhashSqlChain: String =
     s"""WITH toks AS (
-       |  SELECT DISTINCT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS tok
+       |  SELECT DISTINCT doc_id, unnest(${sqlWords()}) AS tok
        |  FROM documents
        |), hv_t AS (
-       |  SELECT doc_id, tok, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS hv FROM toks
+       |  SELECT doc_id, tok, ${sqlMd5Bits("tok", 15)} AS hv FROM toks
        |), votes AS (
        |  SELECT doc_id, CAST(b.i AS INT) AS bit,
        |         CAST(sum(CASE WHEN (hv >> CAST(b.i AS INT)) % 2 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS v
@@ -648,9 +635,9 @@ object Dedup {
          |FROM flags""".stripMargin
 
   /** SimHash: [[SimBits]]-bit fingerprint from per-token md5 bits, weight ±1
-    * per distinct token; bit set iff the signed vote is positive. 15 hex
-    * chars of the md5 = 60 bits — the widest value that fits a SIGNED 64-bit
-    * long in both engines (16 chars can exceed 2^63 and overflow the cast).
+    * per distinct token; bit set iff the signed vote is positive. Tokens
+    * carry 15 hex digits of md5 (60 bits, the widest
+    * [[graft.functions.TextDigest.md5Bits]] width).
     *
     * One pass: all bit votes are parallel conditional sums in a single
     * `groupBy(doc_id)` — the same trick as the k-minhash aggregation — instead
@@ -660,7 +647,7 @@ object Dedup {
   def simhash(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(words).as("tok")).distinct()
-      .withColumn("hv", conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
+      .withColumn("hv", md5Bits(col("tok"), 15))
     val votes = (0 until SimBits).map { b =>
       sum(when(shiftright(col("hv"), b) % 2 === 1, 1).otherwise(-1)).as(s"v$b")
     }
@@ -866,8 +853,7 @@ object Dedup {
     */
   def editDistancePairs(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " ").as("t"))
+      .select(col("doc_id"), normalized.as("t"))
       .select(col("doc_id"), col("t"),
         substring(col("t"), 1, EditBlockPrefix).as("pfx"),
         floor(length(col("t")).cast("double") / EditLenBucket).cast("long").as("lb"))
@@ -887,7 +873,7 @@ object Dedup {
 
   def editDistancePairsOracle: String =
     s"""WITH d AS (
-       |  SELECT doc_id, regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS t
+       |  SELECT doc_id, ${sqlNormalized} AS t
        |  FROM documents
        |), k AS (
        |  SELECT doc_id, t, substr(t, 1, $EditBlockPrefix) AS pfx, len(t)//$EditLenBucket AS lb FROM d

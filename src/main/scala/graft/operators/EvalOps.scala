@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
+import graft.functions.TextDigest.{md5Bits, sqlMd5Bits}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -759,9 +760,7 @@ object EvalOps {
       .localCheckpoint(eager = true) // one user-sized table feeds both sides
     val types = vecs.columns.filterNot(_ == "user_id").sorted
     val qsel = vecs.select(col("user_id"))
-      .withColumn("h", conv(substring(
-        md5(concat(lit("usq:"), col("user_id").cast("string"))), 1, 7), 16, 10)
-        .cast("long"))
+      .withColumn("h", md5Bits(concat(lit("usq:"), col("user_id").cast("string"))))
       .orderBy("h", "user_id").limit(UserSimRecallMaxQ)
       .select("user_id")
     val a = vecs.join(broadcast(qsel), Seq("user_id"))
@@ -796,7 +795,7 @@ object EvalOps {
        |), qsel AS (
        |  SELECT user_id FROM (
        |    SELECT user_id,
-       |           ('0x' || substr(md5('usq:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT AS h
+       |           ${sqlMd5Bits("'usq:' || CAST(user_id AS VARCHAR)")} AS h
        |    FROM (SELECT DISTINCT user_id FROM cnt)
        |  ) ORDER BY h, user_id LIMIT $UserSimRecallMaxQ
        |), norms AS (
@@ -873,8 +872,7 @@ object EvalOps {
     val cnt = Tables.events(spark, dir)
       .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
-    val th = conv(substring(md5(col("event_type")), 1, 7), 16, 10)
-      .cast("long").cast("double")
+    val th = md5Bits(col("event_type")).cast("double")
     def coef(p: Int): Column =
       when(DetRand.u01(th, p) >= 0.5, 1L).otherwise(-1L)
     val proj = cnt.groupBy("user_id").agg(
@@ -1033,7 +1031,7 @@ object EvalOps {
        |  SELECT user_id, event_type, count(*) AS n FROM events GROUP BY 1, 2
        |), hcnt AS (
        |  SELECT user_id, event_type, n,
-       |         ('0x' || substr(md5(event_type), 1, 7))::BIGINT AS h
+       |         ${sqlMd5Bits("event_type")} AS h
        |  FROM cnt
        |), proj AS (
        |  SELECT user_id, CAST(sum(n*n) AS BIGINT) AS nrm2,
@@ -1103,9 +1101,7 @@ object EvalOps {
       .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
     val qsel = cnt.select("user_id").distinct()
-      .withColumn("h", conv(substring(
-        md5(concat(lit("usq:"), col("user_id").cast("string"))), 1, 7), 16, 10)
-        .cast("long"))
+      .withColumn("h", md5Bits(concat(lit("usq:"), col("user_id").cast("string"))))
       .orderBy("h", "user_id").limit(UserSimRecallMaxQ)
       .select("user_id").localCheckpoint(eager = true)
     val dots = cnt.join(broadcast(qsel), Seq("user_id"))
@@ -1149,7 +1145,7 @@ object EvalOps {
        |), qsel AS (
        |  SELECT user_id FROM (
        |    SELECT user_id,
-       |           ('0x' || substr(md5('usq:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT AS h
+       |           ${sqlMd5Bits("'usq:' || CAST(user_id AS VARCHAR)")} AS h
        |    FROM (SELECT DISTINCT user_id FROM qcnt)
        |  ) ORDER BY h, user_id LIMIT $UserSimRecallMaxQ
        |), qnorms AS (

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
+import graft.functions.TextDigest.{md5Bits, sqlMd5Bits}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -593,7 +594,7 @@ object EventsOps {
   def featureHash(spark: SparkSession, dir: String): DataFrame = {
     val feat = concat(col("event_type"), lit("#"),
       floor(col("value")).cast("long").cast("string"))
-    val h = conv(substring(md5(feat), 1, 7), 16, 10).cast("long")
+    val h = md5Bits(feat)
     val bucket = (h % HashDim).cast("int")
     // sign bit from the hash's next bit up — shiftright, NOT `/` (double div)
     val sign = when(shiftright(h, 4) % 2L === 0L, 1L).otherwise(-1L)
@@ -610,10 +611,11 @@ object EventsOps {
   def featureHashOracle: String = {
     val cols = (0 until HashDim).map(j =>
       s"CAST(coalesce(sum(CASE WHEN j = $j THEN s END), 0) AS BIGINT) AS f$j").mkString(",\n       |       ")
+    val h = sqlMd5Bits("event_type || '#' || CAST(CAST(floor(value) AS BIGINT) AS VARCHAR)")
     s"""WITH q AS (
        |  SELECT user_id,
-       |         CAST(('0x' || substr(md5(event_type || '#' || CAST(CAST(floor(value) AS BIGINT) AS VARCHAR)), 1, 7))::BIGINT % $HashDim AS INT) AS j,
-       |         CASE WHEN (('0x' || substr(md5(event_type || '#' || CAST(CAST(floor(value) AS BIGINT) AS VARCHAR)), 1, 7))::BIGINT >> 4) % 2 = 0 THEN 1 ELSE -1 END AS s
+       |         CAST($h % $HashDim AS INT) AS j,
+       |         CASE WHEN ($h >> 4) % 2 = 0 THEN 1 ELSE -1 END AS s
        |  FROM events
        |)
        |SELECT user_id,
@@ -678,7 +680,7 @@ object EventsOps {
     * absorbed by r6 (the Box-Muller precedent).
     */
   def dpCounts(spark: SparkSession, dir: String): DataFrame = {
-    val keyC = (conv(substring(md5(col("event_type")), 1, 7), 16, 10).cast("long") * 100L +
+    val keyC = (md5Bits(col("event_type")) * 100L +
       dayofmonth(col("d")).cast("long")).cast("double")
     val u = graft.functions.DetRand.u01(keyC, DpStream)
     val b = 1.0 / DpEpsilon
@@ -693,7 +695,7 @@ object EventsOps {
   }
 
   def dpCountsOracle: String = {
-    val key = "CAST(('0x' || substr(md5(event_type), 1, 7))::BIGINT * 100 + CAST(day(d) AS BIGINT) AS DOUBLE)"
+    val key = s"CAST(${sqlMd5Bits("event_type")} * 100 + CAST(day(d) AS BIGINT) AS DOUBLE)"
     val u = graft.functions.DetRand.sqlU01(key, DpStream)
     val b = 1.0 / DpEpsilon
     val noise = s"(-${sqlD(b)} * sign(($u) - 0.5) * ln(1.0 - 2.0 * abs(($u) - 0.5)))"

@@ -93,24 +93,32 @@ object Multimodal {
     }
   }
 
-  /** Synthetic media table: deterministic pseudo-random payload per id.
-    * Payload bytes come from the same LCG family as everything else, so the
-    * table is reproducible across runs/engines.
+  /** The first `n` payload bytes of `seed`, the one byte stream every media
+    * fixture encodes: x₀ = (seed·40503 + 12345) mod 2³¹,
+    * x_e = (69069·x_{e−1} + 12345) mod 2³¹, byte e−1 = bits 8..15 of x_e
+    * (the oracle's closed form, [[bytesSql]]).
+    */
+  private def lcgBytes(seed: Long, n: Int): Array[Byte] = {
+    val out = new Array[Byte](n)
+    var x = (seed * 40503 + 12345) % M31
+    var i = 0
+    while (i < n) {
+      x = (x * 69069 + 12345) % M31
+      out(i) = (x >>> 8).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** Synthetic media table: deterministic pseudo-random payload per id
+    * ([[lcgBytes]]), so the table is reproducible across runs/engines.
     */
   def mediaTable(spark: SparkSession, n: Long = 64, bytesPer: Int = 4096): DataFrame = {
     import spark.implicits._
     spark.range(n).as[Long].mapPartitions { ids =>
       ids.map { id =>
         val kind = if (id % 3 == 0) "image" else if (id % 3 == 1) "audio" else "video"
-        val payload = new Array[Byte](bytesPer)
-        var x = (id * 40503 + 12345) % 2147483648L
-        var i = 0
-        while (i < bytesPer) {
-          x = (x * 69069 + 12345) % 2147483648L
-          payload(i) = (x >>> 8).toByte
-          i += 1
-        }
-        MediaRow(id, kind, 64, 48, payload)
+        MediaRow(id, kind, 64, 48, lcgBytes(id, bytesPer))
       }
     }.toDF()
   }
@@ -154,14 +162,7 @@ object Multimodal {
         javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED,
         8000f, 8, 1, 1, 8000f, false)
       ids.map { id =>
-        val pcm = new Array[Byte](WavSamples)
-        var x = (id * 40503 + 12345) % 2147483648L
-        var i = 0
-        while (i < WavSamples) {
-          x = (x * 69069 + 12345) % 2147483648L
-          pcm(i) = ((x >>> 8) & 255L).toByte
-          i += 1
-        }
+        val pcm = lcgBytes(id, WavSamples)
         val stream = new javax.sound.sampled.AudioInputStream(
           new java.io.ByteArrayInputStream(pcm), fmt, WavSamples.toLong)
         val baos = new java.io.ByteArrayOutputStream()
@@ -204,7 +205,7 @@ object Multimodal {
         val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
         writer.setOutput(ios)
         writer.prepareWriteSequence(null)
-        var x = (id * 40503 + 12345) % 2147483648L
+        val px = lcgBytes(id, GifFrames * GifW * GifH) // one stream across frames
         var f = 0
         while (f < GifFrames) {
           val img = new java.awt.image.BufferedImage(
@@ -212,8 +213,7 @@ object Multimodal {
           val raster = img.getRaster
           var j = 0
           while (j < GifW * GifH) {
-            x = (x * 69069 + 12345) % 2147483648L
-            raster.setSample(j % GifW, j / GifW, 0, ((x >>> 8) & 255L).toInt)
+            raster.setSample(j % GifW, j / GifW, 0, px(f * GifW * GifH + j) & 0xff)
             j += 1
           }
           writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
@@ -320,11 +320,10 @@ object Multimodal {
         val img = new java.awt.image.BufferedImage(
           PngW, PngH, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
         val raster = img.getRaster
-        var x = (id * 40503 + 12345) % 2147483648L
+        val px = lcgBytes(id, PngW * PngH)
         var i = 0
         while (i < PngW * PngH) {
-          x = (x * 69069 + 12345) % 2147483648L
-          raster.setSample(i % PngW, i / PngW, 0, ((x >>> 8) & 255L).toInt)
+          raster.setSample(i % PngW, i / PngW, 0, px(i) & 0xff)
           i += 1
         }
         val baos = new java.io.ByteArrayOutputStream()
@@ -367,13 +366,11 @@ object Multimodal {
         val img = new java.awt.image.BufferedImage(
           PngW, PngH, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
         val raster = img.getRaster
-        var x = (base * 40503 + 12345) % 2147483648L
+        val px = lcgBytes(base, PngW * PngH)
         var i = 0
         while (i < PngW * PngH) {
-          x = (x * 69069 + 12345) % 2147483648L
-          val v = ((x >>> 8) & 255L).toInt
-          val px = if (variant && i % 97 == 0) 255 - v else v
-          raster.setSample(i % PngW, i / PngW, 0, px)
+          val v = px(i) & 0xff
+          raster.setSample(i % PngW, i / PngW, 0, if (variant && i % 97 == 0) 255 - v else v)
           i += 1
         }
         val baos = new java.io.ByteArrayOutputStream()
@@ -455,15 +452,7 @@ object Multimodal {
       ids.map { id =>
         val seed = id % DupSeedMod
         val kind = if (seed % 3 == 0) "image" else if (seed % 3 == 1) "audio" else "video"
-        val payload = new Array[Byte](bytesPer)
-        var x = (seed * 40503 + 12345) % 2147483648L
-        var i = 0
-        while (i < bytesPer) {
-          x = (x * 69069 + 12345) % 2147483648L
-          payload(i) = (x >>> 8).toByte
-          i += 1
-        }
-        MediaRow(id, kind, 64, 48, payload)
+        MediaRow(id, kind, 64, 48, lcgBytes(seed, bytesPer))
       }
     }.toDF()
   }

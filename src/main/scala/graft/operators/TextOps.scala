@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
+import graft.functions.TextDigest.{gram, normalized, sqlGram, sqlNormalized, sqlStep, sqlWordDigests, sqlWords, step, wordDigests, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +16,6 @@ import org.apache.spark.sql.functions._
   * 100 TB these are embarrassingly parallel map-side passes.
   */
 object TextOps {
-  private val words: Column = split(col("text"), "\\s+")
 
   /** Whole-word stopword hit count (list kept tiny and literal). */
   private def stopHits(ws: Column, stops: Seq[String]): Column =
@@ -102,27 +102,18 @@ object TextOps {
   /** Document fingerprinting: md5 of the normalized text plus the minimum
     * word-3-shingle digest (a 1-permutation minhash / rolling-hash stand-in).
     *
-    * The shingle digest is the same arithmetic combine as Dedup.shingleDigests
-    * — one md5 per WORD (28-bit integer digest), then an LCG-style fold of 3
-    * consecutive word digests, all intermediates < 2⁶² so exact BIGINT in both
-    * engines. Assembling 3-word shingle STRINGS and md5-hashing each measured
-    * ~8× slower (it was the most expensive query in the whole r2 bench at
-    * ~13 s): per-shingle string assembly + the per-shingle hash dominate, not
-    * the combine. No explode either — array_min over a transform keeps the
-    * whole query one narrow projection, zero shuffle.
+    * The shingle digest is the [[graft.functions.TextDigest]] 3-gram digest
+    * (one md5 per word, an integer fold per shingle; `hw` projected first).
+    * No explode either — array_min over a transform keeps the whole query
+    * one narrow projection, zero shuffle.
     */
-  def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    val norm = regexp_replace(trim(lower(col("text"))), "\\s+", " ")
-    val hw = transform(words, w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
-    def at(c: Column, i: Column): Column = coalesce(try_element_at(c, i), lit(0L))
-    val M31 = 2147483648L
+  def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), md5(norm).as("fingerprint"), hw.as("hw"), size(words).as("nw"))
+      .select(col("doc_id"), md5(normalized).as("fingerprint"), wordDigests().as("hw"),
+        size(words).as("nw"))
       .select(col("doc_id"), col("fingerprint"),
         array_min(transform(sequence(lit(0), greatest(col("nw") - 3, lit(0))),
-          i => (((at(col("hw"), i + 1) * 69069L + at(col("hw"), i + 2)) % M31) * 69069L
-            + at(col("hw"), i + 3)) % M31)).as("min_shingle_hash"))
-  }
+          i => gram(col("hw"), i, 3))).as("min_shingle_hash"))
 
   /** Per-(lang, source) corpus aggregates. */
   def corpusStats(spark: SparkSession, dir: String): DataFrame =
@@ -299,10 +290,8 @@ object TextOps {
 
   // ---------------- DuckDB oracle twins ----------------
 
-  private val wordsSql = """regexp_split_to_array(text, '\s+')"""
-
   private def stopHitsSql(stops: Seq[String]): String =
-    s"len(list_filter($wordsSql, w -> w IN (${stops.map(s => s"'$s'").mkString(", ")})))::BIGINT"
+    s"len(list_filter(${sqlWords()}, w -> w IN (${stops.map(s => s"'$s'").mkString(", ")})))::BIGINT"
 
   /** CTE `<name>(doc_id, lang, source, n_words, quality_score)` — the score
     * arithmetic of [[quality]], shared with the corpus-curation oracle.
@@ -312,7 +301,7 @@ object TextOps {
        |  SELECT doc_id, lang, source, n_words,
        |         ${sqlR6("greatest(0.0e0, least(1.0e0, 0.25e0 * ln(1.0e0 + CAST(n_words AS DOUBLE)) - 2.0e0 * (n_punct / len_c) - 2.0e0 * (n_digit / len_c)))")} AS quality_score
        |  FROM (SELECT doc_id, lang, source,
-       |               len($wordsSql)::BIGINT AS n_words,
+       |               len(${sqlWords()})::BIGINT AS n_words,
        |               CAST(length(text) AS DOUBLE) AS len_c,
        |               CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS n_punct,
        |               CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_digit
@@ -402,7 +391,7 @@ object TextOps {
   }
 
   def bpeApplyOracle: String =
-    s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, ${sqlWords()} AS ws FROM documents),
        |toks AS (
        |  SELECT doc_id, g.i AS pos, ws[g.i] AS tok
        |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
@@ -468,7 +457,7 @@ object TextOps {
 
   def lexicalDiversityOracle: String =
     s"""WITH tok AS (
-       |  SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS w FROM documents
+       |  SELECT doc_id, unnest(${sqlWords()}) AS w FROM documents
        |), cnt AS (
        |  SELECT doc_id, w, count(*) AS c FROM tok GROUP BY 1, 2
        |)
@@ -531,20 +520,19 @@ object TextOps {
     * (every RAG/embedding pipeline runs exactly this before embedding):
     * each doc explodes into word windows of [[ChunkWords]] advancing by
     * [[ChunkStride]], keeping (doc_id, chunk_idx) identity, the chunk text,
-    * its word count, and a 28-bit LCG content digest (the [[fingerprint]]
-    * scheme) for downstream chunk-level dedup. The LAST window is the one
-    * starting at the largest stride multiple ≤ max(n−chunk, 0): a short tail
-    * is absorbed into that final (possibly short) window rather than
-    * emitting a sliver chunk. Scale: a narrow per-row explode — no shuffle,
-    * no join; output keys (doc_id, chunk_idx) keep chunks of a doc
-    * co-partitioned with the doc for the embedding pass that follows.
+    * its word count, and a 31-bit content digest (the
+    * [[graft.functions.TextDigest.step]] fold of its word digests) for
+    * downstream chunk-level dedup. The LAST window is the one starting at the
+    * largest stride multiple ≤ max(n−chunk, 0): a short tail is absorbed
+    * into that final (possibly short) window rather than emitting a sliver
+    * chunk. Scale: a narrow per-row explode — no shuffle, no join; output
+    * keys (doc_id, chunk_idx) keep chunks of a doc co-partitioned with the
+    * doc for the embedding pass that follows.
     */
-  def ragChunks(spark: SparkSession, dir: String): DataFrame = {
-    val hw: Column =
-      transform(col("ws"), w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
+  def ragChunks(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), words.as("ws"))
-      .withColumn("hw", hw)
+      .withColumn("hw", wordDigests(col("ws")))
       .select(col("doc_id"), col("ws"), col("hw"),
         posexplode(sequence(lit(0),
           greatest(size(col("ws")) - ChunkWords, lit(0)), lit(ChunkStride))))
@@ -554,13 +542,12 @@ object TextOps {
         size(slice(col("ws"), col("start_word") + 1, lit(ChunkWords))).cast("long").as("n_chunk_words"),
         array_join(slice(col("ws"), col("start_word") + 1, lit(ChunkWords)), " ").as("chunk_text"),
         aggregate(slice(col("hw"), col("start_word") + 1, lit(ChunkWords)),
-          lit(0L), (acc, h) => (acc * 69069L + h) % 2147483648L).as("chunk_digest"))
-  }
+          lit(0L), step).as("chunk_digest"))
 
   def ragChunksOracle: String =
     s"""WITH base AS (
-       |  SELECT doc_id, $wordsSql AS ws,
-       |         list_transform($wordsSql, w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+       |  SELECT doc_id, ${sqlWords()} AS ws,
+       |         ${sqlWordDigests} AS hw
        |  FROM documents
        |), st AS (
        |  SELECT doc_id, ws, hw,
@@ -571,7 +558,7 @@ object TextOps {
        |       len(ws[start_word + 1 : start_word + $ChunkWords])::BIGINT AS n_chunk_words,
        |       array_to_string(ws[start_word + 1 : start_word + $ChunkWords], ' ') AS chunk_text,
        |       CAST(list_reduce(list_prepend(0, hw[start_word + 1 : start_word + $ChunkWords]),
-       |                        (acc, h) -> (acc * 69069 + h) % 2147483648) AS BIGINT) AS chunk_digest
+       |                        (acc, h) -> ${sqlStep("acc", "h")}) AS BIGINT) AS chunk_digest
        |FROM st
        |ORDER BY doc_id, chunk_idx""".stripMargin
 
@@ -615,7 +602,7 @@ object TextOps {
   }
 
   def pmiCollocationsOracle: String =
-    s"""WITH w AS (SELECT $wordsSql AS ws FROM documents),
+    s"""WITH w AS (SELECT ${sqlWords()} AS ws FROM documents),
        |pairs AS (
        |  SELECT ws[g.i] AS w1, ws[g.i + 1] AS w2
        |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i) g
@@ -655,7 +642,7 @@ object TextOps {
   }
 
   def readabilityOracle: String = {
-    val w = """greatest(CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT), 1)"""
+    val w = s"greatest(CAST(len(${sqlWords()}) AS BIGINT), 1)"
     val s_ = """greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1)"""
     val y = """greatest(CAST(len(regexp_extract_all(text, '[aeiouy]+')) AS BIGINT), 1)"""
     s"""SELECT doc_id, $w AS n_words, $s_ AS n_sentences, $y AS n_syllables,
@@ -742,7 +729,7 @@ object TextOps {
     "text_lexical_diversity" -> lexicalDiversityOracle,
     "text_bpe_apply" -> bpeApplyOracle,
     "text_bigram_merges" ->
-      s"""WITH w AS (SELECT $wordsSql AS ws FROM documents),
+      s"""WITH w AS (SELECT ${sqlWords()} AS ws FROM documents),
          |pairs AS (
          |  SELECT ws[g.i] AS w1, ws[g.i + 1] AS w2
          |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i) g
@@ -752,7 +739,7 @@ object TextOps {
          |ORDER BY cnt DESC, w1, w2 LIMIT $MergeTopK""".stripMargin,
     "text_token_counts" ->
       s"""SELECT doc_id,
-         |       len($wordsSql)::BIGINT AS n_words,
+         |       len(${sqlWords()})::BIGINT AS n_words,
          |       len(regexp_extract_all(text, '[a-z]+'))::BIGINT AS n_alpha,
          |       len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT AS n_bpeish,
          |       length(text)::BIGINT AS len_chars, n_chars
@@ -760,7 +747,7 @@ object TextOps {
     "text_quality" ->
       s"""WITH q AS (
          |  SELECT doc_id, lang, source,
-         |         len($wordsSql)::BIGINT AS n_words,
+         |         len(${sqlWords()})::BIGINT AS n_words,
          |         CAST(length(text) AS DOUBLE) AS len_c,
          |         CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS n_punct,
          |         CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_digit,
@@ -797,22 +784,21 @@ object TextOps {
     "text_fingerprint" ->
       s"""WITH h AS (
          |  SELECT doc_id,
-         |         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fingerprint,
-         |         list_transform($wordsSql, w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+         |         md5(${sqlNormalized}) AS fingerprint,
+         |         ${sqlWordDigests} AS hw
          |  FROM documents
          |)
          |SELECT doc_id, fingerprint,
          |       list_min(list_transform(generate_series(0, greatest(len(hw) - 3, 0)),
-         |         i -> ((((coalesce(hw[i + 1], 0) * 69069 + coalesce(hw[i + 2], 0)) % 2147483648) * 69069
-         |               + coalesce(hw[i + 3], 0)) % 2147483648))) AS min_shingle_hash
+         |         i -> ${sqlGram("hw", "i", 3)})) AS min_shingle_hash
          |FROM h ORDER BY doc_id""".stripMargin,
     "text_corpus_stats" ->
       s"""SELECT lang, source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars,
-         |       ${sqlR6(s"avg(CAST(len($wordsSql) AS DOUBLE))")} AS avg_words
+         |       ${sqlR6(s"avg(CAST(len(${sqlWords()}) AS DOUBLE))")} AS avg_words
          |FROM documents GROUP BY 1, 2 ORDER BY lang, source""".stripMargin,
     "text_tfidf" ->
       s"""WITH tok AS (
-         |  SELECT doc_id, unnest($wordsSql) AS word FROM documents
+         |  SELECT doc_id, unnest(${sqlWords()}) AS word FROM documents
          |), tfc AS (
          |  SELECT doc_id, word, count(*) AS tf FROM tok GROUP BY 1, 2
          |), dfc AS (
@@ -830,7 +816,7 @@ object TextOps {
          |WHERE rn <= $TfIdfTopK ORDER BY doc_id, rank""".stripMargin,
     "text_seq_pack" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, source, len($wordsSql)::BIGINT AS n_tokens FROM documents
+         |  SELECT doc_id, source, len(${sqlWords()})::BIGINT AS n_tokens FROM documents
          |), packed AS (
          |  SELECT doc_id, source, n_tokens,
          |         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
@@ -850,7 +836,7 @@ object TextOps {
          |  SELECT greatest($PackShards, CAST(ceil(count(*) / $PackShardDocs.0e0) AS BIGINT)) AS k
          |  FROM documents
          |), toks AS (
-         |  SELECT doc_id % (SELECT k FROM nk) AS shard, doc_id, len($wordsSql)::BIGINT AS n_tokens,
+         |  SELECT doc_id % (SELECT k FROM nk) AS shard, doc_id, len(${sqlWords()})::BIGINT AS n_tokens,
          |         row_number() OVER (PARTITION BY doc_id % (SELECT k FROM nk) ORDER BY doc_id) AS seq
          |  FROM documents
          |), walk AS (
@@ -874,7 +860,7 @@ object TextOps {
     "text_vocab_hll" ->
       s"""SELECT source, count(DISTINCT word) AS n_words_exact,
          |       count(*) AS n_tokens, true AS hll_within_tol
-         |FROM (SELECT source, unnest($wordsSql) AS word FROM documents)
+         |FROM (SELECT source, unnest(${sqlWords()}) AS word FROM documents)
          |GROUP BY 1 ORDER BY source""".stripMargin
   )
 }

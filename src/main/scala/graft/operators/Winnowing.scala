@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.TextDigest.{gram, sqlGram, sqlWordDigests, wordDigests}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +24,9 @@ import org.apache.spark.sql.functions._
   * That needs only a lag/lead fan of w−1 each — one narrow window pass per
   * doc partition, no position self-join; raw text never shuffles.
   *
-  * Reference analogue: none (north-star dedup surface); same word-digest
-  * scheme as [[Dedup]] / [[CorpusQc]] so every hash is an exact BIGINT in
-  * both engines.
+  * Reference analogue: none (north-star dedup surface); k-gram hashes are
+  * [[graft.functions.TextDigest]] n-gram digests, exact BIGINTs in both
+  * engines.
   */
 object Winnowing {
   /** k-gram width (words) the hashes cover. */
@@ -39,29 +40,16 @@ object Winnowing {
   /** Candidate pairs must share at least this many distinct fingerprints. */
   val WinnowMinShared = 2
 
-  private val M31 = 2147483648L
-  private val words: Column = split(col("text"), "\\s+")
-  private val hw: Column =
-    transform(words, w => conv(substring(md5(w), 1, 7), 16, 10).cast("long"))
-
-  private def at(c: Column, i: Column): Column =
-    coalesce(try_element_at(c, i), lit(0L))
-
-  private def gramDigest(hws: Column, i: Column): Column =
-    (2 to WinnowK).foldLeft(at(hws, i + 1)) { (h, j) =>
-      (h * 69069L + at(hws, i + j)) % M31
-    }
-
-  /** (doc_id, npos, pos, h): one row per k-gram position. `hw` is
-    * materialized as its own projection before the position transform (the
-    * [[CorpusQc.grams]] O(words²) md5 trap). */
+  /** (doc_id, npos, pos, h): one row per k-gram position. `hw` is its own
+    * projection before the position transform reads it (the md5 trap, see
+    * [[graft.functions.TextDigest]]). */
   private def positions(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), hw.as("hw"))
+      .select(col("doc_id"), wordDigests().as("hw"))
       .filter(size(col("hw")) >= WinnowK)
       .select(col("doc_id"), (size(col("hw")) - WinnowK + 1).as("npos"),
         posexplode(transform(sequence(lit(0), size(col("hw")) - WinnowK),
-          i => gramDigest(col("hw"), i))))
+          i => gram(col("hw"), i, WinnowK))))
       .withColumnsRenamed(Map("pos" -> "pos", "col" -> "h"))
 
   /** Adds the boolean `sel` column: is this position a winnowing fingerprint. */
@@ -114,11 +102,6 @@ object Winnowing {
 
   // ---------------- DuckDB oracle twins ----------------
 
-  private def gramDigestSql(i: String): String =
-    (2 to WinnowK).foldLeft(s"coalesce(hw[$i + 1], 0)") { (h, j) =>
-      s"(($h) * 69069 + coalesce(hw[$i + $j], 0)) % $M31"
-    }
-
   /** CTE chain ending in `sel(doc_id, npos, pos, h, sel)`. */
   private def selSqlChain: String = {
     val lags = (1 until WinnowW).map(i =>
@@ -133,12 +116,11 @@ object Winnowing {
     }.mkString(" OR ")
     s"""wh AS (
        |  SELECT doc_id,
-       |         list_transform(regexp_split_to_array(text, '\\s+'),
-       |                        w -> ('0x' || substr(md5(w), 1, 7))::BIGINT) AS hw
+       |         ${sqlWordDigests} AS hw
        |  FROM documents
        |), wpos AS (
        |  SELECT doc_id, len(hw) - $WinnowK + 1 AS npos, g.i AS pos,
-       |         ${gramDigestSql("g.i")} AS h
+       |         ${sqlGram("hw", "g.i", WinnowK)} AS h
        |  FROM wh, LATERAL (SELECT unnest(generate_series(0, len(hw) - $WinnowK)) AS i) g
        |  WHERE len(hw) >= $WinnowK
        |), fan AS (

@@ -21,12 +21,8 @@ import org.apache.spark.sql.SparkSession
   */
 object FileSizing {
 
-  /** Production bytes-per-file target. The env override is the deploy knob
-    * (e.g. 1 GB on a real cluster); the default suits the sandbox.
-    */
-  val TargetFileBytes: Long =
-    sys.env.get("SPARK_GRAFT_TARGET_FILE_BYTES").map(_.toLong)
-      .getOrElse(96L << 20)
+  /** Bytes-per-file target (96 MiB). */
+  val TargetFileBytes: Long = 96L << 20
 
   /** Most chunks the fixture-scale row form may cut before the byte ceiling
     * takes over. Large enough that every sf ≤ 0.1 demo keeps today's exact

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.{Curation, TextOps}
 import graft.functions.Num.sqlD
+import graft.functions.TextDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,7 +52,7 @@ object CurationStream {
         TextOps.nWordsCol.as("n_words"),
         TextOps.qualityScoreCol.as("quality_score"),
         (TextOps.predLangCol === col("lang")).as("matches_tag"),
-        md5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("fp"))
+        md5(TextDigest.normalized).as("fp"))
       .filter(col("quality_score") >= Curation.QualityMin && col("matches_tag"))
       .select("doc_id", "lang", "source", "n_words", "quality_score", "fp")
       .dropDuplicates("fp")
@@ -92,7 +93,7 @@ object CurationStream {
          |${TextOps.langMatchCteSql("lg")},
          |fps AS (
          |  SELECT doc_id,
-         |         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
+         |         md5(${TextDigest.sqlNormalized}) AS fp
          |  FROM documents
          |)
          |SELECT DISTINCT f.fp, qy.lang, qy.n_words, qy.quality_score

@@ -1,24 +1,29 @@
 package graft.streaming
 
 import java.io.BufferedOutputStream
-import java.nio.file.{Files, Paths, Path => NioPath}
+import java.nio.file.{Files, Paths, StandardCopyOption, Path => NioPath}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** The checkpoint manager of graft's streaming runs (set by
   * [[StreamingOps.withStreamWidth]]): Spark's `FileSystem`-based manager with
-  * file creation and directory creation on `file:` paths done through
-  * `java.nio`.
+  * file creation, directory creation and the atomic publish on `file:` paths
+  * done through `java.nio`.
   *
   * Without native Hadoop, `RawLocalFileSystem` sets every file and directory
   * permission it creates by forking `chmod`: the offset, commit and source
   * logs, the state schema and operator metadata, and the state store's delta
   * files cost one `stream_tumbling_agg` drain 25 processes. `java.nio` creates
-  * the same files with the process umask and forks none. Every other
-  * operation, and every other scheme, stays on the inherited Hadoop path:
-  * the atomic publish is still a temporary file renamed through
-  * `FileSystem.rename`, which forks nothing.
+  * the same files with the process umask and forks none.
+  *
+  * The publish is `Files.move(ATOMIC_MOVE)`, which replaces an existing
+  * target: the inherited `FileSystem.rename` on `file:` (Hive's
+  * `ProxyLocalFileSystem` on Spark's class path) refuses one, and Spark's
+  * best-effort overwrite then keeps the old content and the temporary file.
+  * A refused publish (target exists, `overwriteIfPossible` false) deletes
+  * its temporary file and throws `FileAlreadyExistsException`. Every other
+  * operation, and every other scheme, stays on the inherited Hadoop path.
   *
   * Files written here have no Hadoop `.crc` sidecar. That is safe: each
   * graft drain checkpoints to a fresh temporary directory, so no sidecar of
@@ -36,6 +41,17 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       new FSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(p)), null)
     case None => super.createTempFile(path)
   }
+
+  override def renameTempFile(srcPath: Path, dstPath: Path, overwriteIfPossible: Boolean): Unit =
+    (local(srcPath), local(dstPath)) match {
+      case (Some(src), Some(dst)) =>
+        if (!overwriteIfPossible && Files.exists(dst)) {
+          Files.deleteIfExists(src)
+          throw new FileAlreadyExistsException(s"Failed to rename $srcPath to $dstPath: destination exists")
+        }
+        Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+      case _ => super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+    }
 
   override def mkdirs(path: Path): Unit = local(path) match {
     case Some(p) => Files.createDirectories(p)

@@ -1,8 +1,24 @@
 package graft
 
 /** Dev main: prints the formatted physical plan of each named registry query
-  * (`Test/runMain graft.ExplainAudit tpch_q1 ts_decompose_dim ...`). */
+  * (`Test/runMain graft.ExplainAudit tpch_q1 ts_decompose_dim ...`).
+  *
+  * Ids that depend on what ran earlier in the JVM are masked ([[masked]]), so
+  * two commits' dumps of the same queries diff clean unless a plan changed. */
 object ExplainAudit {
+  /** `plan` with session-order ids replaced by `<n>`: expression ids (`#12`),
+    * RDD ids (`MapPartitionsRDD[7]`), exchange plan ids (`[plan_id=3]`),
+    * lambda variable numbers (`lambda x_4#..`), the source line of an RDD's
+    * call site (`at Dedup.scala:120`) and JVM lambda class names
+    * (`Multimodal$$$Lambda$59/0x7f82@249676e4`). */
+  def masked(plan: String): String = plan
+    .replaceAll("#\\d+", "#<n>")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[<n>]")
+    .replaceAll("plan_id=\\d+", "plan_id=<n>")
+    .replaceAll("lambda (\\w+)_\\d+#", "lambda $1_<n>#")
+    .replaceAll("\\.scala:\\d+", ".scala:<n>")
+    .replaceAll("\\$Lambda\\S*?@[0-9a-f]+", "\\$Lambda<n>")
+
   def main(args: Array[String]): Unit = {
     val spark = LocalSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -22,8 +38,8 @@ object ExplainAudit {
       // can't path-escape SPARK_GRAFT_EXPLAIN_DIR
       require(n.matches("[A-Za-z0-9_]+"), s"bad query name: $n")
       println(s"========== $n ==========")
-      val plan = SparkEntry.queries(n)(spark, sf).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = masked(SparkEntry.queries(n)(spark, sf).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       println(plan)
       outDir.foreach(d => java.nio.file.Files.writeString(
         java.nio.file.Paths.get(d, s"$n.txt"), plan))

@@ -155,22 +155,23 @@ class StreamRunSpec extends SparkSpec {
 
   test("overwrite semantics: refused without overwriteIfPossible, replaced with it") {
     withTempDir("graft-cfm") { dir =>
-      // Hadoop's own local file system: the `file:` default on Spark's class
-      // path is Hive's ProxyLocalFileSystem, whose rename refuses any existing
-      // target, which makes overwriteIfPossible a no-op
+      // the class path's own `file:` file system (Hive's ProxyLocalFileSystem,
+      // whose rename refuses an existing target), not one picked for the test
       val conf = new Configuration()
-      conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
-      conf.setBoolean("fs.file.impl.disable.cache", true)
+      assert(conf.get("fs.file.impl") == null)
+      val root = new Path(dir.toURI)
+      assert(root.getFileSystem(conf).getClass ==
+        org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), new Configuration()).getClass)
       val fm = manager(dir, conf)
-      val target = new Path(new Path(dir.toURI), "commits/0")
+      val target = new Path(root, "commits/0")
       write(fm, target, "first").close()
       val refused = write(fm, target, "second")
       intercept[FileAlreadyExistsException](refused.close())
       assert(read(fm, target) == "first")
       write(fm, target, "third", overwrite = true).close()
       assert(read(fm, target) == "third")
-      // Spark leaves the refused write's temporary file; it stays hidden
-      assert(new File(dir, "commits").list().filterNot(_.startsWith(".")).toSeq == Seq("0"))
+      // neither the refused nor the replacing write leaves a temporary file
+      assert(new File(dir, "commits").list().toSeq == Seq("0"))
     }
   }
 
