@@ -59,39 +59,38 @@ object Tables {
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     }
 
-  /** Streaming twin of [[events]]: same unit detection (via the batch footer
-    * probe), planned as an incremental file source. The file stream source
-    * requires a directory base path: when `events.parquet` is itself a
-    * directory (the normal shape of any engine-written / lakehouse table —
-    * the sf1 rehearsal fixture exposed that the glob form silently lists
-    * ZERO files there), it is watched directly; when it is a single file
-    * (the driver fixtures), the sf dir is watched with a glob filter
-    * selecting only that file.
+  /** An incremental file source over table `name` of a fixture dir. The
+    * file stream source needs a directory base path: when `<name>.parquet`
+    * is itself a directory (the shape of any engine-written or lakehouse
+    * table, and of `GenSf1`'s fixtures) it is watched directly, because a
+    * glob filter matches leaf file names only and would list ZERO files
+    * there; when it is a single file (the sf test fixtures), the fixture dir
+    * is watched with a glob filter selecting only that file. The probe goes
+    * through Hadoop's FileSystem, not java.io.File, which cannot see a
+    * non-local (HDFS/S3) directory and would pick the glob form.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    // probe through Hadoop's FileSystem, not java.io.File: a non-local dir
-    // (HDFS/S3 URI) is invisible to File.isDirectory, which would silently
-    // fall back to the glob form and list zero files — the exact failure
-    // this dir probe exists to prevent.
-    val probe = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = probe.getFileSystem(spark.sessionState.newHadoopConf())
+  def stream(spark: SparkSession, dir: String, name: String, schema: StructType): DataFrame = {
+    val table = s"$dir/$name.parquet"
+    val path = new org.apache.hadoop.fs.Path(table)
     val isDir =
-      try fs.getFileStatus(probe).isDirectory
+      try path.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(path).isDirectory
       catch { case _: java.io.FileNotFoundException => false }
-    val base = if (isDir) s"$dir/events.parquet" else dir
-    def src(schema: StructType): DataFrame = {
-      val r = spark.readStream.schema(schema)
-      (if (isDir) r else r.option("pathGlobFilter", "events.parquet")).parquet(base)
-    }
+    val r = spark.readStream.schema(schema)
+    if (isDir) r.parquet(table)
+    else r.option("pathGlobFilter", s"$name.parquet").parquet(dir)
+  }
+
+  /** Streaming twin of [[events]]: same unit detection (via the batch footer
+    * probe), planned as an incremental file source ([[stream]]). */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     nativeTsType(spark, dir) match {
       case Some(t) =>
-        src(eventsNativeSchema(t))
+        stream(spark, dir, "events", eventsNativeSchema(t))
           .withColumn("ts", col("ts").cast(TimestampType))
       case None =>
-        src(eventsRawSchema)
+        stream(spark, dir, "events", eventsRawSchema)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     }
-  }
 
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")

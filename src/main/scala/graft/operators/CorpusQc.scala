@@ -188,11 +188,12 @@ object CorpusQc {
 
   /** (doc_id, g): digest per non-overlapping [[ChunkWords]]-word chunk (docs
     * shorter than one chunk emit none); `hw` is projected first, as in
-    * [[grams]].
+    * [[grams]], and the length filter counts words: a filter on `size(hw)`
+    * is pushed below that projection and hashes every word a second time.
     */
   private def chunks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), wordDigests().as("hw"))
-      .filter(size(col("hw")) >= ChunkWords)
+    Tables.documents(spark, dir).filter(size(words) >= ChunkWords)
+      .select(col("doc_id"), wordDigests().as("hw"))
       .select(col("doc_id"),
         explode(transform(
           sequence(lit(0), floor(size(col("hw")) / lit(ChunkWords.toDouble)).cast("int") - 1),
@@ -204,18 +205,21 @@ object CorpusQc {
     * paragraph-dedup pass (Wenzek et al., LREC 2020) re-expressed over word
     * chunks, since fixture docs carry no line structure.
     *
-    * Scale: only 31-bit digests shuffle — once to count distinct docs per
-    * digest, once to join the (g, n_docs) counts back. Both are digest-keyed
-    * hash shuffles with map-side collapse; raw text never moves.
+    * A chunk is shared when its digest's rows span more than one doc
+    * (min doc_id ≠ max doc_id over the digest), so the chunks are derived
+    * once: a count-and-join-back form reads them, and hashes every word,
+    * twice. Scale: only (doc_id, 31-bit digest) rows shuffle — once by
+    * digest for the window, once by doc; raw text never moves.
     */
   def chunkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val ch = chunks(spark, dir)
-    val shared = ch.groupBy("g").agg(countDistinct(col("doc_id")).as("n_docs"))
+    val byDigest = Window.partitionBy("g")
     val frac = r6(col("n_shared_chunks").cast("double") / col("n_chunks").cast("double"))
-    ch.join(shared, "g")
+    chunks(spark, dir)
+      .select(col("doc_id"),
+        (min(col("doc_id")).over(byDigest) =!= max(col("doc_id")).over(byDigest)).as("shared"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("n_docs") >= 2, 1L).otherwise(0L)).as("n_shared_chunks"))
+        sum(when(col("shared"), 1L).otherwise(0L)).as("n_shared_chunks"))
       .select(col("doc_id"), col("n_chunks"), col("n_shared_chunks"),
         frac.as("shared_frac"), (frac > SharedFracThreshold).as("boilerplate"))
   }

@@ -305,12 +305,11 @@ object Diffusion {
     *
     * The 50 steps collapse into ONE projection, without the lineage-cutting
     * `localCheckpoint`s a deep plan would usually want: with one expression
-    * node per Gaussian draw the projection stays in whole-stage codegen.
-    * Its generated method (~27 KB of bytecode) is above HotSpot's 8 KB JIT
-    * limit, so rows run through the bytecode interpreter: at the registered
-    * 20 × 64 cells that costs ~0.2 s of execution, while dropping a
-    * checkpoint every 10 steps saved ~0.3 s and 5 eager jobs of plan build.
-    * A much larger grid wants the one-pass step-loop expression instead.
+    * node per Gaussian draw the projection stays in whole-stage codegen,
+    * and with each draw one call into `DetDraw` its generated method is
+    * 7,793 bytes of bytecode, under HotSpot's 8,000-byte JIT limit. The
+    * method grows with `timesteps`: a much longer schedule wants the
+    * one-pass step-loop expression instead.
     */
   def sampleIterative(spark: SparkSession, n: Long = 20, seqLen: Int = L,
                       timesteps: Int = 50, kind: String = "linear"): DataFrame = {

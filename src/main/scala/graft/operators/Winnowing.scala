@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Num._
-import graft.functions.TextDigest.{gram, sqlGram, sqlWordDigests, wordDigests}
+import graft.functions.TextDigest.{gram, sqlGram, sqlWordDigests, wordDigests, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,11 +42,13 @@ object Winnowing {
 
   /** (doc_id, npos, pos, h): one row per k-gram position. `hw` is its own
     * projection before the position transform reads it (the md5 trap, see
-    * [[graft.functions.TextDigest]]). */
+    * [[graft.functions.TextDigest]]); the length filter counts words, since
+    * a filter on `size(hw)` is pushed below that projection and hashes every
+    * word a second time. */
   private def positions(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
+      .filter(size(words) >= WinnowK)
       .select(col("doc_id"), wordDigests().as("hw"))
-      .filter(size(col("hw")) >= WinnowK)
       .select(col("doc_id"), (size(col("hw")) - WinnowK + 1).as("npos"),
         posexplode(transform(sequence(lit(0), size(col("hw")) - WinnowK),
           i => gram(col("hw"), i, WinnowK))))

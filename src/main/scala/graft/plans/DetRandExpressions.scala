@@ -12,15 +12,16 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * argument twice, so one uniform draw held 16 copies of its key expression
   * and one Gaussian 32; a diffusion plan carried thousands of expression
   * nodes through analysis, optimization and codegen source generation. Here
-  * the draw is one node whose generated code is straight-line Java.
+  * the draw is one node, and both its interpreted and its generated path
+  * call this object's methods.
   *
   * The values are bit-identical to the composed tree (DetRandSpec compares
-  * raw bits under whole-stage codegen, without it, and interpreted): both
-  * the interpreted and the generated path replay its IEEE-754 operations in
-  * the same order, `fmod`'s floor goes through a long as Spark's `floor`
-  * does, and the transcendental calls are the ones Spark's own expressions
-  * make — `StrictMath.log` for `Log`, `Math.sqrt` and `Math.cos` for `Sqrt`
-  * and `Cos`. Swapping in `Math.log` changes low bits.
+  * raw bits under whole-stage codegen, without it, and interpreted): the
+  * methods replay its IEEE-754 operations in the same order, `fmod`'s floor
+  * goes through a long as Spark's `floor` does, and the transcendental calls
+  * are the ones Spark's own expressions make — `StrictMath.log` for `Log`,
+  * `Math.sqrt` and `Math.cos` for `Sqrt` and `Cos`. Swapping in `Math.log`
+  * changes low bits.
   */
 private[graft] object DetDraw {
   val M = 2147483648.0 // 2^31
@@ -38,31 +39,18 @@ private[graft] object DetDraw {
     (x + 0.5) / M
   }
 
-  /** Box–Muller over streams 2s and 2s+1; null where Spark's `log` is. */
-  def gauss(key: Double, stream: Int): Any = {
-    val u1 = u01(key, 2 * stream)
-    val u2 = u01(key, 2 * stream + 1)
-    if (u1 <= 0.0) null
-    else math.sqrt(-2.0 * StrictMath.log(u1)) * math.cos(TwoPi * u2)
-  }
+  /** Box–Muller over streams 2s and 2s+1. The draw is null where
+    * [[gaussIsNull]] holds (Spark's `log` is null there), and this value is
+    * meaningless. */
+  def gauss(key: Double, stream: Int): Double =
+    math.sqrt(-2.0 * StrictMath.log(u01(key, 2 * stream))) *
+      math.cos(TwoPi * u01(key, 2 * stream + 1))
 
-  def javaDouble(d: Double): String = s"${d}D"
+  /** Whether [[gauss]]'s first uniform is ≤ 0, where Spark's `log` is null. */
+  def gaussIsNull(key: Double, stream: Int): Boolean = u01(key, 2 * stream) <= 0.0
 
-  /** Java statements declaring `out` as [[u01]] of the double `key`: one
-    * statement per LCG round, each reducing mod 2^31 as [[fmod]] does. */
-  def u01Code(ctx: CodegenContext, key: String, stream: Int, out: String): String = {
-    val x = ctx.freshName("x")
-    val m = javaDouble(M)
-    def round(next: String): String = s"$x = $next; $x = $x - (double) (long) java.lang.Math.floor($x / $m) * $m;"
-    s"""
-       |double $x;
-       |${round(s"$key * 40503.0D + ${javaDouble(seedOffset(stream))} + 12345.0D")}
-       |${round(s"$x * ${javaDouble(seedMultiplier(stream))}")}
-       |${round(s"$x * 69069.0D + 12345.0D")}
-       |${round(s"$x * 69069.0D + 12345.0D")}
-       |double $out = ($x + 0.5D) / $m;
-     """.stripMargin
-  }
+  /** The class generated code calls these methods on. */
+  val ClassName: String = getClass.getName.stripSuffix("$")
 }
 
 /** A draw over a DOUBLE key; a mis-typed key fails analysis. Nullable like
@@ -82,40 +70,30 @@ case class DetU01(child: Expression, stream: Int) extends DetDrawExpression {
   override def nullSafeEval(key: Any): Any = DetDraw.u01(key.asInstanceOf[Double], stream)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, key => {
-      val u = ctx.freshName("u")
-      s"""
-         |${DetDraw.u01Code(ctx, key, stream, u)}
-         |${ev.value} = $u;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, key => s"${DetDraw.ClassName}.u01($key, $stream)")
 
   override protected def withNewChildInternal(newChild: Expression): DetU01 =
     copy(child = newChild)
 }
 
 /** Standard normal draw of a DOUBLE key (Box–Muller over streams 2s and
-  * 2s+1); null where Spark's `log` is. See [[DetDraw]]. */
+  * 2s+1); null where Spark's `log` is. See [[DetDraw]]. The generated code
+  * sets the null flag and the value without branching on the flag (the
+  * value is unused where the flag is set): without the branch,
+  * `diff_sample_iterative`'s 50 draws fit one method under HotSpot's
+  * 8,000-byte JIT limit (7,793 bytes; 8,143 with it). */
 case class DetGauss(child: Expression, stream: Int) extends DetDrawExpression {
   override def prettyName: String = "graft_det_gauss"
 
-  override def nullSafeEval(key: Any): Any = DetDraw.gauss(key.asInstanceOf[Double], stream)
+  override def nullSafeEval(key: Any): Any = {
+    val k = key.asInstanceOf[Double]
+    if (DetDraw.gaussIsNull(k, stream)) null else DetDraw.gauss(k, stream)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, key => {
-      val u1 = ctx.freshName("u1")
-      val u2 = ctx.freshName("u2")
-      s"""
-         |${DetDraw.u01Code(ctx, key, 2 * stream, u1)}
-         |${DetDraw.u01Code(ctx, key, 2 * stream + 1, u2)}
-         |if ($u1 <= 0.0D) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = java.lang.Math.sqrt(-2.0D * java.lang.StrictMath.log($u1))
-         |    * java.lang.Math.cos(${DetDraw.javaDouble(DetDraw.TwoPi)} * $u2);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, key =>
+      s"""${ev.isNull} = ${DetDraw.ClassName}.gaussIsNull($key, $stream);
+         |${ev.value} = ${DetDraw.ClassName}.gauss($key, $stream);""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): DetGauss =
     copy(child = newChild)

@@ -1,11 +1,13 @@
 package graft.plans
 
+import graft.plans.VectorFunctions.isFloatArray
+import graft.plans.VectorKernels.{ClassName => Kernels}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Native Catalyst expression for fused cosine similarity over two
   * ARRAY<DOUBLE> columns (SURVEY.md §7.3 escalation path (b): a custom
@@ -15,90 +17,37 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *
   * Accumulation order matches the sequential array fold the composed form
   * uses, so results are bit-compatible with the DuckDB oracle's formulation
-  * after Num.r6 rounding.
+  * after Num.r6 rounding. Every kernel in this file runs its
+  * [[VectorKernels]] method on both the interpreted and the generated path.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getDouble(i); val yv = y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"$Kernels.cosine($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
 /** Fused squared-L2 distance over two ARRAY<DOUBLE> columns — the k-means /
-  * IVF assignment kernel (single codegen'd loop).
+  * IVF assignment kernel.
   */
 case class L2SqDistance(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.l2Sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"$Kernels.l2Sq($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -109,44 +58,18 @@ case class L2SqDistance(left: Expression, right: Expression)
   * (floor(d²·1e6 + 0.5)) BEFORE accumulating, and the sum is carried as a
   * long — bit-identical to the `aggregate(zip_with(a, b, fx6), 0L, +)`
   * higher-order-function form it replaces (SqOps' asymmetric SQ8 scorer),
-  * but as one codegen'd loop with no per-element lambda dispatch or array
-  * allocation.
+  * but as one loop with no per-element lambda dispatch or array allocation.
   */
 case class L2SqFx6(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += math.floor(d * d * 1e6 + 0.5).toLong
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.l2SqFx6(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += (long) java.lang.Math.floor($d * $d * 1.0E6 + 0.5);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"$Kernels.l2SqFx6($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -155,9 +78,9 @@ case class L2SqFx6(left: Expression, right: Expression)
 /** Fused SQ8 quantize→dequantize kernel over a raw ARRAY<FLOAT> (or
   * ARRAY<DOUBLE>) embedding column: per element, code = clamp(⌊(x−mn_d)/Δ_d⌋,
   * 0, 255) and output mn_d + (code+½)·Δ_d — exactly the composed
-  * transform(codes(transform(cast)))) chain it replaces, but ONE codegen'd
-  * loop with the per-dimension stats as flat reference arrays. The chain it
-  * replaces was the stage-killer: higher-order `transform` lambdas are
+  * transform(codes(transform(cast)))) chain it replaces, but ONE loop with
+  * the per-dimension stats as flat reference arrays. The chain it replaces
+  * was the stage-killer: higher-order `transform` lambdas are
   * CodegenFallback, so their presence pushed the ENTIRE scoring stage —
   * including the downstream [[L2SqFx6]] Project — out of WholeStageCodegen
   * (SqSpec asserts the stage now codegens).
@@ -169,53 +92,15 @@ case class Sq8Deq(child: Expression, mn: Seq[Double], dl: Seq[Double])
 
   private lazy val mnArr: Array[Double] = mn.toArray
   private lazy val dlArr: Array[Double] = dl.toArray
-  private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
+  private lazy val isFloat: Boolean = isFloatArray(child)
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), mnArr.length)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      val m = mnArr(i); val s = dlArr(i)
-      val code = if (s == 0.0) 0L
-        else math.min(math.max(math.floor((x - m) / s).toLong, 0L), 255L)
-      out(i) = m + (code + 0.5) * s
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.sq8Deq(a.asInstanceOf[ArrayData], isFloat, mnArr, dlArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mnRef = ctx.addReferenceObj("mn", mnArr, "double[]")
     val dlRef = ctx.addReferenceObj("dl", dlArr, "double[]")
-    val get = if (isFloat) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val x = ctx.freshName("x")
-      val m = ctx.freshName("m")
-      val sv = ctx.freshName("sv")
-      val code = ctx.freshName("code")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $mnRef.length);
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = ${get.format(a, i)};
-         |  double $m = $mnRef[$i];
-         |  double $sv = $dlRef[$i];
-         |  long $code = ($sv == 0.0) ? 0L
-         |    : java.lang.Math.min(java.lang.Math.max((long) java.lang.Math.floor(($x - $m) / $sv), 0L), 255L);
-         |  $out[$i] = $m + ($code + 0.5) * $sv;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"$Kernels.sq8Deq($a, $isFloat, $mnRef, $dlRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -231,9 +116,9 @@ case class Sq8Deq(child: Expression, mn: Seq[Double], dl: Seq[Double])
   * M·K separate literal-kernel trees in ONE projection — at 8×16 = 128
   * inlined loops Janino overflows the JVM's 64 KB method limit and the whole
   * stage falls back to interpreted eval. Here the codebook is a single flat
-  * reference object and the generated code is one compact triple loop that
-  * stays inside WholeStageCodegen — the shape that matters when the encode
-  * pass scans a 100-TB corpus.
+  * reference object and the generated code is one call that stays inside
+  * WholeStageCodegen — the shape that matters when the encode pass scans a
+  * 100-TB corpus.
   *
   * `entries` must be sorted by (m, c); every subspace must have ≥1 entry.
   */
@@ -247,57 +132,15 @@ case class PqCodes(child: Expression, subDim: Int, entries: Seq[(Int, Int, Seq[D
   @transient private lazy val weights: Array[Double] = entries.flatMap(_._3).toArray
   @transient private lazy val numSub: Int = entries.map(_._1).max + 1
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val out = new Array[Int](numSub)
-    val best = Array.fill(numSub)(Double.PositiveInfinity)
-    var e = 0
-    while (e < entryM.length) {
-      val m = entryM(e)
-      var acc = 0.0
-      var j = 0
-      while (j < subDim) {
-        val d = v.getDouble(m * subDim + j) - weights(e * subDim + j)
-        acc += d * d
-        j += 1
-      }
-      val r = math.floor(acc * 1e6 + 0.5) / 1e6
-      if (r < best(m)) { best(m) = r; out(m) = entryC(e) }
-      e += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.pqCodes(a.asInstanceOf[ArrayData], subDim, numSub, entryM, entryC, weights)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mRef = ctx.addReferenceObj("pqEntryM", entryM, "int[]")
     val cRef = ctx.addReferenceObj("pqEntryC", entryC, "int[]")
     val wRef = ctx.addReferenceObj("pqWeights", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      val best = ctx.freshName("best")
-      val e = ctx.freshName("e")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val r = ctx.freshName("r")
-      s"""
-         |int[] $out = new int[$numSub];
-         |double[] $best = new double[$numSub];
-         |java.util.Arrays.fill($best, Double.POSITIVE_INFINITY);
-         |for (int $e = 0; $e < $mRef.length; $e++) {
-         |  int $m = $mRef[$e];
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $subDim; $j++) {
-         |    double $d = $a.getDouble($m * $subDim + $j) - $wRef[$e * $subDim + $j];
-         |    $acc += $d * $d;
-         |  }
-         |  double $r = java.lang.Math.floor($acc * 1e6 + 0.5) / 1e6;
-         |  if ($r < $best[$m]) { $best[$m] = $r; $out[$m] = $cRef[$e]; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"$Kernels.pqCodes($a, $subDim, $numSub, $mRef, $cRef, $wRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -317,49 +160,13 @@ case class PqDists(child: Expression, subDim: Int, entries: Seq[(Int, Int, Seq[D
   @transient private lazy val entryM: Array[Int] = entries.map(_._1).toArray
   @transient private lazy val weights: Array[Double] = entries.flatMap(_._3).toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val out = new Array[Double](entryM.length)
-    var e = 0
-    while (e < entryM.length) {
-      val m = entryM(e)
-      var acc = 0.0
-      var j = 0
-      while (j < subDim) {
-        val d = v.getDouble(m * subDim + j) - weights(e * subDim + j)
-        acc += d * d
-        j += 1
-      }
-      out(e) = math.floor(acc * 1e6 + 0.5) / 1e6
-      e += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.pqDists(a.asInstanceOf[ArrayData], subDim, entryM, weights)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mRef = ctx.addReferenceObj("pqEntryM", entryM, "int[]")
     val wRef = ctx.addReferenceObj("pqWeights", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      val e = ctx.freshName("e")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |double[] $out = new double[$mRef.length];
-         |for (int $e = 0; $e < $mRef.length; $e++) {
-         |  int $m = $mRef[$e];
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $subDim; $j++) {
-         |    double $d = $a.getDouble($m * $subDim + $j) - $wRef[$e * $subDim + $j];
-         |    $acc += $d * $d;
-         |  }
-         |  $out[$e] = java.lang.Math.floor($acc * 1e6 + 0.5) / 1e6;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"$Kernels.pqDists($a, $subDim, $mRef, $wRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -379,7 +186,7 @@ case class PqDists(child: Expression, subDim: Int, entries: Seq[(Int, Int, Seq[D
   * dim `aggregate(zip_with(...))` trees would put Dim = 64 literal kernels in
   * one projection — 4× the count that already overflowed Janino's 64 KB limit
   * for [[PqCodes]]. Here the matrix is one flat reference object and the
-  * generated code is a compact double loop inside WholeStageCodegen. The
+  * generated code is one call inside WholeStageCodegen. The
   * integer-quantized accumulation makes the result independent of summation
   * order, so the DuckDB oracle's arbitrary-order SUM replays it exactly.
   */
@@ -392,42 +199,12 @@ case class MatVecFx(child: Expression, matrix: Seq[Seq[Double]])
   @transient private lazy val cols: Int = matrix.head.length
   @transient private lazy val weights: Array[Double] = matrix.flatten.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val out = new Array[Double](rows)
-    var i = 0
-    while (i < rows) {
-      var acc = 0L
-      var j = 0
-      while (j < cols) {
-        acc += math.floor(weights(i * cols + j) * v.getDouble(j) * 1e9 + 0.5).toLong
-        j += 1
-      }
-      out(i) = acc / 1e9
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.matVecFx(a.asInstanceOf[ArrayData], rows, cols, weights)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wRef = ctx.addReferenceObj("mvWeights", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      s"""
-         |double[] $out = new double[$rows];
-         |for (int $i = 0; $i < $rows; $i++) {
-         |  long $acc = 0L;
-         |  for (int $j = 0; $j < $cols; $j++) {
-         |    $acc += (long) java.lang.Math.floor($wRef[$i * $cols + $j] * $a.getDouble($j) * 1e9 + 0.5);
-         |  }
-         |  $out[$i] = $acc / 1e9;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"$Kernels.matVecFx($a, $rows, $cols, $wRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -440,7 +217,7 @@ case class MatVecFx(child: Expression, matrix: Seq[Seq[Double]])
   * CORRECT and codegen'd, but four 32-term trees per BQ plan cost seconds of
   * Catalyst analysis + Janino compilation per query build (measured: 6.1 s
   * plan build vs 3.2 s execution at sf0.01); the thresholds as one reference
-  * array compile to a compact loop instead. Same comparison semantics, so
+  * array compile to one call instead. Same comparison semantics, so
   * results are bit-identical (BqSpec asserts kernel == literal-fold).
   */
 case class BqPack(child: Expression, thresholds: Seq[Double], base: Int)
@@ -450,39 +227,14 @@ case class BqPack(child: Expression, thresholds: Seq[Double], base: Int)
 
   @transient private lazy val thrArr: Array[Double] = thresholds.toArray
   @transient private lazy val bits: Int = math.min(32, thrArr.length - base)
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
+  @transient private lazy val isFloat: Boolean = isFloatArray(child)
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    var acc = 0L
-    var j = 0
-    while (j < bits) {
-      val x = if (isFloat) v.getFloat(base + j).toDouble else v.getDouble(base + j)
-      if (x > thrArr(base + j)) acc |= (1L << j)
-      j += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.bqPack(a.asInstanceOf[ArrayData], isFloat, thrArr, base, bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val thrRef = ctx.addReferenceObj("bqThr", thrArr, "double[]")
-    val get = if (isFloat) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    nullSafeCodeGen(ctx, ev, a => {
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val x = ctx.freshName("x")
-      s"""
-         |long $acc = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  double $x = ${get.format(a, s"$base + $j")};
-         |  if ($x > $thrRef[$base + $j]) $acc |= (1L << $j);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"$Kernels.bqPack($a, $isFloat, $thrRef, $base, $bits)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -490,6 +242,11 @@ case class BqPack(child: Expression, thresholds: Seq[Double], base: Int)
 }
 
 object VectorFunctions {
+  private[plans] def isFloatArray(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
   /** Column wrapper: fused cosine similarity of two ARRAY<DOUBLE> columns. */
   def cosine_sim(a: Column, b: Column): Column =
     Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))

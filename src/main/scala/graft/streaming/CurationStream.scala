@@ -37,9 +37,7 @@ object CurationStream {
 
   /** Incremental file source over a fixture dir's documents.parquet. */
   def docsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    graft.Tables.stream(spark, dir, "documents", docsSchema)
 
   /** The per-doc gate + cross-batch exact-dedup pass, written against a plain
     * DataFrame so the same code plans as a batch query (the spec's oracle

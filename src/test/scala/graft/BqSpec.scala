@@ -1,15 +1,9 @@
 package graft
 
 import graft.operators.BqOps
-import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 class BqSpec extends SparkSpec {
-
-  private def allWscg(p: org.apache.spark.sql.execution.SparkPlan): Seq[WholeStageCodegenExec] =
-    p.collect { case w: WholeStageCodegenExec => w } ++
-      p.collect { case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q }
-        .flatMap(q => allWscg(q.plan))
 
   test("BQ encoding and Hamming scoring stay inside WholeStageCodegen") {
     // the encoder is a literal fold of comparisons and the scorer is
@@ -18,14 +12,11 @@ class BqSpec extends SparkSpec {
     // recover with a fused kernel, free here by construction)
     val df = BqOps.bqTopK(spark, sf)
     df.collect() // finalize THIS QueryExecution (count() builds a new one)
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val wscg = allWscg(plan)
+    val plan = df.queryExecution.executedPlan
+    val wscg = Codegen.stages(plan)
     assert(wscg.nonEmpty, plan.toString.take(2000))
     assert(wscg.exists(_.toString.contains("bit_count")), plan.toString.take(2000))
-    wscg.foreach(_.doCodeGen()) // no silent interpreted fallback
+    Codegen.compile(wscg) // no silent interpreted fallback
   }
 
   test("fused BqPack kernel encodes identically to the literal comparison fold") {

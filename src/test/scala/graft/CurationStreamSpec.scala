@@ -68,4 +68,21 @@ class CurationStreamSpec extends SparkSpec {
     assert(streamed.count() > 0)
     assert(keyed(streamed) == keyed(batch))
   }
+
+  test("a directory-shaped documents table streams the same rows as the single file") {
+    // what any engine write (and GenSf1) produces: documents.parquet as a
+    // directory of part files
+    val dir = java.nio.file.Files.createTempDirectory("graft-docs-dir")
+    try {
+      Tables.documents(spark, sf).repartition(3)
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      def rows(fixture: String): Set[(String, String, Long, Double)] =
+        CurationStream.streamCuratedIngest(spark, fixture).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+      val fromFile = rows(sf)
+      val fromDir = rows(dir.toString)
+      assert(fromFile.nonEmpty)
+      assert(fromDir == fromFile)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

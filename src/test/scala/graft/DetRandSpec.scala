@@ -3,7 +3,6 @@ package graft
 import graft.functions.DetRand
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 /** DetRand's fused draws ([[graft.plans.DetU01]], [[graft.plans.DetGauss]])
@@ -56,21 +55,6 @@ class DetRandSpec extends SparkSpec {
     (ints ++ fractional ++ nearLimit ++ pow31 ++ random).distinct
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private def allWscg(p: org.apache.spark.sql.execution.SparkPlan): Seq[WholeStageCodegenExec] =
-    p.collect { case w: WholeStageCodegenExec => w } ++
-      p.collect { case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q }
-        .flatMap(q => allWscg(q.plan))
-
   private val draws: Seq[(String, Int)] =
     U01Streams.map(("u01", _)) ++ GaussStreams.map(("gauss", _))
 
@@ -122,10 +106,10 @@ class DetRandSpec extends SparkSpec {
       // the fused nodes run inside generated stage code, not as a fallback
       val df = doubleKeys.select(DetRand.u01(col("k"), 3), DetRand.gauss(col("k"), 5))
       df.collect()
-      val wscg = allWscg(df.queryExecution.executedPlan)
+      val wscg = Codegen.stages(df.queryExecution.executedPlan)
       assert(wscg.exists(w => w.toString.contains("graft_det_gauss") && w.toString.contains("graft_det_u01")),
         df.queryExecution.executedPlan.toString)
-      wscg.foreach(_.doCodeGen())
+      Codegen.compile(wscg)
     }
   }
 

@@ -790,14 +790,12 @@ class PqSpec extends SparkSpec {
 
   test("PQ encode stays inside WholeStageCodegen (no Janino-overflow fallback)") {
     val plan = PqOps.codes(spark, sf).queryExecution.executedPlan
-    val wscg = plan.collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-    }
+    val wscg = Codegen.stages(plan)
     // the encode Generate must sit INSIDE a codegen stage, and that stage
-    // must actually compile (doCodeGen throws on Janino overflow)
+    // must actually compile
     assert(wscg.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])),
       plan.toString.take(2000))
-    wscg.foreach(_.doCodeGen())
+    Codegen.compile(wscg)
   }
 }
 

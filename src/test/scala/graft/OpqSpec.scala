@@ -67,11 +67,9 @@ class OpqSpec extends SparkSpec {
 
   test("rotation projection stays inside WholeStageCodegen and compiles") {
     val plan = OpqOps.rotated(spark, sf).queryExecution.executedPlan
-    val wscg = plan.collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-    }
+    val wscg = Codegen.stages(plan)
     assert(wscg.nonEmpty, plan.toString.take(2000))
-    wscg.foreach(_.doCodeGen())
+    Codegen.compile(wscg)
   }
 
   test("rotated-space ADC keeps the PQ shape invariants; pooled recall sane") {

@@ -17,4 +17,45 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the given session confs, then restores them. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+/** Whole-stage codegen checks for plan assertions. */
+object Codegen {
+  import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.catalyst.expressions.codegen.{ByteCodeStats, CodeGenerator}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Every codegen stage of an executed plan. Under AQE the stages sit
+    * inside `QueryStageExec` leaves, which a plain `collect` never enters;
+    * the plan is final only after `collect()` on the same DataFrame
+    * (`count()` builds a new QueryExecution). */
+  def stages(plan: SparkPlan): Seq[WholeStageCodegenExec] = plan match {
+    case a: AdaptiveSparkPlanExec => stages(a.executedPlan)
+    case p =>
+      p.collect { case w: WholeStageCodegenExec => w } ++
+        p.collect { case q: QueryStageExec => q }.flatMap(q => stages(q.plan))
+  }
+
+  /** Compiles each stage's generated source with Janino, as execution does.
+    * Throws on a compile error, and fails a stage whose largest method is
+    * over the huge-method limit: on either, execution would run the stage
+    * interpreted without saying so. */
+  def compile(stages: Seq[WholeStageCodegenExec]): Seq[ByteCodeStats] = stages.map { w =>
+    val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+    assert(stats.maxMethodCodeSize <= SQLConf.get.hugeMethodLimit,
+      s"${w.simpleString(200)}: a ${stats.maxMethodCodeSize}-byte method falls back to interpreted")
+    stats
+  }
 }

@@ -1,31 +1,19 @@
 package graft
 
 import graft.operators.{PqOps, SqOps}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 class SqSpec extends SparkSpec {
-
-  // WSCG nodes live INSIDE AQE's QueryStageExec leaves (LeafExecNode — a
-  // plain collect never descends into their `plan`), so gather recursively.
-  private def allWscg(p: org.apache.spark.sql.execution.SparkPlan): Seq[WholeStageCodegenExec] =
-    p.collect { case w: WholeStageCodegenExec => w } ++
-      p.collect { case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q }
-        .flatMap(q => allWscg(q.plan))
 
   test("SQ8 scoring runs the fused kernel inside WholeStageCodegen") {
     val df = SqOps.sq8TopK(spark, sf)
     // drive THIS QueryExecution (count() would build a new one and leave this
     // plan un-finalized, isFinalPlan=false, with no codegen inserted yet)
     df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val wscg = allWscg(plan)
-    assert(wscg.exists(_.toString.contains("l2sqfx6")), plan.toString.take(2000))
+    val wscg = Codegen.stages(df.queryExecution.executedPlan)
+    assert(wscg.exists(_.toString.contains("l2sqfx6")), df.queryExecution.executedPlan.toString.take(2000))
     // and every codegen stage actually compiles (no silent interpreted fallback)
-    wscg.foreach(_.doCodeGen())
+    Codegen.compile(wscg)
   }
 
   test("fused Sq8Deq equals the transform-chain dequantization it replaced") {
