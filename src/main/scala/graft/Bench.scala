@@ -84,19 +84,39 @@ object Bench {
     val loadStart = loadavg
     val gcStart = gcMillis
     val stealStart = stealTicks
+    // optional comma-separated query filter for local single-query iteration;
+    // the driver never sets it, so round benches always cover the registry
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // warm up codegen/IO paths so the first measured query doesn't absorb
     // session bring-up
     spark.range(1000000).selectExpr("sum(id)").collect()
+    // A shared artifact is built once, before any sweep, as an explicitly
+    // timed pseudo-query: otherwise whichever consumer ran first would absorb
+    // the build and every later one ride free. Timed OUTSIDE sweep() so a
+    // steal-retry keeps the real build time (an in-sweep line would read ~0
+    // whenever the retry fired, because the kept second sweep only sees a
+    // memo hit); one sample, not min-of-runs, for the same reason. The lines
+    // are appended to the selected sweep's results below, so the total still
+    // includes the builds. Skipped under SPARK_GRAFT_BENCH_ONLY (filtered
+    // local iteration shouldn't pay unconditional builds).
+    val artifactErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def artifact(name: String)(build: => Any): Option[(String, Double)] =
+      if (only.isEmpty) {
+        val t0 = System.nanoTime()
+        try build
+        catch { case e: Throwable => artifactErrors(name) = e.getClass.getSimpleName }
+        Some(name -> (System.nanoTime() - t0) / 1e9)
+      } else None
+    // The ten table-schema fits, timed before the warm-up read below, which
+    // would otherwise fit lineitem's schema
+    val schemaLine = artifact("tables__schema_artifact")(Tables.fitSchemas(spark, sfDir))
     Tables.lineitem(spark, sfDir).count()
     // a query that throws would otherwise time near-zero and FLATTER the
     // total: record the exception class per query so the JSON carries an
     // "errors" count and a failing total can't look healthy.
     // Correctness gating catches the breakage separately; this makes the perf
     // artifact self-auditing the way the steal/gc fields are.
-    // optional comma-separated query filter for local single-query iteration;
-    // the driver never sets it, so round benches always cover the registry
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Both samples of a query run back-to-back, so the second one runs warm
     // (JIT, parquet footer and file caches) and min-of-runs sees it. A host
     // stall that taxes both adjacent samples is bounded by the sweep-level
@@ -132,27 +152,9 @@ object Bench {
     // number while a genuinely busy host still terminates.
     val maxSteal = 5000L
     // The dedup shingle artifact (Dedup.docShingles: warehouse parquet +
-    // pinned localCheckpoint) is built once per session and shared by every
-    // dedup_* consumer, so whichever consumer ran first in pass order would
-    // absorb the build cost and every later one ride free. Building it HERE,
-    // before any sweep, as an explicitly timed pseudo-query makes each
-    // consumer's line measure its standalone marginal cost at any pass
-    // position, and the sharing is visible in the JSON instead of implicit.
-    // Timed OUTSIDE sweep() so a steal-retry keeps the real build time (an
-    // in-sweep line would read ~0 whenever the retry fired, because the kept
-    // second sweep only sees a memo hit); one sample, not min-of-runs, for
-    // the same reason. The line is appended to the selected
-    // sweep's results below, so the total still includes the build. Skipped
-    // under SPARK_GRAFT_BENCH_ONLY (filtered local iteration shouldn't pay
-    // an unconditional 2-3 s build).
-    var artifactErr: Option[String] = None
-    val artifactLine: Option[(String, Double)] =
-      if (only.isEmpty) {
-        val t0 = System.nanoTime()
-        try graft.operators.Dedup.docShingles(spark, sfDir)
-        catch { case e: Throwable => artifactErr = Some(e.getClass.getSimpleName) }
-        Some("dedup__shingle_artifact" -> (System.nanoTime() - t0) / 1e9)
-      } else None
+    // pinned localCheckpoint) is shared by every dedup_* consumer.
+    val shingleLine = artifact("dedup__shingle_artifact")(
+      graft.operators.Dedup.docShingles(spark, sfDir))
     var errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var digests = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var sweepSteal = stealTicks
@@ -170,9 +172,9 @@ object Bench {
         results = results2; errors = errors2; digests = digests2; sweepSteal = steal2
       }
     }
-    // the artifact build line rides whichever sweep was kept (see above)
-    artifactLine.foreach(l => results = results :+ l)
-    artifactErr.foreach(c => errors("dedup__shingle_artifact") = c)
+    // the artifact build lines ride whichever sweep was kept (see above)
+    results = results ++ schemaLine ++ shingleLine
+    errors ++= artifactErrors
     def ms(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
     val qs = results.map { case (k, v) => s"\"$k\":${ms(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum

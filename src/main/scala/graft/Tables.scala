@@ -1,16 +1,49 @@
 package graft
 
+import graft.sources.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Loaders for the driver test tables (/root/repo/FIXTURES.md §3). Reading through
-  * `spark.read.parquet` keeps filter pushdown + column pruning available to every
-  * downstream operator.
+/** Loaders for the driver test tables (FIXTURES.md §3) and graft's own
+  * parquet layouts. Reading through `spark.read.parquet` keeps filter
+  * pushdown and column pruning available to every downstream operator.
+  *
+  * Every table is opened by [[parquet]], which gives the reader a memoized
+  * schema. Inferring a parquet schema starts a Spark job that reads a
+  * footer, on every read; with the schema given, opening a table while a
+  * query is being built starts no job. `events` has a schema of its own.
   */
 object Tables {
+  /** Session confs whose values change what parquet schema inference
+    * returns; they are part of the schema's stamp. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** The parquet file or directory at `path`, read with the schema stored in
+    * `Artifacts.memo("table_schema", path, stamp)`. The stamp is the path's
+    * listing fingerprint plus the session's [[InferenceConfs]], so a
+    * rewritten or grown table, or a flipped conf, infers again. A miss
+    * returns the inferred frame itself and stores its schema; a hit starts
+    * no job.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val stamp = (Artifacts.listingFingerprint(spark, path) +:
+      InferenceConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString(";")
+    var inferred: Option[DataFrame] = None
+    val schema = Artifacts.memo("table_schema", path, stamp) {
+      val df = spark.read.parquet(path)
+      inferred = Some(df)
+      df.schema
+    }
+    inferred.getOrElse(spark.read.schema(schema).parquet(path))
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   /** events.parquet has shipped with `ts` as TIMESTAMP(NANOS) in some fixture
     * generations and TIMESTAMP(MICROS) in others. Spark 4's parquet reader
@@ -37,7 +70,7 @@ object Tables {
     * writers emit), or None when the footer carries NANOS (schema inference
     * throws and the raw-INT64 path applies). Probed once per dir. */
   private def nativeTsType(spark: SparkSession, dir: String): Option[DataType] =
-    graft.sources.Artifacts.memo("events_ts_type", dir) {
+    Artifacts.memo("events_ts_type", dir) {
       try {
         spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
           case t @ (TimestampType | TimestampNTZType) => Some(t)
@@ -91,6 +124,14 @@ object Tables {
         stream(spark, dir, "events", eventsRawSchema)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     }
+
+  /** Fits the schema of every fixture table: the nine read through [[t]]
+    * and the events `ts` unit probe. */
+  def fitSchemas(spark: SparkSession, dir: String): Unit = {
+    Seq("documents", "embeddings", "lineitem", "orders", "customer", "supplier", "part",
+      "nation", "region").foreach(t(spark, dir, _))
+    events(spark, dir)
+  }
 
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")

@@ -236,18 +236,23 @@ object CorpusQc {
     * training pipeline feeds the tokenizer after the shared headers/footers
     * are removed. Within-doc repeats of a kept digest survive in the keeper
     * doc by design (intra-doc repetition is `text_repetition`'s gate, not
-    * this one's). Scale: digests shuffle twice (stats + join-back), text
-    * never moves; the word arithmetic is per-doc integers.
+    * this one's).
+    *
+    * One min window over the digest decides each chunk: with
+    * [[ScrubMinDocs]] = 2, "the digest spans ≥ 2 docs and this is not its
+    * first doc" is exactly `doc_id > keeper`, since a doc_id above the
+    * digest's minimum is a second doc. The chunks are derived once, as in
+    * [[chunkDedup]], so every word is hashed once. Scale: digests shuffle
+    * once by digest and once by doc; text never moves.
     */
   def boilerplateScrub(spark: SparkSession, dir: String): DataFrame = {
-    val ch = chunks(spark, dir)
-    val stats = ch.groupBy("g")
-      .agg(countDistinct(col("doc_id")).as("n_docs"), min(col("doc_id")).as("keeper"))
-    val perDoc = ch.join(stats, "g")
+    require(ScrubMinDocs == 2, "the keeper window below encodes ScrubMinDocs = 2")
+    val keeper = min(col("doc_id")).over(Window.partitionBy("g"))
+    val perDoc = chunks(spark, dir)
+      .select(col("doc_id"), (col("doc_id") > keeper).as("dropped"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("n_docs") >= ScrubMinDocs && col("doc_id") > col("keeper"), 1L)
-          .otherwise(0L)).as("n_dropped"))
+        sum(when(col("dropped"), 1L).otherwise(0L)).as("n_dropped"))
     Tables.documents(spark, dir).select(col("doc_id"), size(words).cast("long").as("n_words"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_words"),

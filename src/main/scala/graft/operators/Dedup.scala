@@ -111,7 +111,7 @@ object Dedup {
     Artifacts.memo("layout", loc, dir)(
       shinglesOf(Tables.documents(spark, dir)).write.mode("overwrite").parquet(loc))
     Artifacts.memo("shingles", System.identityHashCode(spark).toString, dir) {
-      val df = spark.read.parquet(loc)
+      val df = Tables.parquet(spark, loc)
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
         .localCheckpoint(eager = true)
       val rdd = df.queryExecution.analyzed.collectFirst {
@@ -204,13 +204,10 @@ object Dedup {
 
   /** Contract: `sh` must already be materialized (the [[docShingles]] memo
     * frame, or a caller-side checkpoint) — it is referenced four times
-    * (bands, intersection twice, sizes). This method used to defensively
-    * `localCheckpoint` its input, which duplicated the memoized shingle
-    * frame per query: at sf100 the second ~400 M-row copy no longer fits in
-    * storage memory next to the first and the spill made the re-checkpoint
-    * alone 144 s of the 164 s query (51× for 10× docs — the r10 `weak`
-    * docs_curation_report decade ratio lived entirely in this line; every
-    * other phase of the chain scaled 5-6×).
+    * (bands, intersection twice, sizes). It is not checkpointed again here:
+    * a second copy of the memoized shingle frame per query does not fit in
+    * storage memory next to the first at sf100 (~400 M rows), and its spill
+    * made the re-checkpoint alone 144 s of a 164 s `docs_curation_report`.
     */
   private[graft] def minhashPairsOf(sh: DataFrame): DataFrame =
     withJaccard(sh, minhashCandidatesOf(sh))
@@ -361,10 +358,10 @@ object Dedup {
     */
   val HammingMax = 3
 
-  /** Fingerprint width. The r8 16-bit demo form gave each block 4 bits = 16
-    * bucket values, so buckets held n/16 docs and candidates went quadratic —
-    * the sf10 rehearsal (500k docs) measured the detector at a disk-filling
-    * >70 GB candidate shuffle. 60 bits (md5's first 15 hex chars — the widest
+  /** Fingerprint width. A 16-bit fingerprint gives each block 4 bits = 16
+    * bucket values, so buckets hold n/16 docs and candidates go quadratic —
+    * at sf10 (500k docs) that form filled the disk with a >70 GB candidate
+    * shuffle. 60 bits (md5's first 15 hex chars — the widest
     * value that stays inside a SIGNED 64-bit long in both engines) gives
     * 15-bit blocks = 32,768 values, the Manku et al. (WWW'07) production
     * shape; expected bucket stays ≤ ~n/32768 and candidates linear into the
@@ -405,11 +402,12 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
-      // multi-block matches dedup via distinct: the r8 emit-on-first-block
-      // map-side filter assumed every matching block PRODUCES the candidate,
-      // which the bucket cap above breaks (a pair whose earlier matching
-      // block was capped away would be dropped entirely). The candidate set
-      // is bucket-capped now, so the distinct shuffle is bounded.
+      // multi-block matches dedup via distinct, not an emit-on-first-block
+      // map-side filter: that filter assumes every matching block PRODUCES
+      // the candidate, which the bucket cap above breaks (a pair whose
+      // earlier matching block was capped away would be dropped entirely).
+      // The candidate set is bucket-capped, so the distinct shuffle is
+      // bounded.
       .distinct()
     cand
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))

@@ -479,8 +479,8 @@ object EvalOps {
     * means with clip counts so the transform is auditable. All arithmetic is
     * exact cents; thresholds are per-type literal-sized and broadcast back.
     * Ranks come from the block-parallel [[EventsOps.blockedRank]] over cent
-    * buckets (r10 — the per-type rank window this used before sorted a whole
-    * type in one task; PlanHygieneSpec bans that shape).
+    * buckets, so no task sorts a whole type (a per-type rank window would;
+    * PlanHygieneSpec bans that shape).
     */
   def winsorize(spark: SparkSession, dir: String): DataFrame = {
     def kOf(num: Int, den: Int) =
@@ -829,11 +829,10 @@ object EvalOps {
     */
   val UserSimBands = 3
   /** Ceiling on adaptive bits per band. 16 bits keeps the expected bucket at
-    * [[UserSimTargetBucket]] users up to ~2M users; the r8 ceiling of 8
-    * saturated at 8k users and the sf10 rehearsal (150k users) measured the
-    * saturated form at 128× cost for 100× data — every bucket held ~586
-    * users and candidates went quadratic again, the exact failure the
-    * adaptive nbits exists to prevent. The ceiling is a sandbox bound, not a
+    * [[UserSimTargetBucket]] users up to ~2M users. A ceiling of 8 saturates
+    * at 8k users: at sf10 (150k users) the saturated form cost 128× for 100×
+    * data — every bucket held ~586 users and candidates went quadratic
+    * again, the exact failure the adaptive nbits exists to prevent. The ceiling is a sandbox bound, not a
     * design constant: at larger corpora raise it with log2(users/32).
     */
   val UserSimMaxBits = 16
@@ -960,8 +959,8 @@ object EvalOps {
       .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "bkey")))
     // a bucket no bigger than W fits ONE cell of grid 0 whole, and grid 1's
     // pairs are then a subset — the half-offset grid and its extra explode
-    // rows are pure overhead there (the r9 +0.7 s at sf0.1, where EVERY
-    // bucket is ≤ W). Emitting the single cell produces the IDENTICAL
+    // rows are pure overhead there (+0.7 s at sf0.1, where EVERY bucket is
+    // ≤ W). Emitting the single cell produces the IDENTICAL
     // candidate set (the oracle keeps both grids: its grid-1 pairs dedup
     // away), so outputs are unchanged at every scale.
     val grids = when(col("bsz") <= W,

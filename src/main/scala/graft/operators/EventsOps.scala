@@ -106,7 +106,8 @@ object EventsOps {
     * `cumName` (exclusive prefix sum, long) and — when `totName` is set —
     * the per-key total of `value`. This is what keeps token-budget passes
     * (curriculum phases, mixture sampling, sequence packing) from sorting a
-    * whole vocabulary key's docs in one task (the r11 vocab-sweep catch).
+    * whole vocabulary key's docs in one task (PlanHygieneSpec's
+    * vocabulary-window sweep bans that shape).
     */
   private[graft] def blockedRankPrefix(df: DataFrame, key: String,
       orderCols: Seq[Column], bucket: Column, value: Column,
@@ -1042,8 +1043,8 @@ object EventsOps {
     * `emb_drift` (embedding SMD) and `docs_source_divergence` (lexical KL).
     * Mechanics: reference deciles come from a block-parallel [[blockedRank]]
     * over value buckets (exact integer rank formula ⌈i·n/10⌉ = (i·n+9) div
-    * 10, identical in both engines; r10 — the per-type rank window this used
-    * before sorted a whole cohort type in one task); the ≤9 boundary VALUES
+    * 10, identical in both engines), so no task sorts a whole cohort type,
+    * as a per-type rank window would; the ≤9 boundary VALUES
     * per type collapse to a sorted array and broadcast, so binning both
     * cohorts is one map-side array scan — no per-row join, no global sort;
     * the only shuffles are the bucket-local rank and the bins×types-bounded
@@ -1219,7 +1220,7 @@ object EventsOps {
     val counts = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
     // blockedRank, not a per-type row_number window: the rank recombines
     // from monotone VALUE buckets, so no task sorts a whole type (the same
-    // r10 pattern as `series`; with only `value` ordering, rank assignment
+    // pattern as `series`; with only `value` ordering, rank assignment
     // among ties is arbitrary in both engines and boundary extraction below
     // is tie-insensitive — min over equal values)
     val ranked = blockedRank(ev, "event_type", Seq(col("value")),

@@ -5,6 +5,7 @@ import graft.functions.Num._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** End-to-end pipeline parity with the reference's flagship entry point
   * (SURVEY.md §3.1: config → generate → split → noise → per-epoch losses →
@@ -127,7 +128,9 @@ object Pipeline {
       .withColumn("timesteps", lit(cfg.timesteps))
     val dir = s"/tmp/graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}"
     best.write.mode("overwrite").parquet(dir) // G13 sink
-    spark.read.parquet(dir)                   // G13 source
+    // G13 source, read with the writer's schema: the path is new on every
+    // call, so inferring it would start a job each time
+    spark.read.schema(Bridge.nullable(best.schema)).parquet(dir)
   }
 
   /** Custom-loss query through the registry (U3). */

@@ -804,10 +804,10 @@ object Relational {
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
     // repartition by order FIRST: hash(o) satisfies both the (o, p) dedup's
     // clustering and the self-join's requirement (subset rule), so the whole
-    // per-order pair generation runs off ONE 60 M-row exchange — the previous
-    // distinct-then-join shape shuffled the table by (o, p) and then again by
-    // o for the join (the r10 sf10 profile put 75 of pagerank's 110 s in the
-    // edge build; only the final 240 M-pair distinct is irreducible, since
+    // per-order pair generation runs off ONE 60 M-row exchange; a
+    // distinct-then-join shape shuffles the table by (o, p) and then again by
+    // o for the join (75 of pagerank's 110 s at sf10 were that edge build;
+    // only the final 240 M-pair distinct is irreducible, since
     // cross-order duplicate pairs must collapse exactly once for outdeg and
     // the per-edge contribution to match the distinct-edge oracle).
     val li = Tables.lineitem(spark, dir)
@@ -844,7 +844,7 @@ object Relational {
       // materialize each pass: the lazy chain references the previous ranks
       // TWICE (the contrib broadcast and the update join), so unmaterialized
       // iteration i re-executes iteration i−1's whole subplan ~2× — 2^iters
-      // edge joins by iteration 3 (the r9 sf10 bill: 72.6 s). A per-pass
+      // edge joins by iteration 3 (72.6 s at sf10). A per-pass
       // localCheckpoint makes each edge join run exactly once; values are
       // bit-identical, so the unrolled oracle is untouched. The LAST pass
       // stays lazy: its inputs are already checkpointed (nothing can

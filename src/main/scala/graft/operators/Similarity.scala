@@ -316,29 +316,26 @@ object Similarity {
     * still returns good neighbors at scale" is asserted, not quantified.
     *
     * Per-query hit flags roll up to one row per qid plus a grand-total row
-    * (qid = −1): recall = avg(hit), since brute force always emits exactly
-    * TopK rows per query. Left join keeps queries whose bucket returned fewer
-    * than TopK candidates honest (their misses count).
+    * (qid = −1): recall = avg(hit) over the brute-force pairs, since brute
+    * force always emits exactly TopK rows per query. A query whose buckets
+    * returned fewer than TopK candidates keeps all its brute-force pairs, so
+    * its misses count.
     */
   def recallOf(bf: DataFrame, approx: DataFrame): DataFrame = {
-    // set-intersection as UNION + groupBy rather than a join: both inputs
-    // derive from the same embeddings scan, and composing them trips Spark's
-    // ambiguous-self-join check — the union form has no join to disambiguate
-    // AND shuffles once on (qid, neighbor_id) instead of building a join hash
-    // table. Each leg is localCheckpoint'd (≤ TopK×NumQueries = 1,000 rows —
-    // trivial): that materializes the already-computed top-k lists and leaves
-    // no Join node in the composed tree for DetectAmbiguousSelfJoin to flag.
-    // Each side emits distinct pairs, so "pair present on side s" is a
-    // max-flag per group.
+    // Set intersection as a union and a groupBy on (qid, neighbor_id): one
+    // shuffle, no join hash table. Each side emits distinct pairs, so "pair
+    // present on side s" is a max-flag per group. Both legs derive from the
+    // same embeddings scan; the groupings use the Column overloads, because
+    // the String-name overloads tag their references with dataset ids that
+    // DetectAmbiguousSelfJoin flags. The legs (≤ TopK × NumQueries rows
+    // each) run as stages of this one plan, so building it starts no job.
     val tagged = bf.select(col("qid"), col("neighbor_id"), lit(1).as("src"))
-      .localCheckpoint(true)
-      .unionByName(approx.select(col("qid"), col("neighbor_id"), lit(2).as("src"))
-        .localCheckpoint(true))
-    val hits = tagged.groupBy("qid", "neighbor_id")
+      .unionByName(approx.select(col("qid"), col("neighbor_id"), lit(2).as("src")))
+    val hits = tagged.groupBy(col("qid"), col("neighbor_id"))
       .agg(max(when(col("src") === 1, 1).otherwise(0)).as("in_bf"),
         max(when(col("src") === 2, 1).otherwise(0)).as("hit"))
       .filter(col("in_bf") === 1)
-    hits.rollup("qid")
+    hits.rollup(col("qid"))
       .agg(r6(avg(col("hit"))).as("recall"),
         sum(col("hit")).cast("long").as("n_matched"),
         count(lit(1)).as("n"))

@@ -262,8 +262,8 @@ object TextOps {
     * mixing `approx_count_distinct` with `countDistinct` makes the distinct
     * rewrite hoist the HLL's PARTIAL aggregation to the (source, word)
     * grouping level, so the first exchange carries the full 1640-register
-    * HLL buffer PER DISTINCT WORD (~13 KB/row — the r12 before-plan's
-    * `Results [1642]` at Exchange (4); at corpus scale that is
+    * HLL buffer PER DISTINCT WORD (~13 KB/row: the mixed form's plan shows
+    * `Results [1642]` at its first Exchange; at corpus scale that is
     * |vocabulary| × 13 KB of shuffle). Instead ONE narrow (source, word) →
     * n_occ pre-aggregation (map-side partials collapse duplicate words
     * before anything moves, 3 long-ish columns per row) feeds both rungs:

@@ -12,10 +12,10 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Fused forward-rDFT aggregate: per input row (detr, t, n) it accumulates
-  * ALL `maxK` bins' fx9-quantized re/im terms into one 2·maxK long buffer —
-  * replacing the explode-join form that fanned every fact row out 64× through
-  * a BroadcastHashJoin before aggregating (the r10 sf10 profile: 21 of the
-  * DFT's 27 s were the 640 M-row join pipeline, the trig itself ~2 s).
+  * ALL `maxK` bins' fx9-quantized re/im terms into one 2·maxK long buffer.
+  * An explode-join form would fan every fact row out 64× through a
+  * BroadcastHashJoin before aggregating; at sf10 that join pipeline cost
+  * 21 of 27 s, against ~2 s for the trig itself.
   *
   * Bit parity with the composed form (and the DuckDB oracle twin) is exact:
   * every term replays the identical double tree the Catalyst expression

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one memo for everything graft fits or writes once per input and then
   * reuses across queries: the IVF quantizer, PQ/OPQ codebooks, the OPQ basis,
-  * SQ8/BQ statistics, bucket statistics, the events footer probe, the
-  * pre-organized layouts and the dedup shingle table.
+  * SQ8/BQ statistics, bucket statistics, table schemas, the events footer
+  * probe, the pre-organized layouts and the dedup shingle table.
   *
   * An entry is `kind/key` → (stamp, value). A call whose stamp differs from
   * the stored one rebuilds and replaces the entry, so a stamp that tracks the
@@ -54,17 +54,23 @@ object Artifacts {
     }
   }
 
-  /** Stamp for fits over `dir`'s embeddings: an MD5 over (path, length,
-    * mtime) of every part file of `embeddings.parquet`. It reads metadata
-    * only, and suffices because parquet parts are immutable once written: a
-    * rewrite shows up as new, renamed or re-lengthed parts. */
-  def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(path)
+  /** Stamp for the files at `path`: an MD5 over (path, length, mtime) of the
+    * file, or of every file under the directory, listed recursively so a
+    * partitioned layout's part files count. It reads metadata only, and
+    * suffices because parquet parts are immutable once written: a rewrite
+    * shows up as new, renamed or re-lengthed parts. A missing path stamps as
+    * an empty listing, so the caller's read reports it. */
+  def listingFingerprint(spark: SparkSession, path: String): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status loads each file's owner
+    // and permission, which the local file system forks a process for when
+    // libhadoop is absent
+    def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
     val parts =
-      if (st.isDirectory) fs.listStatus(path).toSeq.sortBy(_.getPath.toString)
-      else Seq(st)
+      try files(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => Nil }
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(s"n=${parts.size};".getBytes("UTF-8"))
     parts.foreach { s =>
@@ -72,4 +78,8 @@ object Artifacts {
     }
     md.digest().map("%02x".format(_)).mkString
   }
+
+  /** Stamp for fits over `dir`'s embeddings. */
+  def corpusFingerprint(spark: SparkSession, dir: String): String =
+    listingFingerprint(spark, s"$dir/embeddings.parquet")
 }

@@ -58,7 +58,7 @@ object Backfill {
 
   def backfilledDailyAgg(spark: SparkSession, dir: String): DataFrame = {
     ensure(spark, dir)
-    spark.read.parquet(location(spark).toString)
+    Tables.parquet(spark, location(spark).toString)
       .groupBy("event_date")
       .agg(count(lit(1)).as("n_events"),
         r6(sum(floor(col("value") * 1e6 + 0.5).cast("long")).cast("double") / 1e6).as("sum_value"))

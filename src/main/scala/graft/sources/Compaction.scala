@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * partitioned write. Every task holds ~target rows, so every output file
   * is bounded by the target band regardless of how hot a date is — a date
   * with 10× the target rows gets ~10 parallel tasks and ~10 right-sized
-  * files (the r6 one-task-per-date form made exactly that date a one-task
-  * straggler writing one multi-GB file). Range order keeps same-date rows
+  * files, where one task per date would make that date a straggler writing
+  * one multi-GB file. Range order keeps same-date rows
   * contiguous, so per-date file counts stay ~ceil(date_rows / target); a
   * chunk straddling a date boundary writes one smaller file on each side,
   * which only UNDERSHOOTS the band. Both layouts are write-once per
@@ -83,7 +83,7 @@ object Compaction {
 
   private def writeCompacted(spark: SparkSession): Unit = {
     val fragLoc = fragmentedLocation(spark).toString
-    compactTo(spark.read.parquet(fragLoc), compactedLocation(spark).toString,
+    compactTo(Tables.parquet(spark, fragLoc), compactedLocation(spark).toString,
       TargetFileRows, FileSizing.bytesAt(spark, fragLoc))
   }
 
@@ -96,7 +96,7 @@ object Compaction {
   def fileStats(spark: SparkSession, dir: String): DataFrame = {
     ensureLayouts(spark, dir)
     def statsOf(name: String, location: String): DataFrame =
-      spark.read.parquet(location)
+      Tables.parquet(spark, location)
         .select(col("event_date"), input_file_name().as("f"))
         .groupBy(col("event_date"))
         .agg(countDistinct(col("f")).as("n_files"), count(lit(1)).as("n_rows"))
@@ -111,7 +111,7 @@ object Compaction {
     * aggregate; `input_file_name()` can't sit inside one).
     */
   private[graft] def perFileRows(spark: SparkSession, location: String): DataFrame =
-    spark.read.parquet(location)
+    Tables.parquet(spark, location)
       .select(col("event_date"), input_file_name().as("f"))
       .groupBy("event_date", "f")
       .agg(count(lit(1)).as("n_rows"))
@@ -121,7 +121,7 @@ object Compaction {
     */
   def compactedDailyAgg(spark: SparkSession, dir: String): DataFrame = {
     ensureLayouts(spark, dir)
-    spark.read.parquet(compactedLocation(spark).toString)
+    Tables.parquet(spark, compactedLocation(spark).toString)
       .groupBy("event_date", "event_type")
       .agg(count(lit(1)).as("n_events"),
         r6(sum(floor(col("value") * 1e6 + 0.5).cast("long")).cast("double") / 1e6).as("sum_value"))

@@ -42,7 +42,7 @@ object Partitioned {
 
   /** The pruned read, exposed separately so the spec can inspect the plan. */
   def prunedRead(spark: SparkSession): DataFrame =
-    spark.read.parquet(location(spark).toString)
+    Tables.parquet(spark, location(spark).toString)
       .filter(col("event_date") >= lit(FromDate).cast("date") &&
         col("event_date") <= lit(ToDate).cast("date"))
 

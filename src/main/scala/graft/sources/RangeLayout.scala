@@ -46,7 +46,7 @@ object RangeLayout {
   /** Read-back with file provenance, for asserting the layout contract. */
   def fileStats(spark: SparkSession, dir: String): DataFrame = {
     ensureRangeSorted(spark, dir)
-    spark.read.parquet(location(spark).toString)
+    Tables.parquet(spark, location(spark).toString)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))

@@ -50,7 +50,10 @@ object SchemaEvolution {
   private def ensure(spark: SparkSession, dir: String): Unit =
     Artifacts.memo("layout", location(spark).toString, dir)(writeGenerations(spark, dir))
 
-  /** The merged read, exposed for the spec to assert the union schema. */
+  /** The merged read, exposed for the spec to assert the union schema. It
+    * infers on every call, and is the one layout read that does not go
+    * through `Tables.parquet`: merging the generations' footers into one
+    * schema is what the query demonstrates. */
   def mergedRead(spark: SparkSession): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(location(spark).toString)
 

@@ -19,14 +19,14 @@ import org.apache.spark.sql.functions._
   * own quantiles (one stats pass, boundaries folded into the key as plan
   * literals — the same constant-folding stance as the IVF centroids). That
   * is what production z-ordering does, and it is load-bearing twice over:
-  * (a) balance — a fixed grid (the r6 `user mod 16` / fixed-epoch-origin
+  * (a) balance — a fixed grid (a `user mod 16` / fixed-epoch-origin
   * form) silently collapses under skew, piling 90% of rows into a few key
   * cells, while rank buckets hold ~1/16 of the rows each under ANY
   * distribution; (b) monotonicity — `mod` ALIASES distant values into the
   * same bucket (user 3 and user 515 were indistinguishable to the key), so
   * file boxes in value space stay full-width and nothing skips. ZOrderSpec
   * measures exactly this on a deliberately skewed user distribution, with
-  * the r6 fixed-grid key kept as [[fixedGridKey]] for the comparison.
+  * the fixed-grid key [[fixedGridKey]] as the comparator.
   *
   * The z-key is pure layout: it never appears in results, and the registered
   * query's oracle recomputes the same aggregate from the RAW events table.
@@ -91,9 +91,9 @@ object ZOrder {
     * distinct-value count and was part of the sf1 write's super-linear bill.
     * Rank buckets with 2^Bits = 16 cells only need boundaries good to a
     * fraction of a 1/16 bucket; ε=0.002 keeps any boundary within ~3% of a
-    * bucket width (balance noise, invisible to skipping) and halves the GK
-    * sketch cost vs the r9 ε=0.001 (the stats pass measured 9.2 s of the
-    * 22 s sf10 write).
+    * bucket width (balance noise, invisible to skipping) and costs half the
+    * GK sketch of ε=0.001, whose stats pass took 9.2 s of a 22 s sf10
+    * write.
     */
   val ExactQuantileMaxRows = 200000L
   val StatsEpsilon = 0.002
@@ -160,8 +160,8 @@ object ZOrder {
   def ensureZOrdered(spark: SparkSession, dir: String): Unit =
     Artifacts.memo("layout", location(spark).toString, dir)(writeZOrdered(spark, dir))
 
-  /** The r6 FIXED-GRID key (user mod 16, 2-day bucket from a constant epoch
-    * origin) — kept only as ZOrderSpec's degenerate comparator: under a
+  /** A FIXED-GRID key (user mod 16, 2-day bucket from a constant epoch
+    * origin), ZOrderSpec's degenerate comparator: under a
     * skewed or shifted distribution `mod` aliases distant users into one
     * bucket and the constant origin wastes bucket range, so file boxes stay
     * near-full-width and the layout stops skipping. Not used by any layout.
@@ -177,7 +177,7 @@ object ZOrder {
   /** Per-file bounding boxes over BOTH predicate dimensions. */
   def fileStats(spark: SparkSession, dir: String): DataFrame = {
     ensureZOrdered(spark, dir)
-    spark.read.parquet(location(spark).toString)
+    Tables.parquet(spark, location(spark).toString)
       .select(input_file_name().as("file"), col("user_id"), col("ts"))
       .groupBy("file")
       .agg(count(lit(1)).as("n_rows"),
@@ -203,7 +203,7 @@ object ZOrder {
     */
   def zorderBoxAgg(spark: SparkSession, dir: String): DataFrame = {
     ensureZOrdered(spark, dir)
-    boxFilter(spark.read.parquet(location(spark).toString))
+    boxFilter(Tables.parquet(spark, location(spark).toString))
       .groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n_events"),
         r6(sum(floor(col("value") * 1e6 + 0.5).cast("long")).cast("double") / 1e6).as("sum_value"))

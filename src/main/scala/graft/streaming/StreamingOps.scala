@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.Num.{r6, sqlR6}
 
@@ -287,7 +288,7 @@ object StreamingOps {
     // the returned frame reads the final state lazily, so the directory
     // lives until the JVM exits; Spark's helper deletes it then
     val tmp = Bridge.tempDir("graft_mv").getAbsolutePath
-    val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val cur = new java.util.concurrent.atomic.AtomicReference[MvGeneration](null)
     withStreamWidth(spark, s"$dir/events.parquet") {
       val q = Tables.eventsStream(spark, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -301,7 +302,14 @@ object StreamingOps {
     // naming the cause rather than NPE-ing inside the parquet reader
     require(cur.get != null,
       s"streamMvMerge: the events stream under $dir produced no micro-batches")
-    graft.operators.EventsOps.mvFinish(spark.read.parquet(cur.get))
+    graft.operators.EventsOps.mvFinish(cur.get.read(spark))
+  }
+
+  /** A persisted MV state generation: its path and the schema it was written
+    * with. Every generation is a new write, so it is read back with that
+    * schema instead of inferring one (a job per read). */
+  private[graft] final case class MvGeneration(path: String, schema: StructType) {
+    def read(spark: SparkSession): DataFrame = spark.read.schema(schema).parquet(path)
   }
 
   /** One maintenance step: merge a micro-batch's partials into the persisted
@@ -309,18 +317,17 @@ object StreamingOps {
     * can drive it through MemoryStream batches. */
   private[graft] def mvMergeBatch(
       batch: DataFrame, id: Long, tmp: String,
-      cur: java.util.concurrent.atomic.AtomicReference[String]): Unit = {
+      cur: java.util.concurrent.atomic.AtomicReference[MvGeneration]): Unit = {
     val spark = batch.sparkSession
     val parts = graft.operators.EventsOps.mvPartials(batch)
     val merged = Option(cur.get) match {
       case Some(prev) =>
-        graft.operators.EventsOps.mvCombine(
-          spark.read.parquet(prev).unionByName(parts))
+        graft.operators.EventsOps.mvCombine(prev.read(spark).unionByName(parts))
       case None => graft.operators.EventsOps.mvCombine(parts)
     }
     val next = s"$tmp/state_${id % 2}"
     merged.write.mode("overwrite").parquet(next)
-    cur.set(next)
+    cur.set(MvGeneration(next, Bridge.nullable(merged.schema)))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Spark 4 removed the public Column(Expression) constructor; the supported
   * bridge (ExpressionUtils) is private[sql], so this shim lives under the sql
@@ -17,6 +18,11 @@ object Bridge {
   /** The live conf of the active SparkContext (`SparkContext.conf` is
     * private[spark]; `getConf` returns a copy). */
   def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
+
+  /** `schema` with every field, element and value nullable: the schema a
+    * parquet read of a frame with `schema` returns (`asNullable` is
+    * private[spark]). */
+  def nullable(schema: StructType): StructType = schema.asNullable
 
   /** A new directory under `java.io.tmpdir`, deleted when the JVM exits
     * (Spark's `Utils.createTempDir`, which is private[spark]). */

@@ -10,8 +10,6 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.{Dedup, Similarity}
 import graft.sources.{Artifacts, Pinned}
-import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -132,19 +130,6 @@ class ArtifactsSpec extends SparkSpec {
     df.select(col("doc_id").cast("long"), col("base").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
-  /** Jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get
-  }
-
   test("switching the shingle dir A → B → A serves each dir's rows and keeps one pinned frame") {
     val other = Files.createTempDirectory("graft-shingles").toString
     Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0)
@@ -154,7 +139,7 @@ class ArtifactsSpec extends SparkSpec {
         s"shingles of $dir")
     val pinned = spark.sparkContext.getPersistentRDDs.values.count(r => Pinned.contains(r.id))
     assert(pinned == 1)
-    assert(jobsDuring(Dedup.docShingles(spark, sf)) == 0)
+    assert(Jobs.during(spark)(Dedup.docShingles(spark, sf)).isEmpty)
   }
 
   test("no memo map outside Artifacts and Pinned") {

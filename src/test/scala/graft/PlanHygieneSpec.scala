@@ -266,4 +266,35 @@ class PlanHygieneSpec extends SparkSpec {
     }
     assert(bad.isEmpty, s"no TakeOrderedAndProject in: $bad")
   }
+
+  /** Building a query must not start a parquet schema-inference job once its
+    * tables have been opened: `Tables.parquet` gives every reader a memoized
+    * schema. Each query is built twice and only the second, warm build is
+    * counted. The allow-list names the reads that infer by design; a stale
+    * entry fails.
+    */
+  test("a warm build of every registered query starts no parquet schema-inference job") {
+    val inferring = Map(
+      "events_schema_evolution" -> "mergeSchema read: merging the generations' footers is the query")
+    val counts = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      fn(spark, sf)
+      name -> Jobs.during(spark)(fn(spark, sf)).count(Jobs.isSchemaInference)
+    }.filter(_._2 > 0)
+    val offenders = counts.filterNot(kv => inferring.contains(kv._1))
+    assert(offenders.isEmpty, "schema-inference jobs in warm builds: " +
+      offenders.map { case (name, n) => s"$name ($n)" }.mkString(", "))
+    val stale = inferring.keys.filterNot(counts.toMap.contains)
+    assert(stale.isEmpty, s"stale schema-inference allow-list entries: $stale")
+  }
+
+  /** `Similarity.recallOf` runs both top-k legs inside its own plan, so a
+    * recall query whose fits are memoized builds without starting a job. */
+  test("warm builds of the SQ8 and PQ ADC recall queries start no job") {
+    val busy = Seq("ann_sq8_recall", "ann_pq_adc_recall").flatMap { name =>
+      SparkEntry.queries(name)(spark, sf)
+      val jobs = Jobs.during(spark)(SparkEntry.queries(name)(spark, sf))
+      if (jobs.isEmpty) None else Some(s"$name: ${jobs.map(_.stageInfos.head.name).mkString(", ")}")
+    }
+    assert(busy.isEmpty, busy.mkString("; "))
+  }
 }

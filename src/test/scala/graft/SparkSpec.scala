@@ -59,3 +59,32 @@ object Codegen {
     stats
   }
 }
+
+/** The Spark jobs a piece of driver code starts. */
+object Jobs {
+  import java.util.concurrent.ConcurrentLinkedQueue
+  import scala.jdk.CollectionConverters._
+  import org.apache.spark.graftbridge.ListenerBus
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  /** Jobs started while `body` runs. */
+  def during(spark: SparkSession)(body: => Any): Seq[SparkListenerJobStart] = {
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  /** A parquet schema-inference job: `DataFrameReader.parquet` itself starts
+    * it (the top frame of its stage's call site), outside any SQL execution.
+    * A read's scan jobs start from an action, inside an execution. */
+  def isSchemaInference(job: SparkListenerJobStart): Boolean =
+    job.properties.getProperty("spark.sql.execution.id") == null &&
+      job.stageInfos.exists(_.details.linesIterator.nextOption()
+        .exists(_.contains("DataFrameReader.parquet(")))
+}

@@ -23,7 +23,7 @@ class StreamingSpec extends SparkSpec {
     val events = mkEvents
     val stream = MemoryStream[Ev]
     val tmp = java.nio.file.Files.createTempDirectory("graft_mv_spec_").toFile.getAbsolutePath
-    val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val cur = new java.util.concurrent.atomic.AtomicReference[StreamingOps.MvGeneration](null)
     val q = stream.toDF().writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         StreamingOps.mvMergeBatch(df, id, tmp, cur)
@@ -32,13 +32,13 @@ class StreamingSpec extends SparkSpec {
     stream.addData(chunks.head)
     q.processAllAvailable()
     // after batch 1 the state covers ONLY batch 1 rows
-    val mid = graft.operators.EventsOps.mvFinish(spark.read.parquet(cur.get))
+    val mid = graft.operators.EventsOps.mvFinish(cur.get.read(spark))
       .agg(sum("n_events")).collect().head.getLong(0)
     assert(mid == chunks.head.size)
     chunks.tail.foreach { c => stream.addData(c); q.processAllAvailable() }
     q.stop()
     // final state equals the flat one-shot rollup of all rows
-    val streamed = graft.operators.EventsOps.mvFinish(spark.read.parquet(cur.get))
+    val streamed = graft.operators.EventsOps.mvFinish(cur.get.read(spark))
       .collect().map(_.toSeq).toSet
     val flat = graft.operators.EventsOps.mvFinish(
       graft.operators.EventsOps.mvCombine(

@@ -102,6 +102,7 @@ class TextDigestSpec extends SparkSpec {
     // pushed below the projection and hash every word again
     assert(md5Nodes(SparkEntry.queries("docs_winnowing")(spark, sf)) == 1)
     assert(md5Nodes(SparkEntry.queries("docs_chunk_dedup")(spark, sf)) == 1)
+    assert(md5Nodes(SparkEntry.queries("docs_boilerplate_scrub")(spark, sf)) == 1)
     assert(md5Nodes(Dedup.shinglesOf(Tables.documents(spark, sf))) == 1)
     // the same gram with hw inlined reads md5 once per gram word
     val inlined = Tables.documents(spark, sf).select(
