@@ -114,13 +114,19 @@ object Dedup {
       val df = Tables.parquet(spark, loc)
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
         .localCheckpoint(eager = true)
-      val rdd = df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.getOrElse(df.rdd)
+      val rdd = checkpointedRdd(df)
       Pinned.pin(rdd.id)
       ShingleFrame(df, rdd)
     }.df
   }
+
+  /** The RDD an eager `localCheckpoint` persisted: the one under the
+    * returned frame's `LogicalRDD`. Unpersisting it releases exactly that
+    * frame's blocks. */
+  private def checkpointedRdd(cp: DataFrame): RDD[_] =
+    cp.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.getOrElse(cp.rdd)
 
   /** Non-distinct digest stream for the signature-only path: MIN-aggregation
     * is insensitive to duplicate shingles, so computing signatures from the
@@ -689,29 +695,25 @@ object Dedup {
     // base frames (pairs, edges) stay pinned for the whole propagation; every
     // per-round labels checkpoint is unpersisted as soon as its successor is
     // materialized, so at most two label snapshots hold blocks at a time
-    // instead of up to MaxClusterIters of them. Snapshot ownership is tracked
-    // by RDD id (Checkpoints.tracked) rather than a global persistent-set
-    // diff, so concurrent persists by unrelated code are never swept up.
-    var (labelsCp, labelIds) = graft.functions.Checkpoints.tracked(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
-    var labels = labelsCp
+    // instead of up to MaxClusterIters of them. Each snapshot releases only
+    // its own checkpointed RDD, never a persist made by unrelated code.
+    var labels = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("label", col("doc_id")).localCheckpoint(eager = true)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < MaxClusterIters) {
       val nbrMin = edges.join(labels, col("src") === col("doc_id"))
         .groupBy(col("dst")).agg(min(col("label")).as("nbr"))
         .withColumnRenamed("dst", "doc_id")
-      val (next, nextIds) = graft.functions.Checkpoints.tracked(
-        labels.join(nbrMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            (coalesce(col("nbr"), col("label")) < col("label")).as("chg")))
+      val next = labels.join(nbrMin, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
+          (coalesce(col("nbr"), col("label")) < col("label")).as("chg"))
+        .localCheckpoint(eager = true)
       changed = next.filter(col("chg")).count()
       // `next` is eagerly materialized above, so the superseded labels blocks
       // are no longer reachable by any future computation
-      graft.functions.Checkpoints.release(next, labelIds)
-      labelIds = nextIds
+      checkpointedRdd(labels).unpersist(blocking = false)
       labels = next.select("doc_id", "label")
       iter += 1
     }

@@ -1087,55 +1087,19 @@ object EvalOps {
 
   /** Recall of the blocked top-k against the exact brute force — the
     * measurement that makes the band/bit parameterization a
-    * number instead of an assertion, mirroring `ann_*_recall`. One row per
-    * sampled query user plus a grand-total row (user_id = −1); recall = hit
-    * fraction of the exact top-[[UserSimTopK]] list. The exact side is
-    * recomputed here restricted to the [[UserSimRecallMaxQ]]-user query
-    * sample (sf1 rehearsal: the unrestricted exact rung alone cost 10+
-    * minutes at 15 k users), in the same cnt-join formulation as the
-    * [[userSimilarity]] oracle.
+    * number instead of an assertion, mirroring `ann_*_recall`: it is
+    * [[Similarity.recallOf]] over [[userSimilarity]] (the exact rung, whose
+    * queries are already the [[UserSimRecallMaxQ]]-user sample) and
+    * [[userSimilarityBlocked]]. One row per sampled query user plus a
+    * grand-total row (user_id = −1); recall = hit fraction of the exact
+    * top-[[UserSimTopK]] list. `recallOf` keeps only the exact rung's pairs,
+    * so blocked pairs of users outside the sample drop out there.
     */
   def userSimilarityRecallQ(spark: SparkSession, dir: String): DataFrame = {
-    val cnt = Tables.events(spark, dir)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = true)
-    val qsel = cnt.select("user_id").distinct()
-      .withColumn("h", md5Bits(concat(lit("usq:"), col("user_id").cast("string"))))
-      .orderBy("h", "user_id").limit(UserSimRecallMaxQ)
-      .select("user_id").localCheckpoint(eager = true)
-    val dots = cnt.join(broadcast(qsel), Seq("user_id"))
-      .select(col("user_id").as("ua"), col("event_type"), col("n").as("na"))
-      .join(cnt.select(col("user_id").as("ub"), col("event_type"), col("n").as("nb")),
-        Seq("event_type"))
-      .filter(col("ua") =!= col("ub"))
-      .groupBy("ua", "ub").agg(sum(col("na") * col("nb")).as("dot"))
-    val norms = cnt.groupBy("user_id").agg(sum(col("n") * col("n")).as("nrm2"))
-      .localCheckpoint(eager = true)
-    val scored = dots
-      .join(norms.select(col("user_id").as("ua"), col("nrm2").as("n2a")), "ua")
-      .join(norms.select(col("user_id").as("ub"), col("nrm2").as("n2b")), "ub")
-      .withColumn("cos", r6(col("dot").cast("double") /
-        sqrt(col("n2a").cast("double") * col("n2b").cast("double"))))
-    val w = Window.partitionBy("ua").orderBy(desc("cos"), asc("ub"))
-    val bf = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= UserSimTopK)
-      .select(col("ua").as("user_id"), col("ub").as("similar_user"), lit(1).as("src"))
-      .localCheckpoint(eager = true)
-    val ap = userSimilarityBlocked(spark, dir)
-      .join(broadcast(qsel), Seq("user_id"))
-      .select(col("user_id"), col("similar_user"), lit(2).as("src"))
-      .localCheckpoint(eager = true)
-    val hits = bf.unionByName(ap)
-      .groupBy("user_id", "similar_user")
-      .agg(max(when(col("src") === 1, 1).otherwise(0)).as("in_bf"),
-        max(when(col("src") === 2, 1).otherwise(0)).as("hit"))
-      .filter(col("in_bf") === 1)
-    hits.rollup("user_id")
-      .agg(r6(avg(col("hit"))).as("recall"),
-        sum(col("hit")).cast("long").as("n_matched"),
-        count(lit(1)).as("n"))
-      .select(coalesce(col("user_id"), lit(-1L)).as("user_id"),
-        col("recall"), col("n_matched"), col("n"))
+    def pairs(df: DataFrame): DataFrame =
+      df.select(col("user_id").as("qid"), col("similar_user").as("neighbor_id"))
+    Similarity.recallOf(pairs(userSimilarity(spark, dir)), pairs(userSimilarityBlocked(spark, dir)))
+      .withColumnRenamed("qid", "user_id")
   }
 
   def userSimilarityRecallOracle: String =

@@ -86,9 +86,9 @@ object OpqOps {
 
   private def fittedOpq(spark: SparkSession, dir: String): Codebook =
     Artifacts.memo("opq_codebook", dir, Artifacts.corpusFingerprint(spark, dir)) {
-      val (e, ids) = graft.functions.Checkpoints.tracked(rotated(spark, dir))
+      val e = rotated(spark, dir).persist()
       try PqOps.lloydPq(e, M)
-      finally graft.functions.Checkpoints.release(e, ids, blocking = true)
+      finally e.unpersist(blocking = true)
     }
 
   /** ADC top-k in the rotated space — the stock PQ pipeline over the rotated

@@ -126,7 +126,9 @@ object Pipeline {
       .select(col("epoch").as("best_epoch"), col("loss").as("val_loss"))
       .withColumn("function_type", lit(cfg.function_type))
       .withColumn("timesteps", lit(cfg.timesteps))
-    val dir = s"/tmp/graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}"
+    // the returned frame reads the checkpoint lazily, so the directory lives
+    // until the JVM exits; Spark's helper deletes it then
+    val dir = Bridge.tempDir("graft_ckpt").getAbsolutePath
     best.write.mode("overwrite").parquet(dir) // G13 sink
     // G13 source, read with the writer's schema: the path is new on every
     // call, so inferring it would start a job each time

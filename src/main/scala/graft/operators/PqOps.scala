@@ -96,10 +96,9 @@ object PqOps {
     * subspace count, refit when the embeddings' listing changes. */
   private def fittedM(spark: SparkSession, dir: String, numSub: Int): Codebook =
     Artifacts.memo("pq_codebook", s"$dir#m=$numSub", Artifacts.corpusFingerprint(spark, dir)) {
-      val (e, ids) = graft.functions.Checkpoints.tracked(
-        Tables.vectors(spark, dir).select("vec_id", "v"))
+      val e = Tables.vectors(spark, dir).select("vec_id", "v").persist()
       try lloydPq(e, numSub)
-      finally graft.functions.Checkpoints.release(e, ids, blocking = true)
+      finally e.unpersist(blocking = true)
     }
 
   private def fitted(spark: SparkSession, dir: String): Codebook =

@@ -251,13 +251,12 @@ object Similarity {
   def kmeansCentroidsFlat(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cent = quantizerFor(spark, dir) {
-      // fit-only path: the checkpointed working set is released as soon as
-      // the centroid Seq is extracted, or every fit would leave its blocks
-      // pinned for the life of the process
-      val (e, ids) = graft.functions.Checkpoints.tracked(
-        Tables.vectors(spark, dir).select("vec_id", "v"))
+      // fit-only path: the cached working set is released as soon as the
+      // centroid Seq is extracted, or every fit would leave its blocks held
+      // for the life of the process
+      val e = Tables.vectors(spark, dir).select("vec_id", "v").persist()
       try lloydCentroids(e)
-      finally graft.functions.Checkpoints.release(e, ids, blocking = true)
+      finally e.unpersist(blocking = true)
     }
     cent.flatMap { case (c, ws) => ws.zipWithIndex.map { case (w, d) => (c, d, w) } }
       .toDF("c", "d", "w")
@@ -471,9 +470,6 @@ object Similarity {
   private[graft] def deflatedBasis(cov0: Array[Array[Double]], k: Int): EigenBasis = {
     val n = Dim
     val cov = Array.tabulate(n * n)(p => cov0(p / n)(p % n))
-    def fx9(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
-    def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    def r9d(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     def matVec(v: Array[Double]): Array[Double] =
       Array.tabulate(n) { d1 =>
         var acc = 0L; var d2 = 0
@@ -489,14 +485,14 @@ object Similarity {
       for (_ <- 1 to PcaIters) {
         val w = matVec(v)
         val nrm = math.max(math.sqrt(fxDot(w, w)), 1e-9)
-        v = w.map(x => r6d(x / nrm))
+        v = w.map(x => r6(x / nrm))
       }
       val lam = fxDot(v, matVec(v))
       values(p) = lam
       loadings(p) = v
       var i = 0
       while (i < n * n) {
-        cov(i) = r9d(cov(i) - lam * v(i / n) * v(i % n))
+        cov(i) = r(cov(i) - lam * v(i / n) * v(i % n), 9)
         i += 1
       }
     }
@@ -522,13 +518,12 @@ object Similarity {
   def pcaTop(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (mu, cov) = covarianceR6(spark, dir)
-    def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val top = deflatedBasis(cov, 1)
     val v = top.loadings(0)
     val lambda = top.values(0)
-    val trace = (0 until Dim).map(d => math.floor(cov(d)(d) * 1e9 + 0.5).toLong).sum.toDouble / 1e9
-    val ratio = r6d(lambda / trace)
-    (0 until Dim).map(d => (d, mu(d), v(d), r6d(lambda), ratio))
+    val trace = (0 until Dim).map(d => fx9(cov(d)(d))).sum.toDouble / 1e9
+    val ratio = r6(lambda / trace)
+    (0 until Dim).map(d => (d, mu(d), v(d), r6(lambda), ratio))
       .toDF("d", "mean", "loading", "eigenvalue", "explained_ratio")
   }
 
@@ -1063,16 +1058,14 @@ object Similarity {
     * the diversification stage retrieval pipelines run between ANN shortlist
     * and presentation: greedily pick [[MmrK]] of the top-[[MmrCandidates]]
     * candidates, each pick maximizing λ·rel(q,c) − (1−λ)·max_{s∈S} sim(c,s),
-    * so near-duplicate neighbors don't crowd the result page. The greedy
-    * loop is inherently sequential in k but tiny: it runs entirely on the
-    * (#queries × shortlist) candidate table and its pairwise-sim matrix,
-    * both localCheckpointed once — the corpus is touched only by the
-    * shortlist scan, which is the same broadcast-kernel pass as
-    * [[bruteForceTopK]]. Ordering determinism: rel and sim are r6-rounded
-    * before any comparison, the argmax key is the identical double
-    * expression in both engines, ties break (rel DESC, vid ASC).
+    * so near-duplicate neighbors don't crowd the result page. The corpus is
+    * touched only by the shortlist scan, the same broadcast-kernel pass as
+    * [[bruteForceTopK]]; the greedy then runs once per query over its
+    * ≤ [[MmrCandidates]] shortlist rows in one `groupByKey(qid)` pass
+    * ([[mmrGreedy]]), so building the query starts no job.
     */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val e = Tables.vectors(spark, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1080,39 +1073,51 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("rel", r6(cosine_sim(col("qv"), col("v"))))
     val wq = Window.partitionBy("qid").orderBy(desc("rel"), asc("vec_id"))
-    val cands = scored.withColumn("rn", row_number().over(wq))
+    scored.withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= MmrCandidates)
       .select(col("qid"), col("vec_id").as("vid"), col("rel"), col("v"))
-      .localCheckpoint(true) // #queries × shortlist rows; looped over below
-    val sims = cands.select(col("qid"), col("vid").as("v1"), col("v").as("va"))
-      .join(cands.select(col("qid"), col("vid").as("v2"), col("v").as("vb")), "qid")
-      .filter(col("v1") =!= col("v2"))
-      .select(col("qid"), col("v1"), col("v2"), r6(cosine_sim(col("va"), col("vb"))).as("sim"))
-      .localCheckpoint(true) // #queries × shortlist² pairwise sims
-      .toDF("sqid", "v1", "v2", "sim") // fresh attribute ids: joined against its own lineage below
-    val flat = cands.drop("v")
-    var chosen = flat.withColumn("rn", row_number().over(wq.orderBy(desc("rel"), asc("vid"))))
-      .filter(col("rn") === 1).drop("rn")
-      .select(col("qid"), col("vid"), col("rel"), lit(0.0).as("maxsim"), lit(1).as("pick_order"))
-    for (k <- 2 to MmrK) {
-      val remaining = flat.join(chosen.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-      val chosenV = chosen.select(col("qid").as("cqid"), col("vid").as("cvid"))
-      val scoredK = remaining
-        .join(sims, remaining("qid") === sims("sqid") && remaining("vid") === sims("v1"))
-        .join(chosenV, sims("sqid") === col("cqid") && sims("v2") === col("cvid"))
-        .groupBy(remaining("qid"), remaining("vid"), remaining("rel"))
-        .agg(max(col("sim")).as("maxsim"))
-      val wk = Window.partitionBy("qid").orderBy(
-        (lit(MmrLambda) * col("rel") - lit(MmrGamma) * col("maxsim")).desc,
-        col("rel").desc, col("vid").asc)
-      val pick = scoredK.withColumn("rn", row_number().over(wk))
-        .filter(col("rn") === 1).drop("rn")
-        .withColumn("pick_order", lit(k))
-      chosen = chosen.unionByName(pick).localCheckpoint(true)
+      .as[MmrCandidate]
+      .groupByKey(_.qid)
+      .flatMapGroups((_, rows) => mmrGreedy(rows.toIndexedSeq))
+      .toDF()
+  }
+
+  /** One shortlist row of [[mmrRerank]], and one pick. */
+  final case class MmrCandidate(qid: Long, vid: Long, rel: Double, v: Array[Double])
+  final case class MmrPick(qid: Long, pick_order: Int, neighbor_id: Long,
+      rel: Double, maxsim: Double, mmr: Double)
+
+  /** The greedy picks of one query's shortlist, in pick order. Each pick
+    * maximizes the key (λ·rel − γ·maxsim desc, rel desc, vid asc), maxsim
+    * being the largest r6 cosine to an earlier pick (0.0 for the first).
+    * sim is [[graft.plans.VectorKernels.cosine]], the kernel `cosine_sim`
+    * runs, then the scalar r6, so every double equals the value the Column
+    * forms give. Doubles compare as Spark's sort compares them
+    * (`SQLOrderingUtil.compareDoubles`: -0.0 equals 0.0, NaN above every
+    * number), so the picks are those a Spark window over the same key makes.
+    */
+  private[graft] def mmrGreedy(shortlist: IndexedSeq[MmrCandidate]): Seq[MmrPick] = {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    val vs = shortlist.map(c => ArrayData.toArrayData(c.v))
+    val maxsim = Array.fill(shortlist.size)(0.0)
+    def key(i: Int): Double = MmrLambda * shortlist(i).rel - MmrGamma * maxsim(i)
+    def before(i: Int, j: Int): Boolean = {
+      val byKey = SQLOrderingUtil.compareDoubles(key(i), key(j))
+      val byRel = SQLOrderingUtil.compareDoubles(shortlist(i).rel, shortlist(j).rel)
+      byKey > 0 || byKey == 0 && (byRel > 0 || byRel == 0 && shortlist(i).vid < shortlist(j).vid)
     }
-    chosen.select(col("qid"), col("pick_order"), col("vid").as("neighbor_id"),
-      col("rel"), col("maxsim"),
-      r6(lit(MmrLambda) * col("rel") - lit(MmrGamma) * col("maxsim")).as("mmr"))
+    var left = shortlist.indices.toVector
+    (1 to math.min(MmrK, shortlist.size)).map { k =>
+      val p = left.reduce((i, j) => if (before(j, i)) j else i)
+      val c = shortlist(p)
+      val pick = MmrPick(c.qid, k, c.vid, c.rel, maxsim(p), r6(key(p)))
+      left = left.filter(_ != p)
+      left.foreach { i =>
+        val sim = r6(graft.plans.VectorKernels.cosine(vs(i), vs(p)))
+        if (k == 1 || SQLOrderingUtil.compareDoubles(sim, maxsim(i)) > 0) maxsim(i) = sim
+      }
+      pick
+    }
   }
 
   def mmrRerankOracle: String = {

@@ -56,7 +56,7 @@ object TypedOps {
         n += 1L
         endUs = e.ts_us
         // exact money-sum pattern: per-row micros as BIGINT (Relational.exactSum)
-        micros += math.floor(e.value * 1e6 + 0.5).toLong
+        micros += fx(e.value, 6)
         prevUs = e.ts_us
       }
       flush()

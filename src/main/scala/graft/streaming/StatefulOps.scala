@@ -69,14 +69,14 @@ object StatefulOps {
         case Some(s) if s.n > 0 &&
             (e.ts_us.toDouble / 1e6 - s.last_us.toDouble / 1e6) / 60.0 <= GapMinutes =>
           open = Some(s.copy(n = s.n + 1, last_us = e.ts_us,
-            value_micros = s.value_micros + math.floor(e.value * 1e6 + 0.5).toLong))
+            value_micros = s.value_micros + fx(e.value, 6)))
         case _ =>
           open.filter(_.n > 0).foreach { s =>
             out :+= ClosedSession(uid, s.session_seq, s.n, s.start_us, s.last_us, s.value_micros)
           }
           val seq = open.map(_.session_seq + 1).getOrElse(1L)
           open = Some(OpenSession(seq, 1L, e.ts_us, e.ts_us,
-            math.floor(e.value * 1e6 + 0.5).toLong))
+            fx(e.value, 6)))
       }
     }
     (out, open)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Num
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -34,7 +35,7 @@ class RunningStatsProcessor extends StatefulProcessor[Long, WmEvent, UserRunning
     var micros = prev.value_micros
     rows.foreach { e =>
       n += 1L
-      micros += math.floor(e.value * 1e6 + 0.5).toLong // exact money-sum pattern
+      micros += Num.fx(e.value, 6) // exact money-sum pattern
     }
     agg.update(RunningAgg(n, micros))
     Iterator.single(UserRunning(user, n, micros))

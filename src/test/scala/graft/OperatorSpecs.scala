@@ -368,6 +368,32 @@ class SimilaritySpec extends SparkSpec {
     assert(math.abs(grand.head.getAs[Double]("recall") - totMatched.toDouble / totN) < 1e-6)
     r.unpersist()
   }
+
+  test("MMR greedy breaks ties by (score desc, rel desc, vid asc), with -0.0 equal to 0.0") {
+    import Similarity.{MmrCandidate, MmrPick}
+    // 2-d vectors whose cosines are exact: p·(3,4) = 0.6, p·(-4,3) = -0.8,
+    // (3,4)·(-4,3) = 0, (-1,0)·(-4,3) = 0.8, (-1,0)·(3,4) = -0.6
+    val p = Array(1.0, 0.0)
+    def c(vid: Long, rel: Double, v: Array[Double]) = MmrCandidate(0L, vid, rel, v)
+    val shortlist = Vector(
+      c(4, 0.0, Array(-1.0, 0.0)), c(7, 0.85, Array(3.0, 4.0)), c(8, 0.9, p),
+      c(1, 0.25, Array(-4.0, 3.0)), c(3, -0.0, Array(-1.0, 0.0)), c(2, 0.9, p))
+    val expected = Seq(
+      // 2 and 8 tie on score 0.7·0.9 and on rel: the lower vid first
+      MmrPick(0L, 1, 2, 0.9, 0.0, 0.63),
+      // 7 (0.7·0.85 − 0.3·0.6) and 1 (0.7·0.25 − 0.3·(−0.8)) both score 0.415:
+      // the higher rel wins over the lower vid
+      MmrPick(0L, 2, 7, 0.85, 0.6, 0.415),
+      MmrPick(0L, 3, 8, 0.9, 1.0, 0.33),
+      // 3 (rel -0.0) and 4 (rel 0.0) share a vector, so both score 0.18 and
+      // their rels compare equal: the lower vid, 3, comes first
+      MmrPick(0L, 4, 3, -0.0, -0.6, 0.18),
+      // 4 now has maxsim 1.0 (score -0.3); 1 has maxsim 0.8 (score -0.065)
+      MmrPick(0L, 5, 1, 0.25, 0.8, -0.065))
+    val picks = Similarity.mmrGreedy(shortlist)
+    assert(picks == expected)
+    assert(picks.map(_.neighbor_id) == Seq(2L, 7L, 8L, 3L, 1L))
+  }
 }
 
 class AggregateSpec extends SparkSpec {

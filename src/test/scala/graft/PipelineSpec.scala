@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Generators, Pipeline}
+import org.apache.spark.graftbridge.ShutdownDeletes
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -38,5 +39,16 @@ class PipelineSpec extends SparkSpec {
     val best = Pipeline.bestCheckpointRoundtrip(spark).collect()(0)
     val bestEpoch = best.getInt(0)
     assert(metrics(bestEpoch) == metrics.values.min)
+  }
+
+  test("G13: the checkpoint is written under a directory deleted when the JVM exits") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stray(): Set[String] = tmp.list().toSet.filter(_.startsWith("graft_ckpt_"))
+    val before = stray()
+    val files = Pipeline.bestCheckpointRoundtrip(spark).inputFiles
+    assert(stray() -- before == Set.empty)
+    val dirs = files.map(f => new java.io.File(new java.net.URI(f)).getParentFile).distinct
+    assert(dirs.length == 1)
+    assert(ShutdownDeletes.registered(dirs.head.getCanonicalFile))
   }
 }

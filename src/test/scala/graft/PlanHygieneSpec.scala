@@ -287,14 +287,29 @@ class PlanHygieneSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale schema-inference allow-list entries: $stale")
   }
 
+  /** The jobs a warm build of the registered query `name` starts. */
+  private def warmBuildJobs(name: String) = {
+    SparkEntry.queries(name)(spark, sf)
+    Jobs.during(spark)(SparkEntry.queries(name)(spark, sf))
+  }
+
   /** `Similarity.recallOf` runs both top-k legs inside its own plan, so a
-    * recall query whose fits are memoized builds without starting a job. */
-  test("warm builds of the SQ8 and PQ ADC recall queries start no job") {
-    val busy = Seq("ann_sq8_recall", "ann_pq_adc_recall").flatMap { name =>
-      SparkEntry.queries(name)(spark, sf)
-      val jobs = Jobs.during(spark)(SparkEntry.queries(name)(spark, sf))
+    * recall query whose fits are memoized builds without starting a job; the
+    * MMR greedy runs per query inside the plan too. */
+  test("warm builds of the SQ8 and PQ ADC recall and MMR rerank queries start no job") {
+    val busy = Seq("ann_sq8_recall", "ann_pq_adc_recall", "ann_mmr_rerank").flatMap { name =>
+      val jobs = warmBuildJobs(name)
       if (jobs.isEmpty) None else Some(s"$name: ${jobs.map(_.stageInfos.head.name).mkString(", ")}")
     }
     assert(busy.isEmpty, busy.mkString("; "))
+  }
+
+  /** The user-similarity recall is `recallOf` over the two operators it
+    * measures, so building it costs no more than building both of them. */
+  test("a warm user-similarity recall build starts no more jobs than its two legs") {
+    val legs = Seq("events_user_similarity", "events_user_similarity_blocked")
+      .map(warmBuildJobs(_).size).sum
+    val recall = warmBuildJobs("events_user_similarity_recall").size
+    assert(recall <= legs, s"recall build: $recall jobs, its legs' builds: $legs")
   }
 }
